@@ -1,24 +1,15 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Dev tool: dump `.explain("formatted")` for named registry queries to
   * files — the before/after plan evidence for optimization rounds
-  * (plans/rNN/<query>_{before,after}.txt). Not part of the driver
+  * (plans/<pr>/<query>_{before,after}.txt). Not part of the driver
   * contract. Args: <sfDir> <outDir> <suffix> <query,query,...>. */
 object PlanDump {
   def main(args: Array[String]): Unit = {
     require(args.length == 4,
       "usage: PlanDump <sfDir> <outDir> <suffix> <q1,q2,...>")
     val Array(sfDir, outDir, suffix, qlist) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession.local()
     val names = qlist.split(",").map(_.trim).filter(_.nonEmpty)
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
     // SPARK_GRAFT_PLANDUMP_EXEC=1: run the query through the noop sink
@@ -34,8 +25,13 @@ object PlanDump {
       // printed plan would stay isFinalPlan=false. Registry results are
       // driver-small by contract.
       if (exec) { df.collect(): Unit }
+      // expression ids (#123, #123L) become #N and exchange ids
+      // (plan_id=123) plan_id=N: both count up across the session, so
+      // without this two dumps of the same plan never diff clean
       val txt = df.queryExecution.explainString(
-        org.apache.spark.sql.execution.FormattedMode)
+          org.apache.spark.sql.execution.FormattedMode)
+        .replaceAll("#\\d+L?\\b", "#N")
+        .replaceAll("plan_id=\\d+", "plan_id=N")
       java.nio.file.Files.write(
         java.nio.file.Paths.get(outDir, s"${n}_$suffix.txt"),
         txt.getBytes(java.nio.charset.StandardCharsets.UTF_8))

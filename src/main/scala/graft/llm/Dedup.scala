@@ -40,14 +40,6 @@ object Dedup {
       .agg(F.min(F.col(idCol)).as("keep_id"), F.count(F.lit(1)).as("n_dupes"))
   }
 
-  /** Word k-shingles of the token sequence. */
-  def shingles(text: Column, k: Int): Column = {
-    val toks = F.split(text, " ")
-    F.array_distinct(
-      F.transform(F.sequence(F.lit(0), F.greatest(F.size(toks) - k, F.lit(0))),
-        i => F.array_join(F.slice(toks, i + 1, F.lit(k)), " ")))
-  }
-
   /** Sorted distinct 64-bit shingle fingerprints, one codegen'd kernel call
     * per row (`graft.Kernels.hashedShingles`): tokens hashed once, k-grams
     * fingerprinted by hash chaining — no shingle strings are ever built.
@@ -919,19 +911,6 @@ object Dedup {
   }
 
   /**
-   * Apply [[duplicateSpans]]: rebuild each document's text with every
-   * duplicated span's tokens removed — the ExactSubstr removal policy
-   * (all copies go; "keep one representative" is [[dedupByClusters]]'s
-   * whole-doc policy, not a span policy). Documents without spans pass
-   * through unchanged; a fully-covered document becomes the empty string
-   * (never a dropped row).
-   *
-   * Shape at 100 TB: one hash join of the corpus against the per-doc span
-   * lists (spans are a tiny fraction of the corpus; AQE broadcasts when
-   * small), then a pure codegen'd token filter — spans per doc are few,
-   * so the per-token `exists` probe is O(spans) on a local array.
-   */
-  /**
    * EXACT-substring duplicated-span detection at CHARACTER granularity —
    * the verified tier beside the fingerprint-approximate, token-level
    * [[duplicateSpans]] (documented contract differences: characters vs
@@ -955,18 +934,15 @@ object Dedup {
    * rolling hashes from ONE kernel call per row — the posexplode carries
    * O(codepoints) (hash, pos) rows, the tier's documented contract-linear
    * cost, analogous to the token-explode rows ([[duplicateSpans]],
-   * doc_entropy). The ≥2-site prefilter is a SINGLE group-by-hash that
-   * carries the sites themselves (`collect_list(struct(id, pos))`,
-   * filter `size ≥ 2`, explode back): one kernel evaluation and one
-   * occurrence-row shuffle, where the r15 count-then-semi-join form
-   * evaluated the kernel over every codepoint TWICE (once under the
-   * count aggregate, once as the probe side) and paid a second
-   * occurrence-sized exchange for the join. Per-hash list state is
-   * bounded by that window content's true duplication count — mostly 2.
-   * The content verify applies the same single-pass shape keyed on the
-   * literal window string. Literal windows are extracted from per-doc
-   * position lists (ONE text join per doc, never text-per-site) and
-   * shuffled ONLY for candidate sites. Span merging is a per-doc
+   * doc_entropy). The ≥2-site prefilter counts sites per hash (one
+   * map-side-combinable count, one shuffle of (hash) rows) and keeps the
+   * candidate sites by a left-semi join against the hashes seen at ≥ 2
+   * sites — the kernel runs once under the count and once on the probe
+   * side (two `charwindowhashes` Generate nodes, pinned in DedupSpec).
+   * The content verify applies the same count + semi-join shape keyed
+   * on the literal window string. Literal windows are extracted from
+   * per-doc position lists (ONE text join per doc, never text-per-site)
+   * and shuffled ONLY for candidate sites. Span merging is a per-doc
    * window — state bounded by one document's hit positions, never
    * corpus-wide.
    */
@@ -980,25 +956,8 @@ object Dedup {
       .select(F.col("__id"), (F.col("__p0") + 1).cast("long").as("pos"),
         F.col("__h"))
     // hash prefilter: window contents POSSIBLY at >= 2 sites (equal
-    // content always hashes equal -> no false negatives). BOTH the
-    // occurrence count and the semi-join probe need `sites` shuffled by
-    // __h, and the two exchanges canonicalize identically — so
-    // ReuseExchange materializes the posexplode ONCE, where the r15
-    // shape evaluated the kernel over every codepoint twice (count
-    // branch + probe branch) and paid two occurrence-sized exchanges.
-    // The count deliberately references pos AND __id through an
-    // always-true conditional (pos is 1-based, so >= 1 by construction):
-    // a plain count(1) would let column pruning narrow this branch's
-    // copy of the exchange to (__h) only, de-canonicalizing it from the
-    // probe side's (__h, __id, pos) exchange and silently re-doubling
-    // the kernel pass (the tfidf/pmi lesson from r15). An explicit
-    // repartition does NOT work here: it tags its exchange
-    // REPARTITION_BY_COL while the join side gets ENSURE_REQUIREMENTS,
-    // and differing shuffle origins defeat reuse (measured 6.0 s vs
-    // 2.0 s for this form).
-    val dupH = sites.groupBy("__h")
-      .agg(F.count(F.when((F.col("pos") >= 1L) || F.col("__id").isNull,
-        1)).as("__n"))
+    // content always hashes equal -> no false negatives)
+    val dupH = sites.groupBy("__h").agg(F.count(F.lit(1)).as("__n"))
       .filter(F.col("__n") >= 2L).select("__h")
     val cand = sites.join(dupH, Seq("__h"), "left_semi")
     // literal-content verify: per-doc candidate position lists, one text
@@ -1013,15 +972,7 @@ object Dedup {
         .as("__site"))
       .select(F.col("__id"), F.col("__site.pos").as("pos"),
         F.col("__site.g").as("__g"))
-    // same single-exchange shape for the content verify: the >= 2-site
-    // count and the semi-join probe both shuffle `extracted` by literal
-    // window string and share one exchange (r15 re-evaluated
-    // `extracted` — including its text join — under the count aggregate
-    // AND as the probe side). Same pruning-guard: the count references
-    // pos and __id so both branches keep identical projections.
-    val dupG = extracted.groupBy("__g")
-      .agg(F.count(F.when((F.col("pos") >= 1L) || F.col("__id").isNull,
-        1)).as("__n"))
+    val dupG = extracted.groupBy("__g").agg(F.count(F.lit(1)).as("__n"))
       .filter(F.col("__n") >= 2L).select("__g")
     val hits = extracted.join(dupG, Seq("__g"), "left_semi")
       .select("__id", "pos")
@@ -1045,6 +996,19 @@ object Dedup {
         F.col("span_len"))
   }
 
+  /**
+   * Apply [[duplicateSpans]]: rebuild each document's text with every
+   * duplicated span's tokens removed — the ExactSubstr removal policy
+   * (all copies go; "keep one representative" is [[dedupByClusters]]'s
+   * whole-doc policy, not a span policy). Documents without spans pass
+   * through unchanged; a fully-covered document becomes the empty string
+   * (never a dropped row).
+   *
+   * Shape at 100 TB: one hash join of the corpus against the per-doc span
+   * lists (spans are a tiny fraction of the corpus; AQE broadcasts when
+   * small), then a pure codegen'd token filter — spans per doc are few,
+   * so the per-token `exists` probe is O(spans) on a local array.
+   */
   def stripDuplicateSpans(df: DataFrame, idCol: String, textCol: String,
                           spans: DataFrame): DataFrame = {
     require(!df.columns.contains("__spans"),

@@ -651,10 +651,8 @@ object TextStats {
    * (never materialized: bigram-distinct is near corpus-sized, so
    * persisting it costs more than the tokenize pass it saves — measured
    * at 10×, the fused-persist form was 1.9× slower, 15.2 s → 29.4 s).
-   * Callers that ALSO need [[pmiTopPairs]] on the same corpus should
-   * materialize ONE [[gramCounts]] table themselves and call
-   * [[bigramModelFromCounts]] — identical output (pinned in
-   * BoilerplateTfidfSpec), one corpus scan for the pair of operators.
+   * Its pair logprobs agree with the fused [[gramCounts]] table's counts
+   * (a law pinned in BoilerplateTfidfSpec).
    * Driver state stays model-parameter-sized throughout. Returns
    * (bigram logprobs, unigram vocab, oovLp); pair `backoffLp` with them
    * via [[StupidBackoffLp]] or your own discount.
@@ -690,45 +688,6 @@ object TextStats {
       }
       (bi.toSeq, vocab.toSeq, math.round(math.log(1.0 / total.toDouble) * 1e6))
     } finally counted.unpersist(blocking = false)
-  }
-
-  /**
-   * [[bigramModel]] over a precomputed [[gramCounts]] table — the shared-
-   * intermediate form: one corpus can pay its single tokenize+count scan
-   * once (persist or parquet the gram table) and feed BOTH the bigram LM
-   * and [[pmiTopPairs]] from it. Identical output to [[bigramModel]]
-   * (pinned in TextOpsSpec). The caller owns the table's materialization;
-   * passing a lazy frame re-runs its plan per driver-side job below
-   * (total, vocab, pairs, w1 counts — four jobs).
-   */
-  def bigramModelFromCounts(gramCounts: org.apache.spark.sql.DataFrame,
-                            topK: Int, topB: Int)
-      : (Seq[(String, Long)], Seq[(String, Long)], Long) = {
-    require(topK >= 1 && topB >= 1, "topK and topB must be >= 1")
-    val toks = gramCounts.filter(!F.col("is_pair"))
-      .select(F.col("gram").as("token"), F.col("cnt"))
-    val totalRow = toks.agg(F.sum("cnt")).head()
-    require(!totalRow.isNullAt(0) && totalRow.getLong(0) > 0L,
-      "bigramModel: corpus has no tokens")
-    val total = totalRow.getLong(0)
-    val vocab = toks.orderBy(F.col("cnt").desc, F.col("token"))
-      .limit(topK).collect()
-      .map(r => r.getString(0) ->
-        math.round(math.log(r.getLong(1).toDouble / total.toDouble) * 1e6))
-    val pairs = gramCounts.filter(F.col("is_pair"))
-      .select(F.col("gram").as("bg"), F.col("cnt"))
-      .orderBy(F.col("cnt").desc, F.col("bg"))
-      .limit(topB).collect()
-      .map(r => r.getString(0) -> r.getLong(1))
-    val w1s = pairs.map(_._1.takeWhile(_ != ' ')).distinct.toSeq
-    val w1Counts = toks
-      .filter(F.col("token").isin(w1s: _*))
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    val bi = pairs.map { case (bg, c) =>
-      bg -> math.round(
-        math.log(c.toDouble / w1Counts(bg.takeWhile(_ != ' ')).toDouble) * 1e6)
-    }
-    (bi.toSeq, vocab.toSeq, math.round(math.log(1.0 / total.toDouble) * 1e6))
   }
 
   /** Standard stupid-backoff discount `round(ln(0.4)·1e6)` micro-nats. */
@@ -1070,64 +1029,22 @@ object TextStats {
    * [[gramCounts]] table — r15; the r14 form scanned the corpus four
    * times), one map-side-combinable gram count whose exchange every
    * derived branch reuses (per-kind counts and the N/B totals —
-   * ReuseExchange, plan-asserted in TextOpsSpec), two equi-joins of the
+   * ReuseExchange, plan-asserted in C4EntropySpec), two equi-joins of the
    * ≥`minCount` pair table against the unigram counts, two 1-row
    * broadcast totals, and a bounded global top-k
    * (TakeOrderedAndProject: per-partition heaps + driver merge of k
    * rows — never a window, never a full sort, never data-sized cache).
    */
   def pmiTopPairs(df: DataFrame, textCol: String, k: Int = 100,
-                  minCount: Long = 5L): DataFrame =
-    pmiTopPairsFromCounts(gramCounts(df, textCol), k, minCount)
-
-  /**
-   * Fused unigram+bigram occurrence counts in ONE corpus tokenize+explode:
-   * `(gram, cnt, is_pair)` where a gram with no space is a token
-   * (`is_pair` false) and a gram with a space is an adjacent pair
-   * (`"w1 w2"`, `is_pair` true). The classification is exact by
-   * construction — [[tokens]] splits on single spaces, so a token can
-   * never contain one, and [[ngrams]] joins with exactly one.
-   *
-   * This is THE shared intermediate of the two heaviest linear corpus
-   * passes ([[pmiTopPairs]] and [[bigramModel]]): both consume it, so a
-   * caller running both materializes it once (persist/parquet) and pays
-   * ONE corpus scan for the pair. Consumed lazily (the default inside
-   * [[pmiTopPairs]]), its single aggregation subtree is also what lets
-   * ReuseExchange collapse every derived branch — per-kind counts AND
-   * per-kind totals — onto one scan+shuffle (plan-asserted in
-   * TextOpsSpec). The r14 form tokenized the corpus four times in
-   * `pmiTopPairs` (counts + totals, tokens + bigrams) and twice more in
-   * `bigramModel`.
-   *
-   * Shape at 100 TB: one explode over tokens++bigrams (the array concat
-   * evaluates the token split once — subexpression elimination), one
-   * map-side-combinable count keyed by the gram string. The shuffle
-   * carries one row per DISTINCT gram, never per occurrence.
-   */
-  def gramCounts(df: DataFrame, textCol: String): DataFrame =
-    df.select(F.explode(F.concat(tokens(F.col(textCol)),
-        ngrams(F.col(textCol), 2))).as("gram"))
-      .groupBy("gram").agg(F.count(F.lit(1)).as("cnt"),
-        // deliberately an AGGREGATE over the key function, not a
-        // projected key column: a plain `contains(gram, ' ')` filter
-        // would be pushed below the aggregate INTO the explode branch,
-        // splitting the one shared exchange back into per-kind corpus
-        // scans (observed: 3 GenerateExec). An agg output cannot push
-        // past the shuffle, so every consumer's filter stays above it
-        // and ReuseExchange sees identical subtrees.
-        F.max(F.col("gram").contains(" ")).as("is_pair"))
-
-  /** [[pmiTopPairs]] over a precomputed [[gramCounts]] table (identical
-    * output, pinned in TextOpsSpec). Totals are re-aggregations OF the
-    * count table — `N` = Σ cnt over token grams, `B` = Σ cnt over pair
-    * grams — so no corpus re-scan hides here either. */
-  def pmiTopPairsFromCounts(gramCounts: DataFrame, k: Int = 100,
-                            minCount: Long = 5L): DataFrame = {
+                  minCount: Long = 5L): DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k")
     require(minCount >= 1L, s"minCount must be >= 1, got $minCount")
-    val uni = gramCounts.filter(!F.col("is_pair"))
+    val counts = gramCounts(df, textCol)
+    // totals are re-aggregations OF the count table — `N` = Σ cnt over
+    // token grams, `B` = Σ cnt over pair grams — so no corpus re-scan
+    val uni = counts.filter(!F.col("is_pair"))
       .select(F.col("gram").as("w"), F.col("cnt").as("c"))
-    val biAll = gramCounts.filter(F.col("is_pair"))
+    val biAll = counts.filter(F.col("is_pair"))
       .select(F.col("gram").as("pair"), F.col("cnt").as("n_pair"))
     val bi = biAll
       .filter(F.col("n_pair") >= minCount)
@@ -1158,6 +1075,39 @@ object TextStats {
       .select("pair", "n_pair", "pmi_micro")
       .orderBy(F.desc("pmi_micro"), F.asc("pair")).limit(k)
   }
+
+  /**
+   * Fused unigram+bigram occurrence counts in ONE corpus tokenize+explode:
+   * `(gram, cnt, is_pair)` where a gram with no space is a token
+   * (`is_pair` false) and a gram with a space is an adjacent pair
+   * (`"w1 w2"`, `is_pair` true). The classification is exact by
+   * construction — [[tokens]] splits on single spaces, so a token can
+   * never contain one, and [[ngrams]] joins with exactly one.
+   *
+   * [[pmiTopPairs]] consumes it lazily: its single aggregation subtree is
+   * what lets ReuseExchange collapse every derived branch — per-kind
+   * counts AND per-kind totals — onto one scan+shuffle (plan-asserted in
+   * C4EntropySpec). The r14 form tokenized the corpus four times.
+   * [[bigramModel]] keeps its own two-pass shape (see its doc); its
+   * agreement with these counts is pinned in BoilerplateTfidfSpec.
+   *
+   * Shape at 100 TB: one explode over tokens++bigrams (the array concat
+   * evaluates the token split once — subexpression elimination), one
+   * map-side-combinable count keyed by the gram string. The shuffle
+   * carries one row per DISTINCT gram, never per occurrence.
+   */
+  private[llm] def gramCounts(df: DataFrame, textCol: String): DataFrame =
+    df.select(F.explode(F.concat(tokens(F.col(textCol)),
+        ngrams(F.col(textCol), 2))).as("gram"))
+      .groupBy("gram").agg(F.count(F.lit(1)).as("cnt"),
+        // deliberately an AGGREGATE over the key function, not a
+        // projected key column: a plain `contains(gram, ' ')` filter
+        // would be pushed below the aggregate INTO the explode branch,
+        // splitting the one shared exchange back into per-kind corpus
+        // scans (observed: 3 GenerateExec). An agg output cannot push
+        // past the shuffle, so every consumer's filter stays above it
+        // and ReuseExchange sees identical subtrees.
+        F.max(F.col("gram").contains(" ")).as("is_pair"))
 
   /**
    * Within-document token-distribution Shannon entropy in integer

@@ -61,9 +61,13 @@ object WebGraph {
    * the DuckDB oracle replays the iterations as chained CTEs.
    *
    * Output: (node, rank_micro) for every node that appears as a source or
-   * destination. `iters` is small and fixed (rank ordering stabilizes in
-   * a few rounds; curation wants the ordering, not the eigenvector), so
-   * the whole op is `iters` joins over the |domains|-sized vector.
+   * destination of an edge. An edge with a null source or destination is
+   * not an edge: it is dropped before ranking (as [[domainEdges]] and the
+   * DuckDB oracle drop it), so it adds nothing to any outdegree, and a
+   * domain seen only at the other end of such an edge gets no row.
+   * `iters` is small and fixed (rank ordering stabilizes in a few rounds;
+   * curation wants the ordering, not the eigenvector), so the whole op is
+   * `iters` joins over the |domains|-sized vector.
    *
    * Result-persistence contract: up to `localizeRows` nodes the rank
    * vector is collected and returned as a LOCAL DataFrame — the call
@@ -92,6 +96,7 @@ object WebGraph {
     // ONE join + one combinable sum instead of two joins.
     val ew = edges.select(F.col(srcCol).as("__wg_src"),
       F.col(dstCol).as("__wg_dst"))
+      .filter(F.col("__wg_src").isNotNull && F.col("__wg_dst").isNotNull)
       .groupBy("__wg_src", "__wg_dst").agg(F.count(F.lit(1)).as("__wg_w"))
     val outdeg = ew.groupBy("__wg_src").agg(F.sum("__wg_w").as("__wg_out"))
     val e = ew.join(outdeg, "__wg_src")

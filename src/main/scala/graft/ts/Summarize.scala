@@ -1,6 +1,6 @@
 package graft.ts
 
-import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.{functions => F}
 
 /**
@@ -20,31 +20,12 @@ object Summarize {
     * — the reference stamps summarize() results with time 0
     * (TimeSeriesRDD.scala:1774). */
   def summarize(df: DataFrame, s: Summarizer, key: Seq[String] = Seq.empty): DataFrame = {
-    // Two-stage evaluation: aggregate the recipe's DISTINCT base aggregates
-    // once (as __agg_<i>), then render the output expressions in a
-    // follow-up projection that references them BY NAME. Composed recipes
-    // (all-pairs correlation, OLS renders) re-use each base sum many times;
-    // inlining the aggregate tree at every use made the single-operator
-    // form blow up combinatorially (a 132 KB result projection for
-    // summarize_corr_pairs — its analysis/codegen time dwarfed the scan).
-    // CollapseProject leaves the split alone because the aggregate outputs
-    // are non-cheap and multiply referenced. Rendered values are
-    // bit-identical: same IEEE ops over the same aggregate results.
-    val m = scala.collection.mutable.LinkedHashMap.empty[String, (String, Column)]
-    val named = s.withCtx(SummarizerCtx(None, None, None, Some(m)))
-    val aggCols = m.values.toSeq.map { case (n, c) => c.as(n) }
-    if (aggCols.isEmpty) {
-      // degenerate recipe with no aggregate calls: nothing to substitute
-      val aggs = s.outputs
-      val g = df.groupBy(key.map(F.col): _*).agg(aggs.head, aggs.tail: _*)
-      // backtick-quote output names: they may contain dots (e.g. quantile 0.25)
-      g.select((F.lit(0L).as(TimeColumn) +: key.map(F.col)) ++
-        s.names.map(n => F.col(s"`$n`")): _*)
-    } else {
-      val g = df.groupBy(key.map(F.col): _*).agg(aggCols.head, aggCols.tail: _*)
-      g.select((F.lit(0L).as(TimeColumn) +: key.map(F.col)) ++
-        named.map { case (n, c) => c.as(n) }: _*)
-    }
+    val named = s.namedOutputs
+    val aggs = named.map { case (n, c) => c.as(n) }
+    val g = df.groupBy(key.map(F.col): _*).agg(aggs.head, aggs.tail: _*)
+    // backtick-quote output names: they may contain dots (e.g. quantile 0.25)
+    g.select((F.lit(0L).as(TimeColumn) +: key.map(F.col)) ++
+      named.map { case (n, _) => F.col(s"`$n`") }: _*)
   }
 
   /** Expose a summarizer's raw algebraic state instead of its rendered
@@ -58,19 +39,8 @@ object Summarize {
   /** Aggregate rows sharing an identical timestamp ("cycle"), per key
     * (≙ summarizeCycles). Output: (time, key..., aggs...). */
   def summarizeCycles(df: DataFrame, s: Summarizer, key: Seq[String] = Seq.empty): DataFrame = {
-    // same two-stage base-aggregate/render split as [[summarize]]
-    val m = scala.collection.mutable.LinkedHashMap.empty[String, (String, Column)]
-    val named = s.withCtx(SummarizerCtx(None, None, None, Some(m)))
-    val aggCols = m.values.toSeq.map { case (n, c) => c.as(n) }
-    if (aggCols.isEmpty) {
-      val aggs = s.outputs
-      df.groupBy((TimeColumn +: key).map(F.col): _*).agg(aggs.head, aggs.tail: _*)
-    } else {
-      df.groupBy((TimeColumn +: key).map(F.col): _*)
-        .agg(aggCols.head, aggCols.tail: _*)
-        .select((TimeColumn +: key).map(F.col) ++
-          named.map { case (n, c) => c.as(n) }: _*)
-    }
+    val aggs = s.outputs
+    df.groupBy((TimeColumn +: key).map(F.col): _*).agg(aggs.head, aggs.tail: _*)
   }
 
   /** Rows-per-cycle as an array<struct> column `rows` (≙ groupByCycle). */

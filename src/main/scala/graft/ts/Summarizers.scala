@@ -14,30 +14,13 @@ import org.apache.spark.sql.{functions => F}
  */
 final case class SummarizerCtx(
     pred: Option[Column], win: Option[WindowSpec],
-    rec: Option[scala.collection.mutable.LinkedHashMap[String, Column]] = None,
-    subst: Option[scala.collection.mutable.LinkedHashMap[String, (String, Column)]] = None) {
+    rec: Option[scala.collection.mutable.LinkedHashMap[String, Column]] = None) {
   /** Apply the window spec (if any) to an aggregate expression; when a
     * recorder is attached (summarizeState), also collect the distinct base
-    * aggregates the recipe is built from. When a SUBSTITUTION recorder is
-    * attached (Summarize.summarize), record the distinct base aggregate
-    * under a stable `__agg_<i>` alias and return a REFERENCE to it instead
-    * of the aggregate tree itself: derived outputs (correlation r, its
-    * t-stat, OLS renders) then mention each base sum once by name rather
-    * than inlining its whole tree at every use — without this the
-    * composed recipes blow up combinatorially (summarize_corr_pairs
-    * carried a 132 KB result projection whose analysis + Janino compile,
-    * not its data work, dominated the query). The rendered VALUES are
-    * unchanged: the same IEEE expression evaluates over the same
-    * aggregate results, one operator later. */
+    * aggregates the recipe is built from. */
   def agg(c: Column): Column = {
     rec.foreach(_.getOrElseUpdate(c.toString, c))
-    val w = win.map(c.over).getOrElse(c)
-    subst match {
-      case Some(m) =>
-        val (name, _) = m.getOrElseUpdate(w.toString, (s"__agg_${m.size}", w))
-        F.col(name)
-      case None => w
-    }
+    win.map(c.over).getOrElse(c)
   }
   /** Filtered input: aggregates skip nulls, so `when(pred, x)` ≡ FILTER (WHERE pred). */
   def in(c: Column): Column = pred.map(p => F.when(p, c)).getOrElse(c)

@@ -49,21 +49,4 @@ object KahanAggregates {
   /** Compensated Σ over a double column; null for an empty/all-null group
     * (matching Spark's `sum`). */
   def kahanSum(c: Column): Column = sumUdaf(c)
-
-  private val meanAgg: Aggregator[java.lang.Double, KahanState, java.lang.Double] =
-    new Aggregator[java.lang.Double, KahanState, java.lang.Double] {
-      def zero: KahanState = KahanState(0.0, 0.0, 0L)
-      def reduce(b: KahanState, a: java.lang.Double): KahanState =
-        if (a == null) b else b.add(a.doubleValue())
-      def merge(b1: KahanState, b2: KahanState): KahanState = b1.merge(b2)
-      def finish(r: KahanState): java.lang.Double =
-        if (r.n == 0) null else java.lang.Double.valueOf(r.value / r.n)
-      def bufferEncoder: Encoder[KahanState] = Encoders.product[KahanState]
-      def outputEncoder: Encoder[java.lang.Double] = Encoders.DOUBLE
-    }
-
-  private lazy val meanUdaf = udaf(meanAgg, Encoders.DOUBLE)
-
-  /** Compensated mean over a double column. */
-  def kahanMean(c: Column): Column = meanUdaf(c)
 }

@@ -56,11 +56,6 @@ object GraftColumns {
                      beginInclusive: Boolean, stampBegin: Boolean): Column =
     col(IntervalBucket(ex(time), clock, beginInclusive, stampBegin))
 
-  /** Packed JPEG dims `(width << 32) | height` from a bounded SOF walk
-    * over the raw payload bytes; null when no SOF within bounds. */
-  def jpegDimsPacked(bin: Column, maxPrefix: Int, maxSegments: Int): Column =
-    col(JpegDimsPacked(ex(bin), maxPrefix, maxSegments))
-
   /** Media-header metadata struct `(n_bytes, format, width, height,
     * sample_rate, channels)` parsed from the payload's leading bytes. */
   def mediaMeta(bin: Column, jpegMaxPrefix: Int, jpegMaxSegments: Int): Column =
@@ -1034,37 +1029,6 @@ object DupUnitStats {
     StructField("n_dup_paras", LongType, nullable = false),
     StructField("para_chars", LongType, nullable = false),
     StructField("dup_para_chars", LongType, nullable = false)))
-}
-
-/**
- * JPEG dimensions from a bounded SOF-marker walk over the raw payload
- * bytes (see graft.Kernels.jpegDims), packed as `(width << 32) | height`;
- * null when no SOF is found within the prefix/segment bounds. Replaces an
- * interpreted higher-order `aggregate` fold over a hex string that was
- * ~1000x slower per row and evaluated once per extracted field.
- */
-case class JpegDimsPacked(child: Expression, maxPrefix: Int, maxSegments: Int)
-    extends UnaryExpression with ExpectsInputTypes {
-  require(maxPrefix >= 4, s"maxPrefix must be >= 4, got $maxPrefix")
-  require(maxSegments >= 1, s"maxSegments must be >= 1, got $maxSegments")
-  override def inputTypes: Seq[AbstractDataType] = Seq(BinaryType)
-  override def dataType: DataType = LongType
-  override def nullable: Boolean = true
-  override def nullIntolerant: Boolean = true
-  override protected def nullSafeEval(input: Any): Any = {
-    val r = graft.Kernels.jpegDims(
-      input.asInstanceOf[Array[Byte]], maxPrefix, maxSegments)
-    if (r < 0L) null else r
-  }
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val r = ctx.freshName("graftJpegDims")
-    nullSafeCodeGen(ctx, ev, c => s"""
-      long $r = graft.Kernels.jpegDims($c, $maxPrefix, $maxSegments);
-      if ($r < 0L) { ${ev.isNull} = true; } else { ${ev.value} = $r; }
-    """)
-  }
-  override protected def withNewChildInternal(newChild: Expression): JpegDimsPacked =
-    copy(child = newChild)
 }
 
 /**

@@ -289,16 +289,31 @@ class BoilerplateTfidfSpec extends SparkTestBase {
     edge(1).isNullAt(1) shouldBe true
   }
 
-  it should "produce the identical model from a precomputed gramCounts " +
-    "table (the shared-intermediate form)" in {
-    val d = Seq((1L, "a b a b c"), (2L, "a b x"), (3L, "c  x a b"))
+  it should "give its top-B pairs ln(cnt(pair)/cnt(w1)) over the fused " +
+    "gramCounts table" in {
+    // The law tying the two-pass model to the one-scan gram table: the
+    // top-B pairs are gramCounts' pairs ranked (cnt desc, pair asc), and
+    // each logprob is the quantized conditional frequency of those counts.
+    // Doc 3's double space yields an empty token, so pairs "c " and " x".
+    val rnd = new scala.util.Random(7)
+    val docs = Seq("a b a b c", "a b x", "c  x a b") ++
+      (0 until 30).map(_ => Seq.fill(2 + rnd.nextInt(8))(
+        s"w${rnd.nextInt(6)}").mkString(" "))
+    val d = docs.zipWithIndex.map { case (t, i) => (i.toLong, t) }
       .toDF("id", "text")
-    val fresh = TextStats.bigramModel(d, "text", topK = 3, topB = 2)
-    val counts = TextStats.gramCounts(d, "text").persist()
-    try {
-      TextStats.bigramModelFromCounts(counts, topK = 3, topB = 2) shouldBe
-        fresh
-    } finally counts.unpersist(blocking = false): Unit
+    val topB = 8
+    val (bi, _, _) = TextStats.bigramModel(d, "text", topK = 3, topB = topB)
+    val counts = TextStats.gramCounts(d, "text").collect()
+      .map(r => (r.getString(0), r.getLong(1), r.getBoolean(2)))
+    val cnt = counts.map(t => t._1 -> t._2).toMap
+    bi.map(_._1) shouldBe counts.filter(_._3)
+      .sortBy(t => (-t._2, t._1)).take(topB).map(_._1).toSeq
+    bi.foreach { case (pair, lp) =>
+      withClue(pair) {
+        lp shouldBe math.round(math.log(cnt(pair).toDouble /
+          cnt(pair.takeWhile(_ != ' ')).toDouble) * 1e6)
+      }
+    }
   }
 
   it should "ignore empty tokens and docs with no tokens" in {

@@ -205,23 +205,6 @@ class C4EntropySpec extends SparkTestBase {
     } should not be empty
   }
 
-  it should "produce identical results from a precomputed gramCounts " +
-    "table (the shared-intermediate form)" in {
-    val d = Seq(
-      (1L, "new york a b a"), (2L, "b new york a b"),
-      (3L, "a b new york b a"), (4L, "new york b a a b"))
-      .toDF("id", "text")
-    val fresh = TextStats.pmiTopPairs(d, "text", k = 100, minCount = 2L)
-      .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSeq
-    val counts = TextStats.gramCounts(d, "text").persist()
-    try {
-      val shared = TextStats.pmiTopPairsFromCounts(counts, k = 100,
-        minCount = 2L)
-        .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSeq
-      shared shouldBe fresh
-    } finally counts.unpersist(blocking = false): Unit
-  }
-
   it should "classify fused grams exactly (empty tokens are unigrams, " +
     "short docs emit no bigrams)" in {
     // "a  b" has an empty middle token (no space in it -> unigram);

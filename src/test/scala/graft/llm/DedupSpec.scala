@@ -659,6 +659,21 @@ class DedupSpec extends SparkTestBase {
     run(d) shouldBe run(d.repartition(13))
   }
 
+  it should "run the window-hash kernel twice: count branch and probe side" in {
+    // the >= 2-site prefilter counts hashes in one branch and semi-joins
+    // the sites in another, and each evaluates charwindowhashes over the
+    // corpus; a form that claims a single kernel pass must move this pin
+    val d = Seq((1L, "xx hello world! yy"), (2L, "hello world! qq rr"))
+      .toDF("id", "text")
+    val p = Dedup.exactSubstrSpans(d, "id", "text", k = 8)
+      .queryExecution.executedPlan
+    val kernels = p.collectWithSubqueries {
+      case g: org.apache.spark.sql.execution.GenerateExec
+          if g.generator.toString.contains("charwindowhashes") => g
+    }
+    withClue(p.toString) { kernels should have size 2 }
+  }
+
   behavior of "stripDuplicateSpans"
 
   it should "remove span tokens everywhere and pass span-less docs through" in {

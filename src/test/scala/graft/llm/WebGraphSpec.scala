@@ -82,6 +82,18 @@ class WebGraphSpec extends SparkTestBase {
     got("a") should be > got("b")
   }
 
+  it should "drop edges with a null endpoint before ranking" in {
+    // e is reached only through (null, e), so it gets no row; (a, null)
+    // must neither count toward a's outdegree nor yield a null node
+    val edges = Seq(("a", "b"), ("b", "a"), ("a", "c"))
+    val withNulls = edges ++ Seq((null: String, "c"), (null: String, "e"),
+      ("a", null: String))
+    val got = WebGraph.pageRankMicro(
+        withNulls.toDF("src_domain", "dst_domain"), iters = 3)
+      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+    got shouldBe replay(edges, 3)
+  }
+
   it should "release every cache (localized result leaves none behind)" in {
     val before = spark.sparkContext.getPersistentRDDs.size
     val r = WebGraph.pageRankMicro(
