@@ -28,30 +28,6 @@ object Bench {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val spark = GraftSession.local()
 
-    // Opt-in spill accounting (SPARK_GRAFT_BENCH_SPILL_METRICS=1): sum
-    // memory/disk bytes spilled and peak execution memory across every
-    // task in the run and report them in the JSON — the evidence line for
-    // constrained-heap runs (graceful spill vs OOM). Zero overhead when
-    // unset.
-    val spillMetrics =
-      sys.env.get("SPARK_GRAFT_BENCH_SPILL_METRICS").contains("1")
-    val memSpilled = new java.util.concurrent.atomic.AtomicLong()
-    val diskSpilled = new java.util.concurrent.atomic.AtomicLong()
-    val peakExecMem = new java.util.concurrent.atomic.AtomicLong()
-    if (spillMetrics) spark.sparkContext.addSparkListener(
-      new org.apache.spark.scheduler.SparkListener {
-        override def onTaskEnd(
-            e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-          val m = e.taskMetrics
-          if (m != null) {
-            memSpilled.addAndGet(m.memoryBytesSpilled)
-            diskSpilled.addAndGet(m.diskBytesSpilled)
-            peakExecMem.getAndAccumulate(m.peakExecutionMemory,
-              (a: Long, b: Long) => Math.max(a, b))
-          }
-        }
-      })
-
     def force(df: org.apache.spark.sql.DataFrame): Unit =
       df.write.format("noop").mode("overwrite").save()
 
@@ -115,13 +91,8 @@ object Bench {
     val errors = results.collect { case (k, v) if v < 0 => "\"" + k + "\"" }
       .mkString("[", ",", "]")
     val total = results.values.filter(_ >= 0).sum
-    val spillField = if (!spillMetrics) "" else
-      s""","heap":"${sys.env.getOrElse("SPARK_DRIVER_MEM", "8g")}"""" +
-        s""","mem_spilled_bytes":${memSpilled.get}""" +
-        s""","disk_spilled_bytes":${diskSpilled.get}""" +
-        s""","peak_exec_mem_bytes":${peakExecMem.get}"""
     val fullLine =
-      s"""{"metric":"total","value":${r4(total)},"unit":"sec","passes":$passes,"agg":"min","sf":"$sfDir","errors":$errors$spillField,"queries":$qs}"""
+      s"""{"metric":"total","value":${r4(total)},"unit":"sec","passes":$passes,"agg":"min","sf":"$sfDir","errors":$errors,"queries":$qs}"""
     // The full line (totals + all per-query times) is persisted whole to
     // bench_out.json in the working directory AND printed as the LAST stdout
     // line: the driver's tail capture parses the final complete JSON object,

@@ -4,12 +4,18 @@ import org.apache.spark.sql.catalyst.expressions.XXH64
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 
 /**
- * Tight JVM loops behind the custom Catalyst expressions in
- * `org.apache.spark.sql.graft`. Each method is called once per row from
- * whole-stage-generated code (objects get static forwarders, so generated
- * Java can call `graft.Kernels.minHashSig(...)` directly) — replacing the
- * interpreted higher-order-function folds that dominated the round-2 bench
- * (one boxed lambda dispatch per array element per seed).
+ * Tight JVM loops behind the column functions in
+ * `org.apache.spark.sql.graft.GraftColumns`. Each method is called once per
+ * row from whole-stage-generated code (objects get static forwarders, so
+ * generated Java can call `graft.Kernels.minHashSig(...)` directly) —
+ * replacing the interpreted higher-order-function folds that dominated the
+ * round-2 bench (one boxed lambda dispatch per array element per seed).
+ * A stateless method (Catalyst-typed inputs plus `Int` / `Boolean`
+ * constants) is reached through Spark's `StaticInvoke`, which finds it by
+ * name and argument classes at run time, so renaming one or changing its
+ * parameter types breaks only at run time (GraftColumnsSpec runs each);
+ * methods taking precomputed state (maps, arrays, a clock) are called from
+ * the custom expressions in `GraftExpressions.scala`.
  *
  * Hash family: Spark's own XXH64 (`xxhash64` uses seed 42 over the value
  * bytes), so `tokenHash` below is bit-identical to `F.xxhash64(stringCol)`.

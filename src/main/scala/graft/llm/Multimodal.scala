@@ -28,7 +28,7 @@ import org.apache.spark.sql.{functions => F}
  * over mapInPandas with PIL/torchaudio in production — every other part of
  * the pipeline stays unchanged.
  *
- * Execution shape: the whole parse is ONE custom codegen'd expression per
+ * Execution shape: the whole parse is ONE codegen'd kernel call per
  * payload (`graft.Kernels.mediaMeta` — a monomorphic JIT'd byte loop that
  * only ever touches the leading bytes, never the payload body). Earlier
  * rounds formulated this as per-byte column arithmetic over a hex prefix;

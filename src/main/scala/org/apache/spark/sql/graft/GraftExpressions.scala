@@ -3,20 +3,26 @@ package org.apache.spark.sql.graft
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, ExpectsInputTypes, Expression, ImplicitCastInputTypes, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
+import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, ImplicitCastInputTypes, Literal, UnaryExpression}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.classic.ExpressionUtils
 import org.apache.spark.sql.types._
 
 /**
- * Custom codegen'd Catalyst expressions for the hot row-local kernels
- * (MinHash / SimHash sketching, set intersection, interval bucketing).
- * Each participates in whole-stage codegen — the generated Java calls the
- * corresponding `graft.Kernels` static method, so the per-row work is one
- * monomorphic call into a JIT-compiled primitive loop instead of the
- * interpreted higher-order-function fold it replaces. Pattern follows the
- * reference's codegen'd time-cast expressions
- * (/root/reference/src/main/scala/org/apache/spark/sql/TimestampCast.scala:68-84).
+ * Column functions for the hot row-local kernels in `graft.Kernels`
+ * (MinHash / SimHash sketching, set intersection, text scans, interval
+ * bucketing). Every one runs inside whole-stage codegen: the generated Java
+ * calls the static `graft.Kernels` method once per row, a monomorphic call
+ * into a JIT-compiled primitive loop.
+ *
+ * The rule for adding one:
+ *  - a STATELESS kernel — its arguments are the input columns plus `Int` /
+ *    `Boolean` constants — goes through Spark's own `StaticInvoke` via
+ *    the `kernel` helper below; it needs no class of its own;
+ *  - a case class here only when the call needs state built once and shared
+ *    by every row: a lookup map or array derived from constructor arguments
+ *    (passed to generated code with `addReferenceObj`) or a `Broadcast`.
  *
  * This file lives under `org.apache.spark.sql` only for `ExpressionUtils`
  * (Expression <-> Column bridging, `private[sql]` in Spark 4).
@@ -25,31 +31,71 @@ object GraftColumns {
   private def col(e: Expression): Column = ExpressionUtils.column(e)
   private def ex(c: Column): Expression = ExpressionUtils.expression(c)
 
+  // input types (element nullability is not matched) and result types
+  private val Strings = ArrayType(StringType)
+  private val Longs = ArrayType(LongType)
+  private val Doubles = ArrayType(DoubleType)
+  private val LongArray = ArrayType(LongType, containsNull = false)
+  private val IntArray = ArrayType(IntegerType, containsNull = false)
+
+  /**
+   * `graft.Kernels.<name>(inputs..., consts...)` as a null-propagating
+   * `StaticInvoke`: null when any input is null, otherwise the kernel's
+   * result typed `dataType`. `inputs` pairs each column with the type it
+   * is implicitly cast to; `consts` (`Int` / `Boolean`) become literals,
+   * inlined into the generated call. The kernel method is resolved by the
+   * argument classes when the expression is first evaluated, so a constant
+   * of the wrong type fails only at run time (GraftColumnsSpec runs every
+   * kernel). `returnNullable` is for kernels that may return null
+   * themselves.
+   */
+  private def kernel(name: String, dataType: DataType,
+                     inputs: Seq[(Column, AbstractDataType)], consts: Seq[Any] = Nil,
+                     returnNullable: Boolean = false): Column = {
+    val lits = consts.map(Literal(_))
+    col(StaticInvoke(graft.Kernels.getClass, dataType, name,
+      inputs.map(i => ex(i._1)) ++ lits, inputs.map(_._2) ++ lits.map(_.dataType),
+      returnNullable = returnNullable))
+  }
+
   /** Sorted distinct xxhash64 fingerprints of word k-shingles of a token array. */
-  def hashedShingles(tokens: Column, k: Int): Column = col(HashedShingles(ex(tokens), k))
+  def hashedShingles(tokens: Column, k: Int): Column = {
+    require(k >= 1, s"shingle size must be >= 1, got $k")
+    kernel("hashedShingles", LongArray, Seq(tokens -> Strings), Seq(k))
+  }
 
   /** All (or distinct-sorted) 64-bit n-gram fingerprints; see Kernels.ngramHashes. */
-  def ngramHashes(tokens: Column, n: Int, distinct: Boolean): Column =
-    col(NGramHashes(ex(tokens), n, distinct))
+  def ngramHashes(tokens: Column, n: Int, distinct: Boolean): Column = {
+    require(n >= 1, s"n-gram size must be >= 1, got $n")
+    kernel("ngramHashes", LongArray, Seq(tokens -> Strings), Seq(n, distinct))
+  }
 
-  /** n-gram `(hash, chars)` structs in positional order; see
+  /** n-gram `(hash, chars)` structs in positional order: the multiset
+    * [[ngramHashes]] fused with per-position n-gram char lengths; see
     * Kernels.ngramHashLens. */
-  def ngramHashLens(tokens: Column, n: Int): Column =
-    col(NGramHashLens(ex(tokens), n))
+  def ngramHashLens(tokens: Column, n: Int): Column = {
+    require(n >= 1, s"n-gram size must be >= 1, got $n")
+    kernel("ngramHashLens", ArrayType(NGramHashLens.elementSchema, containsNull = false),
+      Seq(tokens -> Strings), Seq(n))
+  }
 
   /** MinHash signature (array of `numHashes` longs) of a hashed-shingle array. */
-  def minHashSig(hashedShingles: Column, numHashes: Int): Column =
-    col(MinHashSignature(ex(hashedShingles), numHashes))
+  def minHashSig(hashedShingles: Column, numHashes: Int): Column = {
+    require(numHashes >= 1, s"numHashes must be >= 1, got $numHashes")
+    kernel("minHashSig", LongArray, Seq(hashedShingles -> Longs), Seq(numHashes))
+  }
 
   /** |A ∩ B| of two ascending-sorted distinct long arrays. */
   def sortedIntersectSize(a: Column, b: Column): Column =
-    col(SortedIntersectSize(ex(a), ex(b)))
+    kernel("sortedIntersectSize", IntegerType, Seq(a -> Longs, b -> Longs))
 
   /** 64-bit SimHash sketch of a token array. */
-  def simHash64(tokens: Column): Column = col(SimHash64(ex(tokens)))
+  def simHash64(tokens: Column): Column =
+    kernel("simHash64", LongType, Seq(tokens -> Strings))
 
   /** Portable (SQL-mirrorable) two-lane SimHash sketch of a token array. */
-  def simHashPortable(tokens: Column): Column = col(SimHashPortable(ex(tokens)))
+  def simHashPortable(tokens: Column): Column =
+    kernel("simHashPortable", LongType, Seq(tokens -> Strings))
 
   /** Interval bucket stamp for a long time column; null when outside the clock. */
   def intervalBucket(time: Column, clock: Broadcast[Array[Long]],
@@ -57,23 +103,36 @@ object GraftColumns {
     col(IntervalBucket(ex(time), clock, beginInclusive, stampBegin))
 
   /** Media-header metadata struct `(n_bytes, format, width, height,
-    * sample_rate, channels)` parsed from the payload's leading bytes. */
+    * sample_rate, channels)` from one kernel call over the raw payload
+    * bytes: BMP/PNG/GIF/WAV/WebP fixed offsets plus the bounded JPEG SOF
+    * walk. One call per payload keeps the enclosing projection far under
+    * the JVM's 64 KB generated-method limit, which the per-byte column
+    * form it replaces exceeded for queries parsing several payloads. */
   def mediaMeta(bin: Column, jpegMaxPrefix: Int, jpegMaxSegments: Int): Column =
-    col(MediaMeta(ex(bin), jpegMaxPrefix, jpegMaxSegments))
+    kernel("mediaMeta", MediaMeta.schema, Seq(bin -> BinaryType),
+      Seq(jpegMaxPrefix, jpegMaxSegments), returnNullable = true)
 
   /** Order-sensitive rolling hash of a token array — bit-identical to the
     * `aggregate(tokens, 0L, (acc, t) => xxhash64(acc, t))` fold. */
-  def rollingTokenHash(tokens: Column): Column = col(RollingTokenHash(ex(tokens)))
+  def rollingTokenHash(tokens: Column): Column =
+    kernel("rollingTokenHash", LongType, Seq(tokens -> Strings))
 
   /** Rolling polynomial hashes of every k-codepoint window of a text
-    * column, positionally ordered; see Kernels.charWindowHashes. */
-  def charWindowHashes(text: Column, k: Int): Column =
-    col(CharWindowHashes(ex(text), k))
+    * column, positionally ordered — the candidate generator of the
+    * exact-substring dedup tier; see Kernels.charWindowHashes. */
+  def charWindowHashes(text: Column, k: Int): Column = {
+    require(k >= 1, s"window size must be >= 1, got $k")
+    kernel("charWindowHashes", LongArray, Seq(text -> StringType), Seq(k))
+  }
 
   /** Context-window chunk structs `(start, n_tokens, chunk_text)` for
     * single-space-tokenized text, one offset-walk kernel call per row. */
-  def chunkSpans(text: Column, chunkSize: Int, stride: Int): Column =
-    col(ChunkSpans(ex(text), chunkSize, stride))
+  def chunkSpans(text: Column, chunkSize: Int, stride: Int): Column = {
+    require(chunkSize >= 1, s"chunkSize must be >= 1, got $chunkSize")
+    require(stride >= 1, s"stride must be >= 1, got $stride")
+    kernel("chunkSpans", ArrayType(ChunkSpans.elementSchema, containsNull = false),
+      Seq(text -> StringType), Seq(chunkSize, stride))
+  }
 
   /** Single-pass token statistics struct `(n_tokens, n_unique, n_punct,
     * n_stop)` over single-space-tokenized text; `n_stop` counts hits in
@@ -83,7 +142,8 @@ object GraftColumns {
 
   /** BPE-pretokenizer segment count (TextStats.BpeTokenPattern) as one
     * char-class transition loop — same count as the regexp form, linear. */
-  def bpeTokenCount(text: Column): Column = col(BpeTokenCountExpr(ex(text)))
+  def bpeTokenCount(text: Column): Column =
+    kernel("bpeCount", IntegerType, Seq(text -> StringType))
 
   /** Stopword-vote language id over `langWords` (label -> stopword list,
     * label order = tie preference; `cjkLabel` also scores CJK chars). */
@@ -118,46 +178,82 @@ object GraftColumns {
   def registrableDomainPsl(host: Column, suffixes: Seq[String]): Column =
     col(RegistrableDomainPsl(ex(host), suffixes))
 
-  /** Fused PII scrub struct `(redacted, n_emails, n_phones, n_ips)` —
-    * staged email/phone/IPv4 redaction + per-stage counts in one kernel
-    * call; semantics identical to the staged `Pii.redact`/`Pii.counts`
-    * regexp columns it accelerates. */
-  def piiScrub(text: Column): Column = col(PiiScrub(ex(text)))
+  /** Fused PII scrub struct `(redacted, n_emails, n_phones, n_ips)`: the
+    * staged email -> phone -> IPv4 redaction and the three per-stage match
+    * counts that `Pii.counts` defines, in one kernel call of three
+    * anchor-jumping scans instead of six regexp passes (3 regexp_count +
+    * 3 regexp_replace). Semantics identical to the staged
+    * `Pii.redact`/`Pii.counts` regexp columns. */
+  def piiScrub(text: Column): Column =
+    kernel("piiScrub", PiiScrub.schema, Seq(text -> StringType), returnNullable = true)
 
-  /** See [[MarkupStrip]]. */
-  def stripMarkup(text: Column): Column = col(MarkupStrip(ex(text)))
+  /** WET-style markup-to-text extraction in one scan: drops script/style
+    * blocks, strips tags to spaces, decodes the six standard entities and
+    * collapses whitespace — replayable as a regexp_replace/replace chain
+    * (see Kernels.stripMarkup). */
+  def stripMarkup(text: Column): Column =
+    kernel("stripMarkup", StringType, Seq(text -> StringType), returnNullable = true)
 
-  /** See [[NormalizeText]]. */
-  def normalizeText(text: Column): Column = col(NormalizeText(ex(text)))
+  /** CCNet-style ASCII text canonicalization in one scan: case fold, digit
+    * fold, punctuation strip, whitespace collapse + trim — exactly the
+    * translate/regexp_replace/trim chain Kernels.normalizeText documents. */
+  def normalizeText(text: Column): Column =
+    kernel("normalizeText", StringType, Seq(text -> StringType), returnNullable = true)
 
-  /** See [[EncodingStats]]. */
-  def encodingStats(text: Column): Column = col(EncodingStats(ex(text)))
+  /** Encoding-quality counters `(n_chars, n_replacement, n_control)`: code
+    * points, U+FFFD replacement chars and disallowed control chars. */
+  def encodingStats(text: Column): Column =
+    kernel("encodingStats", EncodingStats.schema, Seq(text -> StringType),
+      returnNullable = true)
 
-  /** See [[GopherStats]]. */
-  def gopherStats(text: Column): Column = col(GopherStats(ex(text)))
+  /** Gopher/MassiveText quality counters: words / alpha words / symbols /
+    * lines / bullet lines / ellipsis lines in one scan, all integers so
+    * threshold flags are bit-stable. */
+  def gopherStats(text: Column): Column =
+    kernel("gopherStats", GopherStats.schema, Seq(text -> StringType),
+      returnNullable = true)
 
-  /** Per-token hashing-trick feature buckets (see [[TokenBuckets]]). */
-  def tokenBuckets(text: Column, numBuckets: Int): Column =
-    col(TokenBuckets(ex(text), numBuckets))
+  /** Hashing-trick feature buckets of the whitespace tokens: one Int per
+    * token, bucket = portableHash32(token) mod numBuckets — the Naive Bayes
+    * trainer's explode input and the bucket function its SQL oracle replays. */
+  def tokenBuckets(text: Column, numBuckets: Int): Column = {
+    require(numBuckets >= 1, "numBuckets must be >= 1")
+    kernel("tokenBuckets", IntArray, Seq(text -> StringType), Seq(numBuckets))
+  }
 
-  /** Flesch–Kincaid surface counters (see [[FkStats]]). */
-  def fkStats(text: Column): Column = col(FkStats(ex(text)))
+  /** Flesch–Kincaid surface counters `(n_words, n_sentences, n_syllables)`:
+    * sentence terminators floored at 1, vowel-group syllables floored at 1
+    * per word, in one scan. */
+  def fkStats(text: Column): Column =
+    kernel("fkStats", FkStats.schema, Seq(text -> StringType), returnNullable = true)
 
-  /** Count-min sketch update coordinates per token (see [[CmsPairs]]). */
-  def cmsPairs(text: Column, depth: Int, width: Int): Column =
-    col(CmsPairs(ex(text), depth, width))
+  /** Count-min sketch update coordinates of a document's whitespace tokens:
+    * `depth` packed Ints per token. Exploded and counted these ARE the
+    * sketch table. */
+  def cmsPairs(text: Column, depth: Int, width: Int): Column = {
+    require(depth >= 1 && width >= 1, "depth and width must be >= 1")
+    kernel("cmsPairs", IntArray, Seq(text -> StringType), Seq(depth, width))
+  }
 
-  /** Sketch coordinates of one token (see [[CmsTokenCoords]]). */
-  def cmsTokenCoords(token: Column, depth: Int, width: Int): Column =
-    col(CmsTokenCoords(ex(token), depth, width))
+  /** The `depth` packed sketch coordinates of ONE token — the probe side
+    * of [[cmsPairs]]. */
+  def cmsTokenCoords(token: Column, depth: Int, width: Int): Column = {
+    require(depth >= 1 && width >= 1, "depth and width must be >= 1")
+    kernel("cmsTokenCoords", IntArray, Seq(token -> StringType), Seq(depth, width))
+  }
 
   /** Hashed Naive Bayes label+score (see [[NbScore]]). */
   def nbScore(text: Column, numBuckets: Int, labels: Seq[String],
               priors: Seq[Long], weights: Array[Long]): Column =
     col(NbScore(ex(text), numBuckets, labels, priors, weights))
 
-  /** See [[DupUnitStats]]. */
-  def dupUnitStats(text: Column): Column = col(DupUnitStats(ex(text)))
+  /** Line/paragraph repetition counters: for each delimiter class (lines on
+    * `\n`, paragraphs on `\n\n`), counts and code-point char sums of
+    * non-empty units and of duplicate occurrences (an occurrence whose
+    * identical unit appeared earlier in the doc). */
+  def dupUnitStats(text: Column): Column =
+    kernel("dupUnitStats", DupUnitStats.schema, Seq(text -> StringType),
+      returnNullable = true)
 
   /** Distributed Bloom-filter build over xxhash64(key) values — Spark's
     * own runtime-filter aggregate (`BloomFilterAggregate`), exposed as a
@@ -165,7 +261,6 @@ object GraftColumns {
     * executor. `hashed` MUST be `xxhash64(key)` (seed 42) so probes via
     * [[bloomMightContain]] hash identically. */
   def bloomFilterAgg(hashed: Column, expectedItems: Long, numBits: Long): Column = {
-    import org.apache.spark.sql.catalyst.expressions.Literal
     import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
     col(BloomFilterAggregate(ex(hashed), Literal(expectedItems), Literal(numBits),
       0, 0).toAggregateExpression())
@@ -176,16 +271,19 @@ object GraftColumns {
     * expression. False positives at the configured fpp, never false
     * negatives. */
   def bloomMightContain(bloomBytes: Array[Byte], hashed: Column): Column = {
-    import org.apache.spark.sql.catalyst.expressions.{BloomFilterMightContain, Literal}
+    import org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain
     col(BloomFilterMightContain(Literal(bloomBytes, BinaryType), ex(hashed)))
   }
 
-  /** Σ aᵢ·bᵢ of two numeric arrays in double precision. */
-  def dotProduct(a: Column, b: Column): Column = col(DotProductExpr(ex(a), ex(b)))
+  /** Σ aᵢ·bᵢ of two numeric arrays in double precision; null on a length
+    * mismatch or a null element. */
+  def dotProduct(a: Column, b: Column): Column =
+    kernel("dotD", DoubleType, Seq(a -> Doubles, b -> Doubles), returnNullable = true)
 
-  /** Cosine similarity of two numeric arrays. */
-  def cosineSim(a: Column, b: Column): Column = col(CosineSim(ex(a), ex(b)))
-
+  /** Cosine similarity of two numeric arrays; null on a length mismatch
+    * or a null element. */
+  def cosineSim(a: Column, b: Column): Column =
+    kernel("cosineD", DoubleType, Seq(a -> Doubles, b -> Doubles), returnNullable = true)
   /** Nearest-centroid cell id (ties → lowest). Centroids ride the closure. */
   def centroidCell(vec: Column, centroids: Array[Double], dim: Int): Column =
     col(CentroidCell(ex(vec), centroids, dim))
@@ -217,149 +315,72 @@ object GraftColumns {
   }
 }
 
-case class HashedShingles(child: Expression, k: Int)
-    extends UnaryExpression with ExpectsInputTypes {
-  require(k >= 1, s"shingle size must be >= 1, got $k")
-  override def inputTypes: Seq[AbstractDataType] = Seq(ArrayType(StringType))
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullIntolerant: Boolean = true
-  override protected def nullSafeEval(input: Any): Any =
-    graft.Kernels.hashedShingles(input.asInstanceOf[ArrayData], k)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => s"${ev.value} = graft.Kernels.hashedShingles($c, $k);")
-  override protected def withNewChildInternal(newChild: Expression): HashedShingles =
-    copy(child = newChild)
-}
-
-case class NGramHashes(child: Expression, n: Int, distinct: Boolean)
-    extends UnaryExpression with ExpectsInputTypes {
-  require(n >= 1, s"n-gram size must be >= 1, got $n")
-  override def inputTypes: Seq[AbstractDataType] = Seq(ArrayType(StringType))
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullIntolerant: Boolean = true
-  override protected def nullSafeEval(input: Any): Any =
-    graft.Kernels.ngramHashes(input.asInstanceOf[ArrayData], n, distinct)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => s"${ev.value} = graft.Kernels.ngramHashes($c, $n, $distinct);")
-  override protected def withNewChildInternal(newChild: Expression): NGramHashes =
-    copy(child = newChild)
-}
-
-/** [[NGramHashes]] (multiset form) fused with per-position n-gram char
-  * lengths — `(h, ch)` structs, see graft.Kernels.ngramHashLens. */
-case class NGramHashLens(child: Expression, n: Int)
-    extends UnaryExpression with ExpectsInputTypes {
-  require(n >= 1, s"n-gram size must be >= 1, got $n")
-  override def inputTypes: Seq[AbstractDataType] = Seq(ArrayType(StringType))
-  override def dataType: DataType = ArrayType(NGramHashLens.elementSchema,
-    containsNull = false)
-  override def nullIntolerant: Boolean = true
-  override protected def nullSafeEval(input: Any): Any =
-    graft.Kernels.ngramHashLens(input.asInstanceOf[ArrayData], n)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => s"${ev.value} = graft.Kernels.ngramHashLens($c, $n);")
-  override protected def withNewChildInternal(newChild: Expression): NGramHashLens =
-    copy(child = newChild)
-}
-
+// Result schemas of the struct-valued stateless kernels above.
 object NGramHashLens {
   val elementSchema: StructType = StructType(Seq(
     StructField("h", LongType, nullable = false),
     StructField("ch", IntegerType, nullable = false)))
 }
 
-case class MinHashSignature(child: Expression, numHashes: Int)
-    extends UnaryExpression with ExpectsInputTypes {
-  require(numHashes >= 1, s"numHashes must be >= 1, got $numHashes")
-  override def inputTypes: Seq[AbstractDataType] = Seq(ArrayType(LongType))
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullIntolerant: Boolean = true
-  override protected def nullSafeEval(input: Any): Any =
-    graft.Kernels.minHashSig(input.asInstanceOf[ArrayData], numHashes)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => s"${ev.value} = graft.Kernels.minHashSig($c, $numHashes);")
-  override protected def withNewChildInternal(newChild: Expression): MinHashSignature =
-    copy(child = newChild)
+object MediaMeta {
+  val schema: StructType = StructType(Seq(
+    StructField("n_bytes", IntegerType, nullable = false),
+    StructField("format", StringType, nullable = false),
+    StructField("width", IntegerType, nullable = true),
+    StructField("height", IntegerType, nullable = true),
+    StructField("sample_rate", IntegerType, nullable = true),
+    StructField("channels", IntegerType, nullable = true)))
 }
 
-case class SortedIntersectSize(left: Expression, right: Expression)
-    extends BinaryExpression with ExpectsInputTypes {
-  override def inputTypes: Seq[AbstractDataType] =
-    Seq(ArrayType(LongType), ArrayType(LongType))
-  override def dataType: DataType = IntegerType
-  override def nullIntolerant: Boolean = true
-  override protected def nullSafeEval(a: Any, b: Any): Any =
-    graft.Kernels.sortedIntersectSize(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) =>
-      s"${ev.value} = graft.Kernels.sortedIntersectSize($a, $b);")
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): SortedIntersectSize =
-    copy(left = newLeft, right = newRight)
+object ChunkSpans {
+  val elementSchema: StructType = StructType(Seq(
+    StructField("start", IntegerType, nullable = false),
+    StructField("n_tokens", IntegerType, nullable = false),
+    StructField("chunk_text", StringType, nullable = false)))
 }
 
-case class SimHash64(child: Expression)
-    extends UnaryExpression with ExpectsInputTypes {
-  override def inputTypes: Seq[AbstractDataType] = Seq(ArrayType(StringType))
-  override def dataType: DataType = LongType
-  override def nullIntolerant: Boolean = true
-  override protected def nullSafeEval(input: Any): Any =
-    graft.Kernels.simHash64(input.asInstanceOf[ArrayData])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => s"${ev.value} = graft.Kernels.simHash64($c);")
-  override protected def withNewChildInternal(newChild: Expression): SimHash64 =
-    copy(child = newChild)
+object PiiScrub {
+  val schema: StructType = StructType(Seq(
+    StructField("redacted", StringType, nullable = false),
+    StructField("n_emails", IntegerType, nullable = false),
+    StructField("n_phones", IntegerType, nullable = false),
+    StructField("n_ips", IntegerType, nullable = false)))
 }
 
-case class SimHashPortable(child: Expression)
-    extends UnaryExpression with ExpectsInputTypes {
-  override def inputTypes: Seq[AbstractDataType] = Seq(ArrayType(StringType))
-  override def dataType: DataType = LongType
-  override def nullIntolerant: Boolean = true
-  override protected def nullSafeEval(input: Any): Any =
-    graft.Kernels.simHashPortable(input.asInstanceOf[ArrayData])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => s"${ev.value} = graft.Kernels.simHashPortable($c);")
-  override protected def withNewChildInternal(newChild: Expression): SimHashPortable =
-    copy(child = newChild)
+object EncodingStats {
+  val schema: StructType = StructType(Seq(
+    StructField("n_chars", IntegerType, nullable = false),
+    StructField("n_replacement", IntegerType, nullable = false),
+    StructField("n_control", IntegerType, nullable = false)))
 }
 
-case class DotProductExpr(left: Expression, right: Expression)
-    extends BinaryExpression with ImplicitCastInputTypes {
-  override def inputTypes: Seq[AbstractDataType] =
-    Seq(ArrayType(DoubleType), ArrayType(DoubleType))
-  override def dataType: DataType = DoubleType
-  override def nullable: Boolean = true
-  override def nullIntolerant: Boolean = true
-  override protected def nullSafeEval(a: Any, b: Any): Any =
-    graft.Kernels.dotD(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => s"""
-      java.lang.Double r = graft.Kernels.dotD($a, $b);
-      if (r == null) { ${ev.isNull} = true; } else { ${ev.value} = r.doubleValue(); }
-    """)
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): DotProductExpr =
-    copy(left = newLeft, right = newRight)
+object FkStats {
+  val schema: StructType = StructType(Seq(
+    StructField("n_words", IntegerType, nullable = false),
+    StructField("n_sentences", IntegerType, nullable = false),
+    StructField("n_syllables", LongType, nullable = false)))
 }
 
-case class CosineSim(left: Expression, right: Expression)
-    extends BinaryExpression with ImplicitCastInputTypes {
-  override def inputTypes: Seq[AbstractDataType] =
-    Seq(ArrayType(DoubleType), ArrayType(DoubleType))
-  override def dataType: DataType = DoubleType
-  override def nullable: Boolean = true
-  override def nullIntolerant: Boolean = true
-  override protected def nullSafeEval(a: Any, b: Any): Any =
-    graft.Kernels.cosineD(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => s"""
-      java.lang.Double r = graft.Kernels.cosineD($a, $b);
-      if (r == null) { ${ev.isNull} = true; } else { ${ev.value} = r.doubleValue(); }
-    """)
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): CosineSim =
-    copy(left = newLeft, right = newRight)
+object GopherStats {
+  val schema: StructType = StructType(Seq(
+    StructField("n_words", IntegerType, nullable = false),
+    StructField("n_alpha_words", IntegerType, nullable = false),
+    StructField("n_symbols", IntegerType, nullable = false),
+    StructField("n_lines", IntegerType, nullable = false),
+    StructField("n_bullet_lines", IntegerType, nullable = false),
+    StructField("n_ellipsis_lines", IntegerType, nullable = false)))
+}
+
+object DupUnitStats {
+  val schema: StructType = StructType(Seq(
+    StructField("n_lines", LongType, nullable = false),
+    StructField("n_dup_lines", LongType, nullable = false),
+    StructField("line_chars", LongType, nullable = false),
+    StructField("dup_line_chars", LongType, nullable = false),
+    StructField("n_paras", LongType, nullable = false),
+    StructField("n_dup_paras", LongType, nullable = false),
+    StructField("para_chars", LongType, nullable = false),
+    StructField("dup_para_chars", LongType, nullable = false)))
 }
 
 case class CentroidCell(child: Expression, centroids: Array[Double], dim: Int)
@@ -414,40 +435,6 @@ case class LshBands(child: Expression, planes: Array[Double],
     copy(child = newChild)
 }
 
-/**
- * Media-header metadata struct from one kernel call over the raw payload
- * bytes (graft.Kernels.mediaMeta): BMP/PNG/GIF/WAV/WebP fixed offsets plus
- * the bounded JPEG SOF walk. One expression node per payload keeps the
- * enclosing projection far under the JVM's 64 KB generated-method limit —
- * the per-byte column-expression formulation it replaces disabled
- * whole-stage codegen for any query parsing several payloads at once.
- */
-case class MediaMeta(child: Expression, jpegMaxPrefix: Int, jpegMaxSegments: Int)
-    extends UnaryExpression with ExpectsInputTypes {
-  override def inputTypes: Seq[AbstractDataType] = Seq(BinaryType)
-  override def dataType: DataType = MediaMeta.schema
-  override def nullable: Boolean = true
-  override def nullIntolerant: Boolean = true
-  override protected def nullSafeEval(input: Any): Any =
-    graft.Kernels.mediaMeta(
-      input.asInstanceOf[Array[Byte]], jpegMaxPrefix, jpegMaxSegments)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.Kernels.mediaMeta($c, $jpegMaxPrefix, $jpegMaxSegments);")
-  override protected def withNewChildInternal(newChild: Expression): MediaMeta =
-    copy(child = newChild)
-}
-
-object MediaMeta {
-  val schema: StructType = StructType(Seq(
-    StructField("n_bytes", IntegerType, nullable = false),
-    StructField("format", StringType, nullable = false),
-    StructField("width", IntegerType, nullable = true),
-    StructField("height", IntegerType, nullable = true),
-    StructField("sample_rate", IntegerType, nullable = true),
-    StructField("channels", IntegerType, nullable = true)))
-}
-
 /** Single-pass per-document token statistics (graft.Kernels.docTokenStats):
   * token / distinct-token / punctuation-char / stopword-hit counts in one
   * scan, replacing up to four split-array pipelines. The downstream double
@@ -484,85 +471,6 @@ object DocTokenStats {
     StructField("n_unique", IntegerType, nullable = false),
     StructField("n_punct", IntegerType, nullable = false),
     StructField("n_stop", IntegerType, nullable = false)))
-}
-
-/** Context-window chunk structs from one offset-walk kernel call
-  * (graft.Kernels.chunkSpans): replaces a transform+slice+array_join tree
-  * that re-walked the token array and allocated a joined string per chunk.
-  * TextOpsSpec pins parity against the higher-order-function form. */
-case class ChunkSpans(child: Expression, chunkSize: Int, stride: Int)
-    extends UnaryExpression with ExpectsInputTypes {
-  require(chunkSize >= 1, s"chunkSize must be >= 1, got $chunkSize")
-  require(stride >= 1, s"stride must be >= 1, got $stride")
-  override def inputTypes: Seq[AbstractDataType] = Seq(StringType)
-  override def dataType: DataType = ArrayType(ChunkSpans.elementSchema, containsNull = false)
-  override def nullIntolerant: Boolean = true
-  override protected def nullSafeEval(input: Any): Any =
-    graft.Kernels.chunkSpans(
-      input.asInstanceOf[org.apache.spark.unsafe.types.UTF8String], chunkSize, stride)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.Kernels.chunkSpans($c, $chunkSize, $stride);")
-  override protected def withNewChildInternal(newChild: Expression): ChunkSpans =
-    copy(child = newChild)
-}
-
-object ChunkSpans {
-  val elementSchema: StructType = StructType(Seq(
-    StructField("start", IntegerType, nullable = false),
-    StructField("n_tokens", IntegerType, nullable = false),
-    StructField("chunk_text", StringType, nullable = false)))
-}
-
-/** Rolling (order-sensitive) token-chain hash: one primitive XXH64 loop per
-  * row, bit-identical to the interpreted `aggregate`+`xxhash64` fold it
-  * replaces (TextOpsSpec pins value equality against the fold form). */
-case class RollingTokenHash(child: Expression)
-    extends UnaryExpression with ExpectsInputTypes {
-  override def inputTypes: Seq[AbstractDataType] = Seq(ArrayType(StringType))
-  override def dataType: DataType = LongType
-  override def nullIntolerant: Boolean = true
-  override protected def nullSafeEval(input: Any): Any =
-    graft.Kernels.rollingTokenHash(input.asInstanceOf[ArrayData])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => s"${ev.value} = graft.Kernels.rollingTokenHash($c);")
-  override protected def withNewChildInternal(newChild: Expression): RollingTokenHash =
-    copy(child = newChild)
-}
-
-/** Rolling polynomial hashes of every k-codepoint window — the candidate
-  * generator of the exact-substring dedup tier; one primitive loop per
-  * row, see graft.Kernels.charWindowHashes. */
-case class CharWindowHashes(child: Expression, k: Int)
-    extends UnaryExpression with ExpectsInputTypes {
-  require(k >= 1, s"window size must be >= 1, got $k")
-  override def inputTypes: Seq[AbstractDataType] = Seq(StringType)
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullIntolerant: Boolean = true
-  override protected def nullSafeEval(input: Any): Any =
-    graft.Kernels.charWindowHashes(
-      input.asInstanceOf[org.apache.spark.unsafe.types.UTF8String], k)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.Kernels.charWindowHashes($c, $k);")
-  override protected def withNewChildInternal(newChild: Expression): CharWindowHashes =
-    copy(child = newChild)
-}
-
-/** BPE-pretokenizer segment count: one transition loop over char classes,
-  * exactly the matches of `[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s]` (TextStats
-  * pins kernel == regexp_count parity in its spec). */
-case class BpeTokenCountExpr(child: Expression)
-    extends UnaryExpression with ExpectsInputTypes {
-  override def inputTypes: Seq[AbstractDataType] = Seq(StringType)
-  override def dataType: DataType = IntegerType
-  override def nullIntolerant: Boolean = true
-  override protected def nullSafeEval(input: Any): Any =
-    graft.Kernels.bpeCount(input.asInstanceOf[org.apache.spark.unsafe.types.UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => s"${ev.value} = graft.Kernels.bpeCount($c);")
-  override protected def withNewChildInternal(newChild: Expression): BpeTokenCountExpr =
-    copy(child = newChild)
 }
 
 /**
@@ -614,15 +522,6 @@ case class StopwordLangId(child: Expression,
     copy(child = newChild)
 }
 
-/**
- * Fused PII scrub (graft.Kernels.piiScrub): one kernel call computes the
- * staged email -> phone -> IPv4 redaction AND the three per-stage match
- * counts that `Pii.counts` defines, replacing six regexp passes (3
- * regexp_count + 3 regexp_replace) with three anchor-jumping scans. At
- * 100 TB, PII scrubbing touches every byte of every document — halving the
- * pass count and removing the regex engine's per-position prefix scans is
- * the difference between linear and superlinear cost in token run length.
- */
 /** BPE-encoded symbol count under a rank-ordered merge list (see
   * graft.Kernels.bpeEncodeCount); the merges ride the closure like the
   * LM models below. */
@@ -770,169 +669,6 @@ case class RegistrableDomainPsl(child: Expression, suffixes: Seq[String])
     copy(child = newChild)
 }
 
-case class PiiScrub(child: Expression)
-    extends UnaryExpression with ExpectsInputTypes {
-  override def inputTypes: Seq[AbstractDataType] = Seq(StringType)
-  override def dataType: DataType = PiiScrub.schema
-  override def nullable: Boolean = true
-  override def nullIntolerant: Boolean = true
-  override protected def nullSafeEval(input: Any): Any =
-    graft.Kernels.piiScrub(input.asInstanceOf[org.apache.spark.unsafe.types.UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => s"${ev.value} = graft.Kernels.piiScrub($c);")
-  override protected def withNewChildInternal(newChild: Expression): PiiScrub =
-    copy(child = newChild)
-}
-
-object PiiScrub {
-  val schema: StructType = StructType(Seq(
-    StructField("redacted", StringType, nullable = false),
-    StructField("n_emails", IntegerType, nullable = false),
-    StructField("n_phones", IntegerType, nullable = false),
-    StructField("n_ips", IntegerType, nullable = false)))
-}
-
-/** CCNet-style ASCII text canonicalization (graft.Kernels.normalizeText):
-  * case fold, digit fold, punctuation strip, whitespace collapse + trim in
-  * one scan — semantics exactly the translate/regexp_replace/trim chain
-  * the kernel doc pins. */
-case class NormalizeText(child: Expression)
-    extends UnaryExpression with ExpectsInputTypes {
-  override def inputTypes: Seq[AbstractDataType] = Seq(StringType)
-  override def dataType: DataType = StringType
-  override def nullable: Boolean = true
-  override def nullIntolerant: Boolean = true
-  override protected def nullSafeEval(input: Any): Any =
-    graft.Kernels.normalizeText(input.asInstanceOf[org.apache.spark.unsafe.types.UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => s"${ev.value} = graft.Kernels.normalizeText($c);")
-  override protected def withNewChildInternal(newChild: Expression): NormalizeText =
-    copy(child = newChild)
-}
-
-/** WET-style markup-to-text extraction (graft.Kernels.stripMarkup): one
-  * scan dropping script/style blocks, stripping tags to spaces, decoding
-  * the six standard entities, and collapsing whitespace — semantics
-  * replayable as a regexp_replace/replace chain (see the kernel doc). */
-case class MarkupStrip(child: Expression)
-    extends UnaryExpression with ExpectsInputTypes {
-  override def inputTypes: Seq[AbstractDataType] = Seq(StringType)
-  override def dataType: DataType = StringType
-  override def nullable: Boolean = true
-  override def nullIntolerant: Boolean = true
-  override protected def nullSafeEval(input: Any): Any =
-    graft.Kernels.stripMarkup(input.asInstanceOf[org.apache.spark.unsafe.types.UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => s"${ev.value} = graft.Kernels.stripMarkup($c);")
-  override protected def withNewChildInternal(newChild: Expression): MarkupStrip =
-    copy(child = newChild)
-}
-
-/** Encoding-quality counters (graft.Kernels.encodingStats): code points,
-  * U+FFFD replacement chars, and disallowed control chars in one scan. */
-case class EncodingStats(child: Expression)
-    extends UnaryExpression with ExpectsInputTypes {
-  override def inputTypes: Seq[AbstractDataType] = Seq(StringType)
-  override def dataType: DataType = EncodingStats.schema
-  override def nullable: Boolean = true
-  override def nullIntolerant: Boolean = true
-  override protected def nullSafeEval(input: Any): Any =
-    graft.Kernels.encodingStats(input.asInstanceOf[org.apache.spark.unsafe.types.UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => s"${ev.value} = graft.Kernels.encodingStats($c);")
-  override protected def withNewChildInternal(newChild: Expression): EncodingStats =
-    copy(child = newChild)
-}
-
-object EncodingStats {
-  val schema: StructType = StructType(Seq(
-    StructField("n_chars", IntegerType, nullable = false),
-    StructField("n_replacement", IntegerType, nullable = false),
-    StructField("n_control", IntegerType, nullable = false)))
-}
-
-/** Hashing-trick feature buckets of the whitespace tokens
-  * (graft.Kernels.tokenBuckets): one Int per token, bucket =
-  * portableHash32(token) mod numBuckets — the Naive Bayes trainer's
-  * explode input and the exact bucket function its SQL oracle replays. */
-case class TokenBuckets(child: Expression, numBuckets: Int)
-    extends UnaryExpression with ExpectsInputTypes {
-  require(numBuckets >= 1, "numBuckets must be >= 1")
-  override def inputTypes: Seq[AbstractDataType] = Seq(StringType)
-  override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
-  override def nullIntolerant: Boolean = true
-  override protected def nullSafeEval(input: Any): Any =
-    graft.Kernels.tokenBuckets(
-      input.asInstanceOf[org.apache.spark.unsafe.types.UTF8String], numBuckets)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.Kernels.tokenBuckets($c, $numBuckets);")
-  override protected def withNewChildInternal(newChild: Expression): TokenBuckets =
-    copy(child = newChild)
-}
-
-/** Flesch–Kincaid surface counters (graft.Kernels.fkStats): words,
-  * sentence terminators (floored at 1), vowel-group syllables (floored at
-  * 1 per word) in one scan. */
-case class FkStats(child: Expression)
-    extends UnaryExpression with ExpectsInputTypes {
-  override def inputTypes: Seq[AbstractDataType] = Seq(StringType)
-  override def dataType: DataType = FkStats.schema
-  override def nullable: Boolean = true
-  override def nullIntolerant: Boolean = true
-  override protected def nullSafeEval(input: Any): Any =
-    graft.Kernels.fkStats(
-      input.asInstanceOf[org.apache.spark.unsafe.types.UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => s"${ev.value} = graft.Kernels.fkStats($c);")
-  override protected def withNewChildInternal(newChild: Expression): FkStats =
-    copy(child = newChild)
-}
-
-object FkStats {
-  val schema: StructType = StructType(Seq(
-    StructField("n_words", IntegerType, nullable = false),
-    StructField("n_sentences", IntegerType, nullable = false),
-    StructField("n_syllables", LongType, nullable = false)))
-}
-
-/** Count-min sketch update coordinates of a document's whitespace tokens
-  * (graft.Kernels.cmsPairs): depth packed Ints per token. Exploded and
-  * counted these ARE the sketch table. */
-case class CmsPairs(child: Expression, depth: Int, width: Int)
-    extends UnaryExpression with ExpectsInputTypes {
-  require(depth >= 1 && width >= 1, "depth and width must be >= 1")
-  override def inputTypes: Seq[AbstractDataType] = Seq(StringType)
-  override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
-  override def nullIntolerant: Boolean = true
-  override protected def nullSafeEval(input: Any): Any =
-    graft.Kernels.cmsPairs(
-      input.asInstanceOf[org.apache.spark.unsafe.types.UTF8String], depth, width)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.Kernels.cmsPairs($c, $depth, $width);")
-  override protected def withNewChildInternal(newChild: Expression): CmsPairs =
-    copy(child = newChild)
-}
-
-/** The depth packed sketch coordinates of ONE token — the probe side of
-  * [[CmsPairs]] (graft.Kernels.cmsTokenCoords). */
-case class CmsTokenCoords(child: Expression, depth: Int, width: Int)
-    extends UnaryExpression with ExpectsInputTypes {
-  require(depth >= 1 && width >= 1, "depth and width must be >= 1")
-  override def inputTypes: Seq[AbstractDataType] = Seq(StringType)
-  override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
-  override def nullIntolerant: Boolean = true
-  override protected def nullSafeEval(input: Any): Any =
-    graft.Kernels.cmsTokenCoords(
-      input.asInstanceOf[org.apache.spark.unsafe.types.UTF8String], depth, width)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.Kernels.cmsTokenCoords($c, $depth, $width);")
-  override protected def withNewChildInternal(newChild: Expression): CmsTokenCoords =
-    copy(child = newChild)
-}
-
 /** Hashed multinomial Naive Bayes scorer (graft.Kernels.nbScore): argmax
   * label + its integer micro-nat log-posterior under a Laplace-smoothed
   * hashed-feature model. The (|labels| × numBuckets) weight matrix and
@@ -972,63 +708,6 @@ object NbScore {
   val schema: StructType = StructType(Seq(
     StructField("pred", StringType, nullable = false),
     StructField("lp_micro", LongType, nullable = false)))
-}
-
-/** Gopher/MassiveText quality counters (graft.Kernels.gopherStats):
-  * words / alpha words / symbols / lines / bullet lines / ellipsis lines
-  * in one scan, all integers so threshold flags are bit-stable. */
-case class GopherStats(child: Expression)
-    extends UnaryExpression with ExpectsInputTypes {
-  override def inputTypes: Seq[AbstractDataType] = Seq(StringType)
-  override def dataType: DataType = GopherStats.schema
-  override def nullable: Boolean = true
-  override def nullIntolerant: Boolean = true
-  override protected def nullSafeEval(input: Any): Any =
-    graft.Kernels.gopherStats(input.asInstanceOf[org.apache.spark.unsafe.types.UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => s"${ev.value} = graft.Kernels.gopherStats($c);")
-  override protected def withNewChildInternal(newChild: Expression): GopherStats =
-    copy(child = newChild)
-}
-
-object GopherStats {
-  val schema: StructType = StructType(Seq(
-    StructField("n_words", IntegerType, nullable = false),
-    StructField("n_alpha_words", IntegerType, nullable = false),
-    StructField("n_symbols", IntegerType, nullable = false),
-    StructField("n_lines", IntegerType, nullable = false),
-    StructField("n_bullet_lines", IntegerType, nullable = false),
-    StructField("n_ellipsis_lines", IntegerType, nullable = false)))
-}
-
-/** Line/paragraph repetition counters (graft.Kernels.dupUnitStats): for
-  * each delimiter class (lines on `\n`, paragraphs on `\n\n`), counts and
-  * code-point char sums of non-empty units and of duplicate occurrences
-  * (an occurrence whose identical unit appeared earlier in the doc). */
-case class DupUnitStats(child: Expression)
-    extends UnaryExpression with ExpectsInputTypes {
-  override def inputTypes: Seq[AbstractDataType] = Seq(StringType)
-  override def dataType: DataType = DupUnitStats.schema
-  override def nullable: Boolean = true
-  override def nullIntolerant: Boolean = true
-  override protected def nullSafeEval(input: Any): Any =
-    graft.Kernels.dupUnitStats(input.asInstanceOf[org.apache.spark.unsafe.types.UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => s"${ev.value} = graft.Kernels.dupUnitStats($c);")
-  override protected def withNewChildInternal(newChild: Expression): DupUnitStats =
-    copy(child = newChild)
-}
-
-object DupUnitStats {
-  val schema: StructType = StructType(Seq(
-    StructField("n_lines", LongType, nullable = false),
-    StructField("n_dup_lines", LongType, nullable = false),
-    StructField("line_chars", LongType, nullable = false),
-    StructField("dup_line_chars", LongType, nullable = false),
-    StructField("n_paras", LongType, nullable = false),
-    StructField("n_dup_paras", LongType, nullable = false),
-    StructField("para_chars", LongType, nullable = false),
-    StructField("dup_para_chars", LongType, nullable = false)))
 }
 
 /**

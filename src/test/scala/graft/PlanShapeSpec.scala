@@ -2,7 +2,8 @@ package graft
 
 import graft.ts._
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
+import org.apache.spark.sql.execution.{InputAdapter, ProjectExec, SparkPlan, WholeStageCodegenExec}
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.execution.joins.{BroadcastNestedLoopJoinExec, CartesianProductExec}
 import org.apache.spark.sql.execution.SortExec
@@ -353,13 +354,39 @@ class PlanShapeSpec extends SparkTestBase {
       graft.llm.TextStats.stripMarkup(F.col("text")),
       graft.llm.TextStats.encodingStats(F.col("text")),
       graft.llm.TextStats.encodingKeep(F.col("text")),
-      graft.llm.TextStats.gopherStats(F.col("text")))
+      graft.llm.TextStats.gopherStats(F.col("text")),
+      graft.llm.Dedup.minHashSignature(F.col("text"), 8, 2).as("sig"),
+      graft.llm.Pii.redact(F.col("text")).as("redacted"),
+      graft.llm.Pii.scrub(F.col("text")).as("scrub"),
+      graft.llm.TextStats.langId(F.col("text")).as("lang"))
     exchanges(scan) shouldBe 0
     val flags = graft.llm.TextStats.gopherFilter(docs, "text")
     exchanges(flags) shouldBe 0
-    plan(flags).collect {
-      case w: org.apache.spark.sql.execution.WholeStageCodegenExec => w
-    } should not be empty
+    // every projection that calls a graft.Kernels method (a StaticInvoke,
+    // or one of the stateful expression classes) runs inside a whole-stage
+    // codegen stage: a kernel that silently lost codegen (a CodegenFallback
+    // node, a too-wide projection) fails here
+    Seq(scan, flags).foreach { df =>
+      val p = plan(df)
+      val kernelProjects = p.collect {
+        case pr: ProjectExec if pr.expressions.exists(_.exists {
+          case si: StaticInvoke => si.objectName == "graft.Kernels"
+          case e => e.getClass.getPackage.getName == "org.apache.spark.sql.graft"
+        }) => pr
+      }
+      // a stage ends at its InputAdapters; what lies below runs outside it
+      def stage(n: SparkPlan): Seq[SparkPlan] = n match {
+        case _: InputAdapter => Nil
+        case _ => n +: n.children.flatMap(stage)
+      }
+      val codegened = p.collect { case w: WholeStageCodegenExec => stage(w.child) }.flatten
+      withClue(p.toString) {
+        kernelProjects should not be empty
+        kernelProjects.filterNot(pr => codegened.exists(_ eq pr)) shouldBe empty
+      }
+    }
+    plan(scan).toString should (include("graft.Kernels.minHashSig") and
+      include("graft.Kernels.piiScrub") and include("stopwordlangid"))
   }
 
   it should "plan incremental dedup without windows, sorts, or cartesians" in {

@@ -661,7 +661,7 @@ class DedupSpec extends SparkTestBase {
 
   it should "run the window-hash kernel twice: count branch and probe side" in {
     // the >= 2-site prefilter counts hashes in one branch and semi-joins
-    // the sites in another, and each evaluates charwindowhashes over the
+    // the sites in another, and each evaluates charWindowHashes over the
     // corpus; a form that claims a single kernel pass must move this pin
     val d = Seq((1L, "xx hello world! yy"), (2L, "hello world! qq rr"))
       .toDF("id", "text")
@@ -669,7 +669,7 @@ class DedupSpec extends SparkTestBase {
       .queryExecution.executedPlan
     val kernels = p.collectWithSubqueries {
       case g: org.apache.spark.sql.execution.GenerateExec
-          if g.generator.toString.contains("charwindowhashes") => g
+          if g.generator.toString.contains("graft.Kernels.charWindowHashes") => g
     }
     withClue(p.toString) { kernels should have size 2 }
   }
