@@ -6,7 +6,8 @@ before/after dumps diff directly:
 
 Lambda variable numbers (`lambda x_5`) and RDD ids (`MapPartitionsRDD[270]`)
 count up per session and move when PlanDump builds a query twice, so both
-are replaced by `K`. Pass `--counters-only` for a `before` file.
+are replaced by `N`, the way PlanDump itself now rewrites them. Pass
+`--counters-only` for a `before` file.
 
     python3 normalize.py q_after.txt > a.txt
     python3 normalize.py --counters-only q_before.txt > b.txt
@@ -55,8 +56,8 @@ def kernels(text):
 
 
 def counters(text):
-    text = re.sub(r"lambda ([a-z])_\d+", r"lambda \1_K", text)
-    return re.sub(r"RDD\[\d+\]", "RDD[K]", text)
+    text = re.sub(r"lambda ([a-z]+)_\d+", r"lambda \1_N", text)
+    return re.sub(r"RDD\[\d+\]", "RDD[N]", text)
 
 
 if __name__ == "__main__":

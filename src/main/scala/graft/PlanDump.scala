@@ -40,13 +40,17 @@ object PlanDump {
         val t3 = System.nanoTime()
         f" build=${(t1 - t0) / 1e9}%.3f plan=${(t2 - t1) / 1e9}%.3f exec=${(t3 - t2) / 1e9}%.3f"
       }
-      // expression ids (#123, #123L) become #N and exchange ids
-      // (plan_id=123) plan_id=N: both count up across the session, so
-      // without this two dumps of the same plan never diff clean
+      // expression ids (#123, #123L) become #N, exchange ids
+      // (plan_id=123) plan_id=N, lambda variables (lambda x_123) x_N and
+      // RDD ids (MapPartitionsRDD[123]) RDD[N]: all four count up across
+      // the session, so without this two dumps of the same plan never diff
+      // clean
       val txt = df.queryExecution.explainString(
           org.apache.spark.sql.execution.FormattedMode)
         .replaceAll("#\\d+L?\\b", "#N")
         .replaceAll("plan_id=\\d+", "plan_id=N")
+        .replaceAll("lambda ([a-z]+)_\\d+", "lambda $1_N")
+        .replaceAll("RDD\\[\\d+\\]", "RDD[N]")
       java.nio.file.Files.write(
         java.nio.file.Paths.get(outDir, s"${n}_$suffix.txt"),
         txt.getBytes(java.nio.charset.StandardCharsets.UTF_8))

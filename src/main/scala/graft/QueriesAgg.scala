@@ -305,7 +305,7 @@ object QueriesAgg {
           FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""",
     "summarize_ols" ->
       // mirrors the Gaussian-elimination-without-pivoting order of the
-      // OLS aggregator: f = Sx/n; slope = (Sxy - f*Sy)/(Sxx - f*Sx);
+      // OLS fit: f = Sx/n; slope = (Sxy - f*Sy)/(Sxx - f*Sx);
       // intercept = (Sy - Sx*slope)/n; r2 from SSR/SST computational forms
       """WITH s AS (
            SELECT l_returnflag, CAST(count(*) AS DOUBLE) AS n, count(*) AS samples,
@@ -320,7 +320,7 @@ object QueriesAgg {
            1.0 - ((syy - (intercept * sy + slope * sxy)) / (syy - (sy / n) * sy)) AS r2
          FROM u ORDER BY l_returnflag""",
     "summarize_ols_ext" ->
-      // mirrors finish()'s op order: g = Sxx - f*Sx (elimination pivot),
+      // mirrors OLSAggregate.fit's op order: g = Sxx - f*Sx (elimination pivot),
       // diag of (X'X)^-1 via the same back-substitution arithmetic,
       // sigma2 = ssr/(n-2); transcendental outputs rounded (9), cond (6,
       // Jacobi vs closed-form eigenvalues differ in low-order bits)

@@ -273,6 +273,13 @@ object Dedup {
           minHashSignature(F.col(textCol), numHashes, shingleSize),
           bands, rowsPerBand)).as("bk"))
       .select(F.col("bk.band").as("band"), F.col("bk.bucket").as("bucket"))
+    bucketAudit(buckets, maxBucketSize)
+  }
+
+  /** The per-band rollup both bucket audits report: `(band, n_buckets,
+    * n_truncated_buckets, n_dropped_ids)` of `(band, bucket)` rows under
+    * the cap `maxBucketSize`. */
+  private def bucketAudit(buckets: DataFrame, maxBucketSize: Int): DataFrame =
     buckets.groupBy("band", "bucket").agg(F.count(F.lit(1)).as("n"))
       .groupBy("band").agg(
         F.count(F.lit(1)).as("n_buckets"),
@@ -281,9 +288,8 @@ object Dedup {
         F.sum(F.greatest(F.col("n") - maxBucketSize, F.lit(0L)))
           .as("n_dropped_ids"))
       .orderBy("band")
-  }
 
-  /** All ordered pairs (a<b) of a sorted id array, as array<struct<a,b>>. */
+  /** All ordered pairs (a<b) of a sorted array, as array<struct<a,b>>. */
   private def pairsOf(ids: Column): Column =
     F.flatten(F.transform(ids, (a, i) =>
       F.transform(F.slice(ids, i + 2, F.size(ids)), b =>
@@ -325,20 +331,15 @@ object Dedup {
       s"maxHamming=$maxHamming exceeds the pigeonhole completeness bound " +
         s"bands-1=${bands - 1}; widen bands (e.g. bands=${maxHamming + 1}) " +
         "instead of accepting a silently-incomplete pair set")
-    val width = 64 / bands
-    val mask = if (width == 64) -1L else (1L << width) - 1L
     val withSketch = df.select(F.col(idCol).as("id"), sketch(F.col(textCol)).as("sk"))
-    val bandStructs = (0 until bands).map(b =>
-      F.struct(F.lit(b).as("band"),
-        F.shiftright(F.col("sk"), b * width).bitwiseAND(F.lit(mask)).as("bucket")))
     val banded = withSketch.select(F.col("id"), F.col("sk"),
-      F.explode(F.array(bandStructs: _*)).as("bk"))
+      F.explode(simHashBands(F.col("sk"), bands)).as("bk"))
       .select(F.col("id"), F.col("sk"), F.col("bk.band"), F.col("bk.bucket"))
     val pairs = banded.groupBy("band", "bucket")
       .agg(F.slice(F.array_sort(F.collect_list(F.struct(F.col("id"), F.col("sk")))),
         1, maxBucketSize).as("xs"))
       .filter(F.size(F.col("xs")) > 1)
-      .select(F.explode(pairsOf2(F.col("xs"))).as("p"))
+      .select(F.explode(pairsOf(F.col("xs"))).as("p"))
       .select(F.col("p.a.id").as("id_a"), F.col("p.b.id").as("id_b"),
         F.bit_count(F.col("p.a.sk").bitwiseXOR(F.col("p.b.sk"))).as("hamming"))
       .distinct()
@@ -359,33 +360,26 @@ object Dedup {
                          bands: Int = 4): DataFrame = {
     require(bands > 0 && 64 % bands == 0,
       s"bands must divide 64, got $bands")
-    val width = 64 / bands
-    val mask = if (width == 64) -1L else (1L << width) - 1L
     // Same input projection as simHashPairs — id selected (then pruned by
     // Catalyst: the audit counts rows, ids never affect it) so a missing /
     // mistyped id column fails here exactly as it would in the pair miner,
     // and the two signatures cannot drift silently.
     val withSketch =
       df.select(F.col(idCol).as("id"), sketch(F.col(textCol)).as("sk"))
-    val bandStructs = (0 until bands).map(b =>
-      F.struct(F.lit(b).as("band"),
-        F.shiftright(F.col("sk"), b * width).bitwiseAND(F.lit(mask)).as("bucket")))
-    withSketch.select(F.explode(F.array(bandStructs: _*)).as("bk"))
-      .select(F.col("bk.band").as("band"), F.col("bk.bucket").as("bucket"))
-      .groupBy("band", "bucket").agg(F.count(F.lit(1)).as("n"))
-      .groupBy("band").agg(
-        F.count(F.lit(1)).as("n_buckets"),
-        F.sum(F.when(F.col("n") > maxBucketSize, 1L).otherwise(0L))
-          .as("n_truncated_buckets"),
-        F.sum(F.greatest(F.col("n") - maxBucketSize, F.lit(0L)))
-          .as("n_dropped_ids"))
-      .orderBy("band")
+    bucketAudit(withSketch.select(F.explode(simHashBands(F.col("sk"), bands)).as("bk"))
+      .select(F.col("bk.band").as("band"), F.col("bk.bucket").as("bucket")),
+      maxBucketSize)
   }
 
-  private def pairsOf2(xs: Column): Column =
-    F.flatten(F.transform(xs, (a, i) =>
-      F.transform(F.slice(xs, i + 2, F.size(xs)), b =>
-        F.struct(a.as("a"), b.as("b")))))
+  /** A 64-bit sketch's `bands` equal-width bands as an array of
+    * `(band, bucket)` structs, the bucket being the band's bits. */
+  private def simHashBands(sk: Column, bands: Int): Column = {
+    val width = 64 / bands
+    val mask = if (width == 64) -1L else (1L << width) - 1L
+    F.array((0 until bands).map(b =>
+      F.struct(F.lit(b).as("band"),
+        F.shiftright(sk, b * width).bitwiseAND(F.lit(mask)).as("bucket"))): _*)
+  }
 
   /**
    * Duplicate-cluster assignment: connected components over an undirected

@@ -95,15 +95,9 @@ object PyApi {
                            mode: String): Unit =
     Sources.writeTimePartitioned(df, path, granularity, mode)
 
-  /** JSONL corpus read; canonizes `timeCol` only when that column exists
-    * in the data (document corpora usually have no time axis). */
-  def fromJsonl(spark: SparkSession, path: String, timeCol: String,
-                unitToNanos: Long, optKeys: JList[String],
-                optVals: JList[String]): DataFrame =
-    Sources.fromJsonl(spark, path, None, timeCol, unitToNanos,
-      seq(optKeys).zip(seq(optVals)).toMap)
-
-  /** [[fromJsonl]] + canonization status as `[frame, Boolean]` (py4j
+  /** JSONL corpus read ([[Sources.fromJsonl]]; canonizes `timeCol` only
+    * when that column exists in the data — document corpora usually have
+    * no time axis) + canonization status as `[frame, Boolean]` (py4j
     * array). The Python reader keys its nanos range filter on the flag —
     * NOT on an output column named "time", which can exist un-canonized
     * when the data carries a raw column of that name but the configured

@@ -17,16 +17,18 @@ import org.apache.spark.sql.types._
  *
  *  - **summarize** ([[exponentialSmoothing]], [[ewma]], [[emaHalfLife]]):
  *    one value per key. The sequential recursion telescopes to a
- *    closed-form weighted sum — Σᵢ termᵢ·e^{k·(tmax−tᵢ)/p} — so it is
- *    evaluated as a *plain distributable aggregate*: per-key extremes are
- *    computed by an ordinary groupBy and broadcast-joined back (tiny: one
- *    row per key), the per-row decay weights are codegen'd arithmetic at
- *    full scan parallelism, and the final sums use normal partial/final
- *    aggregation. `ewma` in duration mode needs no window at all; the
- *    `exponentialSmoothing` interpolations reference the previous row, so
- *    one `lag()` window pass remains (that pass is per-key sequential — the
- *    inherent cost of neighbor-dependent semantics in a declarative plan —
- *    but it does only the lag; all heavy math and sums stay parallel).
+ *    closed-form weighted sum — Σᵢ termᵢ·e^{k·(tmax−tᵢ)/p} over elapsed
+ *    time, Σᵢ xᵢ·e^{k·rᵢ} over a constant period per row (rᵢ = the key's
+ *    rows after row i) — so it is evaluated as a *plain distributable
+ *    aggregate*: the per-row decay weights are codegen'd arithmetic and the
+ *    final sums use normal partial/final aggregation. `ewma` in duration
+ *    mode needs no window at all (per-key extremes come from an ordinary
+ *    groupBy joined back: one row per key); constant-period `ewma` counts rᵢ
+ *    with one `row_number()` window, and the `exponentialSmoothing`
+ *    interpolations reference the previous row through one `lag()` window
+ *    (such a pass is per-key sequential — the inherent cost of
+ *    order-dependent semantics in a declarative plan — but it only numbers
+ *    or lags rows; all heavy math and sums stay parallel).
  *
  *  - **per-row** ([[exponentialSmoothingRows]], [[ewmaRows]]): the running
  *    EMA appended to every input row (≙ the reference's EMA summarizers
@@ -139,17 +141,21 @@ object EmaOps {
            convention: String = "legacy"): DataFrame = {
     require(Seq("core", "legacy").contains(convention))
     val k = math.log(1.0 - alpha)
-    if (durationPerPeriod.equalsIgnoreCase("constant")) {
-      // index-based decay needs an ordered scan; runs at full partition
-      // parallelism via the composable two-phase scan
-      return scanGroups(df, xCol, key, s"${xCol}_ewma")(() =>
-        new EwmaState(k, constant = true, 1.0, convention))
-    }
-    // Duration mode telescopes to Σ x_i·e^{k(tmax-t_i)/p}: no window, no
-    // ordered scan — per-key tmax broadcast-joined, then one aggregation.
-    val perPeriod = TimeSeriesOps.parseDuration(durationPerPeriod).toDouble
-    val base = withKeyStats(project(df, xCol, key), key)
-    val wgt = F.exp(F.lit(k) * ((F.col("__tmax") - F.col("__t")) / perPeriod))
+    val (base, wgt) =
+      if (durationPerPeriod.equalsIgnoreCase("constant")) {
+        // one period per row: decay by the number of later rows of the key,
+        // counted in the (time, x) order the per-row scan uses
+        val later = Window.partitionBy(key.map(F.col): _*)
+          .orderBy(F.col("__t").desc, F.col("__x").desc)
+        (project(df, xCol, key).withColumn("__r", F.row_number().over(later) - 1),
+          F.exp(F.lit(k) * F.col("__r")))
+      } else {
+        // Duration mode telescopes to Σ x_i·e^{k(tmax-t_i)/p}: no window, no
+        // ordered scan — per-key tmax broadcast-joined, then one aggregation.
+        val perPeriod = TimeSeriesOps.parseDuration(durationPerPeriod).toDouble
+        (withKeyStats(project(df, xCol, key), key),
+          F.exp(F.lit(k) * ((F.col("__tmax") - F.col("__t")) / perPeriod)))
+      }
     val grouped = base.groupBy(key.map(F.col): _*).agg(
         F.sum(F.col("__x") * wgt).as("__p"), F.sum(wgt).as("__a"))
       // keyless groupBy() emits one global row even for empty input (§ the
@@ -373,111 +379,6 @@ object EmaOps {
           b.primary + decay * a.primary, b.auxiliary + decay * a.auxiliary,
           0L, 0.0, b.prevT, 0.0, a.n + b.n)
       }
-  }
-
-  /** One value per key group from an ordered scan, at full partition
-    * parallelism (constant-period ewma only; everything else uses the
-    * closed form). Same two-phase shape as [[runningScan]], except the
-    * per-partition key-run summaries flow as DATA through a metadata-sized
-    * shuffle instead of a driver collect: phase 1 scans each range
-    * partition and emits one summary row per key-run it contains; phase 2
-    * repartitions the summaries by key (one row per (key, partition) —
-    * tiny) and composes each key's time-ordered segments into the final
-    * value. Keyless input has #partitions summary rows total, so its
-    * compose step coalesces to one task over metadata, not over data.
-    * Null/NaN x rows are skipped (FilterNullInput). */
-  private def scanGroups(df: DataFrame, xCol: String, key: Seq[String],
-                         outName: String)(mk: () => RunningState): DataFrame = {
-    val nKey = key.length
-    val sortCols = (key :+ TimeColumn).map(F.col)
-    val projected = df.select(
-      (key.map(F.col) :+ F.col(TimeColumn) :+
-        F.col(xCol).cast("double").as("__x")): _*)
-    // x joins the sort keys so equal-(key, time) ties order identically in
-    // every job/run: the scanned (t, x) sequence — and therefore the state
-    // — becomes a pure function of the data, not of shuffle fetch order
-    val sorted = projected.repartitionByRange(sortCols: _*)
-      .sortWithinPartitions((sortCols :+ F.col("__x")): _*)
-
-    val keyFields = key.map(k => df.schema(df.schema.fieldIndex(k)))
-    val sumSchema = StructType(keyFields ++ Seq(
-      StructField("__runMinT", LongType, nullable = false),
-      StructField("__has", BooleanType, nullable = false),
-      StructField("__p", DoubleType, nullable = false),
-      StructField("__a", DoubleType, nullable = false),
-      StructField("__ft", LongType, nullable = false),
-      StructField("__fx", DoubleType, nullable = false),
-      StructField("__pt", LongType, nullable = false),
-      StructField("__px", DoubleType, nullable = false),
-      StructField("__n", LongType, nullable = false)))
-    val sumEnc = org.apache.spark.sql.Encoders.row(sumSchema)
-
-    // Phase 1: one summary row per key-run per partition.
-    val summaries = sorted.mapPartitions { it =>
-      val buf = it.buffered
-      new Iterator[Row] {
-        def hasNext: Boolean = buf.hasNext
-        def next(): Row = {
-          val head = buf.head
-          val keyVals = (0 until nKey).map(head.get)
-          val runMinT = head.getLong(nKey)
-          val st = mk()
-          def same: Boolean = buf.hasNext &&
-            (0 until nKey).forall(i => buf.head.get(i) == keyVals(i))
-          while (same) {
-            val r = buf.next()
-            // null = absent (FilterNullInput); NaN is a VALUE and poisons
-            // state, exactly like the per-row scan and the closed forms
-            if (!r.isNullAt(nKey + 1))
-              st.update(r.getLong(nKey), r.getDouble(nKey + 1))
-          }
-          val s = st.summary
-          Row.fromSeq(keyVals ++ Seq(runMinT, s.has, s.primary, s.auxiliary,
-            s.firstT, s.firstX, s.prevT, s.prevX, s.n))
-        }
-      }
-    }(sumEnc)
-
-    // Phase 2: compose each key's time-ordered segments (tiny input).
-    // repartition, NOT coalesce: coalesce(1) is a narrow dependency that
-    // would collapse the whole phase-1 scan into the same single task; the
-    // shuffle barrier keeps phase 1 parallel and moves only the
-    // metadata-sized summary rows.
-    val parted =
-      if (key.isEmpty) summaries.repartition(1)
-      else summaries.repartition(key.map(F.col): _*)
-    val ordered = parted.sortWithinPartitions(
-      (key.map(F.col) :+ F.col("__runMinT")): _*)
-    val outSchema = StructType(
-      StructField(TimeColumn, LongType, nullable = false) +:
-        keyFields :+ StructField(outName, DoubleType, nullable = true))
-    val outEnc = org.apache.spark.sql.Encoders.row(outSchema)
-
-    ordered.mapPartitions { it =>
-      val buf = it.buffered
-      new Iterator[Row] {
-        def hasNext: Boolean = buf.hasNext
-        def next(): Row = {
-          val head = buf.head
-          val keyVals = (0 until nKey).map(head.get)
-          val helper = mk()
-          var acc = ScanSummary.empty
-          def same: Boolean = buf.hasNext &&
-            (0 until nKey).forall(i => buf.head.get(i) == keyVals(i))
-          while (same) {
-            val r = buf.next()
-            acc = helper.compose(acc, ScanSummary(
-              r.getBoolean(nKey + 1), r.getDouble(nKey + 2), r.getDouble(nKey + 3),
-              r.getLong(nKey + 4), r.getDouble(nKey + 5), r.getLong(nKey + 6),
-              r.getDouble(nKey + 7), r.getLong(nKey + 8)))
-          }
-          val st = mk()
-          st.prime(acc)
-          val v = st.value
-          Row.fromSeq(0L +: keyVals :+ (if (v.isNaN) null else v))
-        }
-      }
-    }(outEnc)
   }
 
   /** Per-partition pass-1 report: the boundary key-runs of one partition.

@@ -249,11 +249,6 @@ object Summarizers {
     compose((for { x <- xs; y <- ys } yield correlation(x, y)): _*)
   }
 
-  /** Raw algebraic state of the moment family — n, Σx, Σx², Σx³, Σx⁴ —
-    * the buffer every moment-based summarizer is derived from
-    * (≙ summarizeState's expose-the-buffer debugging role,
-    * TimeSeriesRDD.scala:1196; our expression recipes have no hidden
-    * buffer, so the power sums ARE the state). */
   /**
    * Raw algebraic state of ANY summarizer recipe (≙ summarizeState for
    * arbitrary summarizers, reference TimeSeriesRDD.scala:1196): re-builds
@@ -261,10 +256,10 @@ object Summarizers {
    * aggregate it registers (the partial-aggregation buffer Catalyst
    * actually carries), and emits those as `state_0..state_k` in first-use
    * order. Works for every expression recipe — variance exposes its power
-   * sums, weighted correlation its seven shared weighted sums; a recipe
-   * built on a single opaque Aggregator (OLSRegression, quantile) exposes
-   * that aggregate's rendered output as one state column — use
-   * [[olsState]] for the OLS normal-equation buffer as plain sums.
+   * sums, weighted correlation its seven shared weighted sums, OLSRegression
+   * its Gram sums (those of [[olsState]]) plus its smallest weight; a recipe
+   * built on a single opaque aggregate (quantile) exposes that aggregate's
+   * rendered output as one state column.
    */
   def stateOf(s: Summarizer): Summarizer = Summarizer { ctx =>
     val m = scala.collection.mutable.LinkedHashMap.empty[String, Column]
@@ -274,32 +269,49 @@ object Summarizers {
 
   /**
    * OLS normal-equation state as plain distributable sums (the Gram
-   * buffer of [[OLSRegression]], ≙ the reference OLS summarizer's
-   * (count, Σln w, X'WX, X'Wy, y'Wy) state): design vector
+   * buffer [[OLSRegression]] is solved from, ≙ the reference OLS
+   * summarizer's (count, Σln w, X'WX, X'Wy, y'Wy) state): design vector
    * g = [1, xs...], entries `ols_state_g_<i>_<j>` = Σ w·gᵢgⱼ (upper
    * triangle), `ols_state_b_<i>` = Σ w·gᵢy, plus n, Σln w and Σ w·y².
-   * Rows with any null input or w <= 0 are excluded — the same row filter
-   * OLSRegression applies. */
+   * Rows with any null input or w <= 0 are excluded (OLSRegression keeps
+   * the w <= 0 rows). */
   def olsState(y: String, xs: Seq[String], weight: Option[String] = None): Summarizer =
     Summarizer { c =>
-      val d = xs.length + 1
-      val w0 = weight.map(F.col(_).cast("double")).getOrElse(F.lit(1.0))
-      val ok = (F.col(y).isNotNull +: xs.map(F.col(_).isNotNull))
-        .reduce(_ && _) && w0.isNotNull && (w0 > 0.0)
-      def g(i: Int): Column =
-        if (i == 0) F.lit(1.0) else F.col(xs(i - 1)).cast("double")
-      def term(col: Column): Column = c.in(F.when(ok, col))
-      val yv = F.col(y).cast("double")
-      Seq(
-        "ols_state_n" -> c.agg(F.count(term(w0))),
-        "ols_state_sum_ln_w" -> c.agg(F.sum(term(F.log(w0))))) ++
-        (for (i <- 0 until d; j <- i until d) yield
-          s"ols_state_g_${i}_$j" -> c.agg(F.sum(term(w0 * g(i) * g(j))))) ++
-        (for (i <- 0 until d) yield
-          s"ols_state_b_$i" -> c.agg(F.sum(term(w0 * g(i) * yv)))) :+
-        ("ols_state_syy" -> c.agg(F.sum(term(w0 * yv * yv))))
+      val w = olsWeight(weight)
+      olsSums(c, y, xs, w, olsComplete(y, xs, w) && (w > 0.0))
     }
 
+  private def olsWeight(weight: Option[String]): Column =
+    weight.map(F.col(_).cast("double")).getOrElse(F.lit(1.0))
+
+  /** y, every x and the weight non-null. */
+  private def olsComplete(y: String, xs: Seq[String], w: Column): Column =
+    (F.col(y).isNotNull +: xs.map(F.col(_).isNotNull)).reduce(_ && _) && w.isNotNull
+
+  /** The Gram sums over the rows `ok` (and the context's where) keeps,
+    * named and ordered as [[olsState]] emits them. */
+  private def olsSums(c: SummarizerCtx, y: String, xs: Seq[String], w: Column,
+                      ok: Column): Seq[(String, Column)] = {
+    val d = xs.length + 1
+    def g(i: Int): Column =
+      if (i == 0) F.lit(1.0) else F.col(xs(i - 1)).cast("double")
+    def term(col: Column): Column = c.in(F.when(ok, col))
+    val yv = F.col(y).cast("double")
+    Seq(
+      "ols_state_n" -> c.agg(F.count(term(w))),
+      "ols_state_sum_ln_w" -> c.agg(F.sum(term(F.log(w))))) ++
+      (for (i <- 0 until d; j <- i until d) yield
+        s"ols_state_g_${i}_$j" -> c.agg(F.sum(term(w * g(i) * g(j))))) ++
+      (for (i <- 0 until d) yield
+        s"ols_state_b_$i" -> c.agg(F.sum(term(w * g(i) * yv)))) :+
+      ("ols_state_syy" -> c.agg(F.sum(term(w * yv * yv))))
+  }
+
+  /** Raw algebraic state of the moment family — n, Σx, Σx², Σx³, Σx⁴ —
+    * the buffer every moment-based summarizer is derived from
+    * (≙ summarizeState's expose-the-buffer debugging role,
+    * TimeSeriesRDD.scala:1196; our expression recipes have no hidden
+    * buffer, so the power sums ARE the state). */
   def momentsState(x: String): Summarizer = Summarizer { c =>
     val v = c.in(x).cast("double")
     Seq(
@@ -562,19 +574,23 @@ object Summarizers {
   }
 
   /**
-   * Streaming weighted OLS with intercept (≙ Summarizers.OLSRegression,
+   * Weighted OLS with intercept (≙ Summarizers.OLSRegression,
    * Summarizers.scala:325): one struct-typed output column
    * `<y>_OLSRegression` with fields samples / beta / intercept / rSquared /
-   * stdErr_beta / tStat_beta. Gram-matrix Aggregator — distributes via
-   * partial aggregation like any builtin.
+   * stdErr_beta / tStat_beta and the extended diagnostics
+   * (`graft.ts.agg.OLSAggregate.outSchema`). The [[olsState]] Gram sums
+   * over the rows whose y (after `where`), xs and weight are non-null —
+   * w <= 0 rows included, as in the reference — plus the smallest weight,
+   * solved per group by one `OLSAggregate.fit` call.
    */
   def OLSRegression(y: String, xs: Seq[String], weight: Option[String] = None): Summarizer =
     Summarizer { c =>
-      val fn = graft.ts.agg.OLSAggregate.olsUdaf(xs.length)
-      val w = weight.map(F.col(_).cast("double")).getOrElse(F.lit(1.0))
-      val args = (c.in(F.col(y).cast("double")) +:
-        xs.map(x => F.col(x).cast("double"))) :+ w
-      Seq(s"${y}_OLSRegression" -> c.agg(fn(args: _*)))
+      val w = olsWeight(weight)
+      val ok = olsComplete(y, xs, w)
+      val sums = olsSums(c, y, xs, w, ok).map(_._2)
+      val minW = c.agg(F.min(c.in(F.when(ok, w))))
+      Seq(s"${y}_OLSRegression" -> org.apache.spark.sql.graft.GraftColumns.olsFit(
+        F.array(sums.tail :+ minW: _*), sums.head, xs.length))
     }
 
   /** Collect the group's rows as array<struct> sorted by time; column `rows`

@@ -1,24 +1,20 @@
 package graft.ts.agg
 
-import org.apache.spark.sql.{Column, Encoder, Encoders, Row}
-import org.apache.spark.sql.expressions.Aggregator
-import org.apache.spark.sql.functions.udaf
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
+import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
 
-/** Gram-matrix buffer for streaming (weighted) OLS: X'WX upper triangle,
-  * X'Wy, y'Wy, per-column Σw·x, Σln(w), Σw, n — a fixed-width mergeable
-  * state, so Spark's partial aggregation distributes it like any other
-  * aggregate (≙ OLSRegressionSummarizer's state,
-  * /root/reference/src/main/scala/com/twosigma/flint/rdd/function/summarize/
-  * summarizer/subtractable/OLSRegressionSummarizer.scala:66-366). */
-final case class OLSBuf(xtx: Array[Double], xty: Array[Double],
-                        xsum: Array[Double], yy: Double, lw: Double,
-                        sw: Double, n: Long)
-
 /**
- * Streaming weighted OLS with intercept as a Spark `Aggregator`, registered
- * via `functions.udaf` — usable in summarize / cycles / intervals / windows
- * like every other summarizer. Solves the normal equations by Gaussian
+ * Weighted OLS with intercept solved from its Gram sums (≙ the state of the
+ * reference's summarizer/subtractable/OLSRegressionSummarizer.scala:66-366,
+ * X'WX, X'Wy, y'Wy, Σ ln w and the count). The sums
+ * themselves are plain Catalyst aggregates built by `Summarizers`
+ * (`OLSRegression`, `olsState`), so they distribute through ordinary partial
+ * aggregation and evaluate over windows like every other summarizer; this
+ * object owns their layout and the row-free math on top: [[fit]] renders the
+ * result struct, called once per group through `StaticInvoke`
+ * (`GraftColumns.olsFit`). The normal equations are solved by Gaussian
  * elimination WITHOUT pivoting (deterministic op order; the Gram matrix of a
  * well-scaled design is positive definite, the reference relies on the same
  * property).
@@ -42,15 +38,7 @@ final case class OLSBuf(xtx: Array[Double], xty: Array[Double],
  */
 object OLSAggregate {
 
-  /** Registered udaf: call with (y, x1..xk, w) columns — a Row input
-    * encoder surfaces each field as a separate SQL argument. */
-  def olsUdaf(k: Int, hasIntercept: Boolean = true)
-      : org.apache.spark.sql.expressions.UserDefinedFunction = {
-    val agg = new OLSAgg(k, hasIntercept)
-    udaf(agg, agg.inputEncoder)
-  }
-
-  private[agg] val outSchema = StructType(Seq(
+  val outSchema: StructType = StructType(Seq(
     StructField("samples", LongType),
     StructField("beta", ArrayType(DoubleType)),
     StructField("intercept", DoubleType),
@@ -64,6 +52,73 @@ object OLSAggregate {
     StructField("bayesIC", DoubleType),
     StructField("cond", DoubleType),
     StructField("constantsCoordinates", ArrayType(IntegerType))))
+
+  /**
+   * The [[outSchema]] struct for `k` regressors plus intercept (design
+   * g = [1, x_1..x_k], width d = k + 1) from the row count `n` and
+   * `sums` = [Σ ln w, Σ w·gᵢgⱼ (i ≤ j, row-major upper triangle), Σ w·gᵢy,
+   * Σ w·y², min w] — `Summarizers.olsState`'s order after its count, plus
+   * the smallest weight. Spark's `log` is null for w <= 0, so Σ ln w only
+   * covers positive weights; min w restores the JVM sum's −∞ (a zero
+   * weight) or NaN (a negative one). Fewer than d + 1 rows render
+   * `samples` and nulls.
+   */
+  def fit(sums: ArrayData, n: Long, k: Int): InternalRow = {
+    val d = k + 1
+    if (n < d + 1) {
+      val out = new Array[Any](outSchema.length)
+      out(0) = n
+      return new GenericInternalRow(out)
+    }
+    val tri = d * (d + 1) / 2
+    // unpack upper triangle to full symmetric matrix
+    val a = new Array[Double](d * d)
+    var idx = 0
+    var i = 0
+    while (i < d) {
+      var j = i
+      while (j < d) {
+        val v = sums.getDouble(1 + idx)
+        a(i * d + j) = v; a(j * d + i) = v; idx += 1; j += 1
+      }
+      i += 1
+    }
+    val xty = Array.tabulate(d)(i => sums.getDouble(1 + tri + i))
+    val yy = sums.getDouble(1 + tri + d)
+    val minW = sums.getDouble(2 + tri + d)
+    val lw = (if (sums.isNullAt(0)) 0.0 else sums.getDouble(0)) +
+      (if (minW < 0.0) Double.NaN else if (minW == 0.0) Double.NegativeInfinity else 0.0)
+    val sw = a(0) // Σ w·1·1
+    val beta = solve(a, xty, d)
+    // SSR = y'Wy − β'X'Wy ; SST = y'Wy − (Σwy)²/Σw
+    var bty = 0.0
+    i = 0
+    while (i < d) { bty += beta(i) * xty(i); i += 1 }
+    val ssr = yy - bty
+    val sst = yy - (xty(0) / sw) * xty(0)
+    val r2 = 1.0 - ssr / sst
+    val sigma2 = ssr / (n - d)
+    val diag = invDiag(a, d)
+    val stdErr = Array.tabulate(k)(j => math.sqrt(sigma2 * diag(j + 1)))
+    val betas = Array.tabulate(k)(j => beta(j + 1))
+    val t = Array.tabulate(k)(j => betas(j) / stdErr(j))
+    val seI = math.sqrt(sigma2 * diag(0))
+    // extended diagnostics (reference formulas, LinearRegressionModel.scala:473-515)
+    val logL = -0.5 * n * (math.log(ssr) + 1.0 + math.log(2.0 * math.Pi / n)) +
+      0.5 * lw
+    val aic = -2.0 * logL + 2.0 * d
+    val bic = -2.0 * logL + d * math.log(n.toDouble)
+    val eig = symEigenvalues(a, d)
+    // regressor j is constant when its weighted variance ~ 0; Σ w·xⱼ is
+    // the Gram entry (0, j + 1)
+    val consts = (0 until k).filter { j =>
+      val m = a(j + 1) / sw
+      math.abs(a((j + 1) * d + j + 1) / sw - m * m) < 1e-12
+    }.toArray
+    new GenericInternalRow(Array[Any](n, new GenericArrayData(betas), beta(0), r2,
+      new GenericArrayData(stdErr), new GenericArrayData(t), seI, beta(0) / seI,
+      logL, aic, bic, eig.max / eig.min, new GenericArrayData(consts)))
+  }
 
   /** Eigenvalues of a symmetric d×d matrix (row-major) via cyclic Jacobi
     * rotations — d is the design width (tiny), so O(d³) per sweep is noise.
@@ -155,119 +210,3 @@ object OLSAggregate {
   }
 }
 
-/** Input rows are structs (y, x_1..x_k, w). */
-private[agg] class OLSAgg(k: Int, hasIntercept: Boolean)
-    extends Aggregator[Row, OLSBuf, Row] {
-
-  private val d = if (hasIntercept) k + 1 else k // design width; col 0 = 1.0
-
-  val inputEncoder: Encoder[Row] = Encoders.row(StructType(
-    StructField("y", DoubleType) +:
-      (1 to k).map(i => StructField(s"x$i", DoubleType)) :+
-      StructField("w", DoubleType)))
-
-  def zero: OLSBuf = OLSBuf(new Array[Double](d * (d + 1) / 2),
-    new Array[Double](d), new Array[Double](d), 0.0, 0.0, 0.0, 0L)
-
-  private def design(r: Row): Array[Double] = {
-    val x = new Array[Double](d)
-    var i = 0
-    if (hasIntercept) { x(0) = 1.0; i = 1 }
-    var j = 1
-    while (j <= k) { x(i) = r.getDouble(j); i += 1; j += 1 }
-    x
-  }
-
-  def reduce(b: OLSBuf, r: Row): OLSBuf = {
-    // Rows with any null field are skipped (FilterNullInput). Rows with
-    // w <= 0 are INCLUDED in every sum and in `samples`, matching the
-    // reference (OLSRegressionSummarizer.scala:307): a zero weight
-    // contributes nothing to the fit but still counts as a sample, and
-    // only the ln(w)-based diagnostics (logLikelihood/AIC/BIC) degrade to
-    // -Inf/NaN — which is surfaced honestly rather than silently changing
-    // `samples` and the degrees of freedom.
-    if (r == null || r.isNullAt(0) || (1 to k).exists(r.isNullAt) ||
-      r.isNullAt(k + 1)) b
-    else {
-      val w = r.getDouble(k + 1)
-      val y = r.getDouble(0)
-      val x = design(r)
-      var idx = 0
-      var i = 0
-      while (i < d) {
-        var j = i
-        while (j < d) { b.xtx(idx) += w * x(i) * x(j); idx += 1; j += 1 }
-        b.xty(i) += w * x(i) * y
-        b.xsum(i) += w * x(i)
-        i += 1
-      }
-      OLSBuf(b.xtx, b.xty, b.xsum, b.yy + w * y * y, b.lw + math.log(w),
-        b.sw + w, b.n + 1)
-    }
-  }
-
-  def merge(a: OLSBuf, b: OLSBuf): OLSBuf = {
-    val xtx = a.xtx.clone()
-    var i = 0
-    while (i < xtx.length) { xtx(i) += b.xtx(i); i += 1 }
-    val xty = a.xty.clone()
-    i = 0
-    while (i < xty.length) { xty(i) += b.xty(i); i += 1 }
-    val xsum = a.xsum.clone()
-    i = 0
-    while (i < xsum.length) { xsum(i) += b.xsum(i); i += 1 }
-    OLSBuf(xtx, xty, xsum, a.yy + b.yy, a.lw + b.lw, a.sw + b.sw, a.n + b.n)
-  }
-
-  def finish(b: OLSBuf): Row = {
-    if (b.n < d + 1)
-      return Row(b.n, null, null, null, null, null, null, null, null, null,
-        null, null, null)
-    // unpack upper triangle to full symmetric matrix
-    val a = new Array[Double](d * d)
-    var idx = 0
-    var i = 0
-    while (i < d) {
-      var j = i
-      while (j < d) { a(i * d + j) = b.xtx(idx); a(j * d + i) = b.xtx(idx); idx += 1; j += 1 }
-      i += 1
-    }
-    val beta = OLSAggregate.solve(a, b.xty, d)
-    // SSR = y'Wy − β'X'Wy ; SST = y'Wy − (Σwy)²/Σw
-    var bty = 0.0
-    i = 0
-    while (i < d) { bty += beta(i) * b.xty(i); i += 1 }
-    val ssr = b.yy - bty
-    val meanTerm = if (hasIntercept) (b.xty(0) / b.sw) * b.xty(0) else 0.0
-    val sst = b.yy - meanTerm
-    val r2 = 1.0 - ssr / sst
-    val sigma2 = ssr / (b.n - d)
-    val diag = OLSAggregate.invDiag(a, d)
-    val off = if (hasIntercept) 1 else 0
-    val stdErr = (0 until k).map(j => math.sqrt(sigma2 * diag(j + off))).toArray
-    val betas = (0 until k).map(j => beta(j + off)).toArray
-    val t = (0 until k).map(j => betas(j) / stdErr(j)).toArray
-    val (seI, tI) =
-      if (hasIntercept) {
-        val se = math.sqrt(sigma2 * diag(0)); (se, beta(0) / se)
-      } else (Double.NaN, Double.NaN)
-    // extended diagnostics (reference formulas, LinearRegressionModel.scala:473-515)
-    val logL = -0.5 * b.n * (math.log(ssr) + 1.0 + math.log(2.0 * math.Pi / b.n)) +
-      0.5 * b.lw
-    val aic = -2.0 * logL + 2.0 * d
-    val bic = -2.0 * logL + d * math.log(b.n.toDouble)
-    val eig = OLSAggregate.symEigenvalues(a, d)
-    val cond = eig.max / eig.min
-    // regressor j is constant when its weighted variance ~ 0
-    val consts = (0 until k).filter { j =>
-      val jj = j + off
-      val m = b.xsum(jj) / b.sw
-      math.abs(a(jj * d + jj) / b.sw - m * m) < 1e-12
-    }.toArray
-    Row(b.n, betas.toSeq, if (hasIntercept) beta(0) else 0.0, r2,
-      stdErr.toSeq, t.toSeq, seI, tI, logL, aic, bic, cond, consts.toSeq)
-  }
-
-  def bufferEncoder: Encoder[OLSBuf] = Encoders.product[OLSBuf]
-  def outputEncoder: Encoder[Row] = Encoders.row(OLSAggregate.outSchema)
-}

@@ -39,21 +39,22 @@ object GraftColumns {
   private val IntArray = ArrayType(IntegerType, containsNull = false)
 
   /**
-   * `graft.Kernels.<name>(inputs..., consts...)` as a null-propagating
-   * `StaticInvoke`: null when any input is null, otherwise the kernel's
-   * result typed `dataType`. `inputs` pairs each column with the type it
-   * is implicitly cast to; `consts` (`Int` / `Boolean`) become literals,
-   * inlined into the generated call. The kernel method is resolved by the
-   * argument classes when the expression is first evaluated, so a constant
-   * of the wrong type fails only at run time (GraftColumnsSpec runs every
-   * kernel). `returnNullable` is for kernels that may return null
-   * themselves.
+   * `graft.Kernels.<name>(inputs..., consts...)` (or the same method of
+   * `owner`) as a null-propagating `StaticInvoke`: null when any input is
+   * null, otherwise the kernel's result typed `dataType`. `inputs` pairs
+   * each column with the type it is implicitly cast to; `consts` (`Int` /
+   * `Boolean`) become literals, inlined into the generated call. The kernel
+   * method is resolved by the argument classes when the expression is first
+   * evaluated, so a constant of the wrong type fails only at run time
+   * (GraftColumnsSpec runs every kernel). `returnNullable` is for kernels
+   * that may return null themselves.
    */
   private def kernel(name: String, dataType: DataType,
                      inputs: Seq[(Column, AbstractDataType)], consts: Seq[Any] = Nil,
-                     returnNullable: Boolean = false): Column = {
+                     returnNullable: Boolean = false,
+                     owner: Class[_] = graft.Kernels.getClass): Column = {
     val lits = consts.map(Literal(_))
-    col(StaticInvoke(graft.Kernels.getClass, dataType, name,
+    col(StaticInvoke(owner, dataType, name,
       inputs.map(i => ex(i._1)) ++ lits, inputs.map(_._2) ++ lits.map(_.dataType),
       returnNullable = returnNullable))
   }
@@ -101,6 +102,14 @@ object GraftColumns {
   def intervalBucket(time: Column, clock: Broadcast[Array[Long]],
                      beginInclusive: Boolean, stampBegin: Boolean): Column =
     col(IntervalBucket(ex(time), clock, beginInclusive, stampBegin))
+
+  /** Weighted OLS fit struct of `k` regressors plus intercept from the
+    * Gram sums `sums` and row count `n`; see `graft.ts.agg.OLSAggregate.fit`
+    * for the layout. */
+  def olsFit(sums: Column, n: Column, k: Int): Column =
+    kernel("fit", graft.ts.agg.OLSAggregate.outSchema,
+      Seq(sums -> Doubles, n -> LongType), Seq(k), returnNullable = true,
+      owner = graft.ts.agg.OLSAggregate.getClass)
 
   /** Media-header metadata struct `(n_bytes, format, width, height,
     * sample_rate, channels)` from one kernel call over the raw payload

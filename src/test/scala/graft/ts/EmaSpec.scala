@@ -199,9 +199,8 @@ class EmaSpec extends SparkTestBase {
   }
 
   it should "compose constant-period summarize ewma across partitions (keyless)" in {
-    // keyless constant-mode ewma previously serialized via repartition(1);
-    // the two-phase scan must give the same sequential value on scrambled
-    // multi-partition input
+    // keyless constant-mode ewma must give the sequential recursion's value
+    // on scrambled multi-partition input
     val n = 40
     val xs = (0 until n).map(i => math.cos(i * 0.9) * 5 + i % 3)
     val df = xs.zipWithIndex.map { case (x, i) => (i * day, x) }
@@ -239,6 +238,20 @@ class EmaSpec extends SparkTestBase {
     EmaOps.exponentialSmoothing(empty, "v").count() shouldBe 0
     val allNull = Seq((0L, None: Option[Double])).toDF("time", "v")
     EmaOps.ewma(allNull, "v", alpha = 0.5).count() shouldBe 0
+  }
+
+  it should "emit no row for a key whose values are all null, in both period modes" in {
+    val df = Seq((0L, "a", Some(1.0)), (day, "a", Some(2.0)),
+      (0L, "b", None: Option[Double]), (day, "b", None))
+      .toDF("time", "k", "v")
+    for (period <- Seq("constant", "1d")) {
+      val out = EmaOps.ewma(df, "v", Seq("k"), alpha = 0.5,
+        durationPerPeriod = period, convention = "legacy").collect()
+      withClue(s"$period: ") {
+        out.map(_.getString(1)) shouldBe Array("a")
+        approx(out.head.getDouble(2), 2.5, 1e-12)
+      }
+    }
   }
 
   it should "compute one value per key group" in {

@@ -254,6 +254,23 @@ class SummarizersSpec extends SparkTestBase {
     assert(b.getDouble(8).isNegInfinity) // logL degrades, fit stays valid
   }
 
+  it should "render NaN ln(w) diagnostics when a weight is negative" in {
+    // ln of a negative weight is NaN on the JVM; Spark's log would skip it.
+    // The residuals e are orthogonal to [1, x], so the fit is y = 2x; the
+    // w < 0 row lies on that line, keeping the fit and ssr = Σe² = 4 > 0.
+    val e = Seq(1.0, -1.0, 0.0, 0.0, -1.0, 1.0)
+    val rows = Seq.tabulate(6)(i =>
+      (i.toLong, (i + 1).toDouble, 2.0 * (i + 1) + e(i), 1.0)) :+
+      (99L, 3.5, 7.0, -0.5)
+    val ols = Summarize.summarize(rows.toDF("time", "x1", "y", "w"),
+      Summarizers.OLSRegression("y", Seq("x1"), weight = Some("w")))
+      .collect().head.getStruct(1)
+    ols.getLong(0) shouldBe 7L
+    approx(ols.getSeq[Double](1).head, 2.0, 1e-9)
+    approx(ols.getDouble(2), 0.0, 1e-9)
+    assert(ols.getDouble(8).isNaN && ols.getDouble(9).isNaN)
+  }
+
   it should "flag constant regressors via constantsCoordinates" in {
     val pts = Seq.tabulate(6) { i =>
       (i.toLong, (i + 1).toDouble, 7.0, 2.0 * (i + 1) + 0.1 * i * i)
@@ -382,6 +399,46 @@ class SummarizersSpec extends SparkTestBase {
     val st = Summarize.summarize(df,
       Summarizers.olsState("y", Seq("x"), Some("w"))).collect().head
     st.getLong(1) shouldBe 2L // only rows 1 and 4 qualify
+  }
+
+  it should "evaluate OLS over a row window like summarize over each window's rows" in {
+    val rows = Seq.tabulate(10) { i =>
+      val x = (i * 7 % 10).toDouble
+      (i.toLong, Some(x), if (i == 5) None else Some(1.0 + 2.0 * x + 0.3 * (i % 3)),
+        0.5 + (i % 4))
+    }
+    val pts = rows.toDF("time", "x", "y", "w")
+    val ols = Summarizers.OLSRegression("y", Seq("x"), Some("w"))
+    val got = WindowOps.summarizeWindows(pts, WindowOps.pastRows(3), ols)
+      .orderBy("time").collect().map(_.getAs[org.apache.spark.sql.Row]("y_OLSRegression"))
+    got.length shouldBe rows.length
+    for (i <- rows.indices) {
+      val want = Summarize.summarize(
+        rows.slice(math.max(0, i - 3), i + 1).toDF("time", "x", "y", "w"), ols)
+        .collect().head.getStruct(1)
+      withClue(s"row $i: ") {
+        got(i).getLong(0) shouldBe want.getLong(0)
+        if (want.isNullAt(1)) got(i).isNullAt(1) shouldBe true
+        else {
+          approx(got(i).getSeq[Double](1).head, want.getSeq[Double](1).head, 1e-9)
+          approx(got(i).getDouble(2), want.getDouble(2), 1e-9)
+        }
+      }
+    }
+    // the first windows hold fewer than d + 1 = 3 complete rows
+    got.head.getLong(0) shouldBe 1L
+    got.head.isNullAt(1) shouldBe true
+  }
+
+  it should "expose olsState's Gram sums as OLSRegression's state" in {
+    val ols = Summarize.summarizeState(df,
+      Summarizers.OLSRegression("y", Seq("x"), Some("w"))).collect().head
+    val st = Summarize.summarize(df,
+      Summarizers.olsState("y", Seq("x"), Some("w"))).collect().head
+    // n, Σ ln w, 3 Gram entries, 2 X'Wy entries, y'Wy — then min w
+    ols.length shouldBe st.length + 1
+    ols.toSeq.take(st.length) shouldBe st.toSeq
+    ols.getDouble(st.length) shouldBe 1.0
   }
 
   behavior of "distinctCount / approxDistinctCount"
