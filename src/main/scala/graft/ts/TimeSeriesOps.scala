@@ -134,10 +134,11 @@ object TimeSeriesOps {
   def deleteRows(df: DataFrame, f: org.apache.spark.sql.Row => Boolean): DataFrame =
     keepRows(df, r => !f(r))
 
-  /** Computed columns from Column expressions (≙ addColumns' fast path; the
-    * reference's Row=>Any closure form maps to `addRowColumn`). */
+  /** Computed columns from Column expressions, appended in argument order
+    * (≙ addColumns' fast path; the reference's Row=>Any closure form maps
+    * to `addRowColumn`). */
   def addColumns(df: DataFrame, cols: (String, Column)*): DataFrame =
-    df.withColumns(cols.toMap)
+    df.withColumns(scala.collection.immutable.ListMap(cols: _*))
 
   /** Row-closure computed column (≙ addColumns((name,type,Row=>Any)),
     * TimeSeriesRDD.scala:759). Closure path — slower than addColumns. */

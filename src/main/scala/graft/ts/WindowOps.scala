@@ -1,8 +1,10 @@
 package graft.ts
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.{Window, WindowSpec}
 import org.apache.spark.sql.{functions => F}
+import org.apache.spark.sql.graft.SlidingSumExec
+import scala.collection.immutable.ListMap
 
 /**
  * Time-window specs and per-row window aggregation
@@ -12,9 +14,14 @@ import org.apache.spark.sql.{functions => F}
  * Spark-first: a flint window [t+a, t+b] (both endpoints inclusive,
  * rdd/function/window/SummarizeWindows.scala:178-183) is exactly a Catalyst
  * range frame `rangeBetween(a, b)` over the long-nanos time column. Spark's
- * WindowExec evaluates running frames incrementally and sliding range frames
- * with a moving lower bound — the same O(n)/O(w) behavior the reference gets
- * from its subtractable/flipper iterators, without a custom physical node.
+ * WindowExec evaluates running frames incrementally, O(n) per key, but
+ * re-aggregates a sliding frame from its lower bound every time that bound
+ * moves: O(w) per row for a frame of w rows, with each key's rows buffered.
+ * The reference slides in O(1) per row by adding entering rows and
+ * subtracting leaving ones (its subtractable iterators); [[summarizeWindows]]
+ * gets the same for count and integral-sum windows through
+ * `org.apache.spark.sql.graft.SlidingSumExec`, and leaves every other
+ * window on WindowExec.
  */
 object WindowOps {
   import TimeSeriesOps.TimeColumn
@@ -61,14 +68,27 @@ object WindowOps {
   }
 
   /** For each row, append aggregates over all rows (same key) within its
-    * window (≙ summarizeWindows). `tieBreak` orders rows with equal times
-    * — only meaningful for row-count windows (a range frame is defined by
-    * the time value alone, so Spark rejects extra order columns there). */
+    * window (≙ summarizeWindows), in `s.names` order. `tieBreak` orders
+    * rows with equal times — only meaningful for row-count windows (a
+    * range frame is defined by the time value alone, so Spark rejects extra
+    * order columns there).
+    *
+    * Fast path: when every aggregate of `s` is a `count` or a `sum` of an
+    * integral column (`count()`, `count(x)`, `sum(x)` on byte/short/int/
+    * long, with or without `where`), the window plans as `SlidingSumExec`,
+    * one O(n) sweep per key that adds entering and subtracts leaving rows;
+    * results are identical to WindowExec's. The planner strategy is
+    * registered on the session here (idempotent). Everything else — double
+    * or decimal sums (so `mean`, `stddev`, `addLagSum`), `min`/`max`,
+    * quantiles, `collect_list` (`addWindows`), running frames
+    * (`addSummaryColumns`) — stays on WindowExec's O(w) re-aggregating
+    * frame; a summarizer mixing both kinds keeps all of it on WindowExec. */
   def summarizeWindows(df: DataFrame, window: TimeWindow, s: Summarizer,
                        key: Seq[String] = Seq.empty,
                        tieBreak: Seq[String] = Seq.empty): DataFrame = {
+    SlidingSumExec.ensureRegistered(df.sparkSession)
     val outs = s.namedOutputs(Some(spec(window, key, tieBreak)))
-    df.withColumns(outs.toMap)
+    df.withColumns(ListMap(outs: _*))
   }
 
   /** For each row, append the window's rows as array<struct> column
@@ -113,15 +133,15 @@ object WindowOps {
   }
 
   /** Running (cumulative) aggregate appended per row (≙ addSummaryColumns,
-    * Summarizations.scala:25-50). Ties on time are resolved by `tieBreak`
-    * columns if given (the reference uses physical row order, which a
-    * declarative plan cannot reference). */
+    * Summarizations.scala:25-50), in `s.names` order. Ties on time are
+    * resolved by `tieBreak` columns if given (the reference uses physical
+    * row order, which a declarative plan cannot reference). */
   def addSummaryColumns(df: DataFrame, s: Summarizer, key: Seq[String] = Seq.empty,
                         tieBreak: Seq[String] = Seq.empty): DataFrame = {
     val ord = (TimeColumn +: tieBreak).map(F.col)
     val w = Window.partitionBy(key.map(F.col): _*).orderBy(ord: _*)
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     val outs = s.namedOutputs(Some(w))
-    df.withColumns(outs.toMap)
+    df.withColumns(ListMap(outs: _*))
   }
 }

@@ -7,6 +7,8 @@ import org.apache.spark.sql.execution.{InputAdapter, ProjectExec, SparkPlan, Who
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.execution.joins.{BroadcastNestedLoopJoinExec, CartesianProductExec}
 import org.apache.spark.sql.execution.SortExec
+import org.apache.spark.sql.execution.window.WindowExec
+import org.apache.spark.sql.graft.SlidingSumExec
 import org.apache.spark.sql.{functions => F}
 
 /**
@@ -92,6 +94,52 @@ class PlanShapeSpec extends SparkTestBase {
       Summarizers.sum("v"), Seq("k"))
     exchanges(w) shouldBe 1 // hash by key for the window, nothing else
     cartesians(w) shouldBe 0
+  }
+
+  private def slidingSums(df: DataFrame): Seq[SparkPlan] =
+    plan(df).collect { case s: SlidingSumExec => s }
+
+  private def windowExecs(df: DataFrame): Int =
+    plan(df).collect { case w: WindowExec => w }.size
+
+  private lazy val events = Seq((1L, 10L, "u1", 5L), (2L, 11L, "u1", 7L),
+    (2L, 12L, "u2", 1L)).toDF("time", "event_id", "user_id", "value100")
+
+  // the windows of the four windowed registry rows (QueriesWindows)
+  Seq(
+    "summarize_windows_past" -> (WindowOps.pastAbsoluteTime("1d"), Seq.empty[String]),
+    "summarize_windows_future" -> (WindowOps.futureAbsoluteTime("6h"), Seq.empty[String]),
+    "summarize_windows_rows" -> (WindowOps.pastRows(3), Seq("event_id")),
+    "summarize_windows_count" -> (WindowOps.futureRows(2), Seq("event_id"))
+  ).foreach { case (name, (window, tieBreak)) =>
+    it should s"plan $name as one SlidingSumExec over one exchange and one sort" in {
+      val df = WindowOps.summarizeWindows(events, window,
+        Summarizers.count() ++ Summarizers.sum("value100"), Seq("user_id"), tieBreak)
+        .select("time", "event_id", "user_id", "count", "value100_sum")
+        .orderBy("time", "event_id")
+      val s = slidingSums(df)
+      s should have size 1
+      windowExecs(df) shouldBe 0
+      s.head.collect { case e: ShuffleExchangeExec => e } should have size 1
+      s.head.collect { case o: SortExec => o.global } shouldBe Seq(false)
+      exchanges(df) shouldBe 2 // the final orderBy's range exchange on top
+    }
+  }
+
+  it should "keep double sums, addLagSum, addWindows and addSummaryColumns on WindowExec" in {
+    SlidingSumExec.ensureRegistered(spark)
+    val past = WindowOps.pastAbsoluteTime("1d")
+    val fallbacks = Seq(
+      WindowOps.summarizeWindows(events.withColumn("v", F.col("value100").cast("double")),
+        past, Summarizers.sum("v"), Seq("user_id")),
+      WindowOps.addLagSum(events, "value100", "1d", "1d", Seq("user_id")),
+      WindowOps.addWindows(events, past, Seq("user_id")),
+      WindowOps.addSummaryColumns(events, Summarizers.count() ++ Summarizers.sum("value100"),
+        Seq("user_id"), tieBreak = Seq("event_id")))
+    for (df <- fallbacks) withClue(plan(df).toString) {
+      slidingSums(df) shouldBe empty
+      windowExecs(df) should be >= 1
+    }
   }
 
   it should "plan LSH dedup without any cartesian product" in {

@@ -165,6 +165,20 @@ class SummarizeModesSpec extends SparkTestBase {
     out shouldBe Array(1.0, 3.0, 6.0, 5.0)
   }
 
+  it should "append window, running and computed columns in Summarizer.names order" in {
+    // six outputs: more than Scala's ordered small Maps hold
+    val df = Seq((1L, "a", 1.0, 2.0), (2L, "a", 2.0, 3.0)).toDF("time", "k", "x", "y")
+    val s = Summarizers.count() ++ Summarizers.sum("x") ++ Summarizers.mean("x") ++
+      Summarizers.stddev("x") ++ Summarizers.sum("y") ++ Summarizers.mean("y")
+    val base = Seq("time", "k", "x", "y")
+    s.names shouldBe Seq("count", "x_sum", "x_mean", "x_stddev", "y_sum", "y_mean")
+    WindowOps.summarizeWindows(df, WindowOps.pastAbsoluteTime("1ns"), s, Seq("k"))
+      .columns.toSeq shouldBe base ++ s.names
+    WindowOps.addSummaryColumns(df, s, Seq("k")).columns.toSeq shouldBe base ++ s.names
+    val cols = (1 to 6).map(i => s"c$i" -> F.lit(i))
+    TimeSeriesOps.addColumns(df, cols: _*).columns.toSeq shouldBe base ++ cols.map(_._1)
+  }
+
   behavior of "addLagSum"
 
   it should "split core-window and lag-band sums like the reference's overlappable LagSum" in {
