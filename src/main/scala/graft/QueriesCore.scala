@@ -103,8 +103,8 @@ object QueriesCore {
         strictLookahead = true)
         .orderBy("time", "event_id")
     }),
-    // Same query as left_join_asof, executed on the phase-2 custom
-    // range-merge physical operator instead of the union-window rewrite.
+    // Same query as left_join_asof through the leftJoinMerge alias; both
+    // rows run on the same merge operator.
     "left_join_asof_merge" -> ((s, dir) => {
       val ev = events(s, dir)
       val l = ev.filter(F.col("event_type") === "click")
@@ -124,7 +124,7 @@ object QueriesCore {
       AsOfJoin.symmetricJoin(l, r, tolerance = "1d", key = Seq("user_id"))
         .orderBy("time", "side", "user_id")
     }),
-    // binned scale path: two binned as-of passes, identical results
+    // binned scale path: two binned merge passes, identical results
     "symmetric_join_asof_binned" -> ((s, dir) => {
       val ev = events(s, dir)
       val l = ev.filter(F.col("event_type") === "click")

@@ -1,7 +1,6 @@
 package graft.ts
 
-import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /**
@@ -9,30 +8,29 @@ import org.apache.spark.sql.functions._
  * (cf. /root/reference/src/main/scala/com/twosigma/flint/timeseries/TimeSeriesRDD.scala:1012-1069,
  * algorithms rdd/function/join/LeftJoin.scala:31-97 and FutureLeftJoin.scala:29-136).
  *
- * Spark-first design: instead of a hand-scheduled range-merge join over an
- * ordered RDD, both joins are expressed as a UNION of the two sides followed
- * by a *running* window frame (`rowsBetween(unboundedPreceding, currentRow)`),
- * which Spark's WindowExec evaluates incrementally in O(n) per partition.
- * The forward join runs the same frame over time-descending order — never
- * the O(n^2) `unboundedFollowing` frame.
+ * One engine, as in the reference: every join here is an ordered merge of
+ * two time-sorted sides on the custom physical operator
+ * `org.apache.spark.sql.graft.AsOfMergeJoinExec`. Each side is
+ * hash-clustered on the key and sorted by (key, time) — one exchange per
+ * side, like a sort-merge equi-join — and the operator walks both in one
+ * O(|L| + |R|) pass per partition.
  *
- * Scale notes (100 TB):
- *  - one hash exchange of (left ∪ right) on the join key, one sort — the
- *    minimum any repartition-based as-of join needs; AQE handles skew.
- *  - all right-side value columns ride in a single struct, so the window
- *    evaluates exactly one `last(_, ignoreNulls)` per row regardless of the
- *    number of right columns, and a legitimately-null right column can never
- *    leak an older row's value.
- *  - with an empty key the window degenerates to a single partition; that
- *    matches the reference's semantics (global as-of) but serializes — the
- *    caller should supply a key at scale, same as any global ordered scan.
+ * Contract (shared by every entry point):
+ *  - right rows tying on (key, time) resolve to the greatest value tuple
+ *    (nulls least), independent of partitioning, AQE and input order;
+ *  - a right row with a null time is never a candidate, and a left row
+ *    with a null time is null-padded;
+ *  - null keys match null keys (the reference's SK map).
+ *
+ * Scale notes: with an empty key the merge runs as one partition, which
+ * matches the reference's global as-of semantics but serializes — pass
+ * `binned = true` (tolerance-width time bins added to the merge key) for
+ * keyless or hot-key input.
  */
 object AsOfJoin {
   import TimeSeriesOps.TimeColumn
 
-  private val SrcCol = "__graft_src"
-  private val StructCol = "__graft_rstruct"
-  private val RTimeField = "__rtime"
+  private val BinCol = "__graft_bin"
 
   /** Apply flint-style alias prefixing: `alias_col` for every non-time,
     * non-key column (TimeSeriesRDD.scala leftAlias/rightAlias contract). */
@@ -61,11 +59,11 @@ object AsOfJoin {
    *
    * `binned = true` selects the scale path for low-cardinality or empty
    * keys: time is cut into tolerance-width bins, each right row is
-   * duplicated into its own and the following bin, and the running window
-   * partitions on (key, bin). Identical results (requires tolerance > 0),
-   * but parallelism becomes |keys| × |bins| instead of |keys| — a keyless
-   * join no longer degenerates to one partition, and one hot key no longer
-   * serializes into one task, at the cost of shuffling the right side
+   * duplicated into its own and the following bin, and the merge key
+   * becomes (key, bin). Identical results (requires tolerance > 0), but
+   * parallelism becomes |keys| × |bins| instead of |keys| — a keyless join
+   * no longer degenerates to one partition, and one hot key no longer
+   * serializes into one task, at the cost of shuffling every right row
    * twice (the declarative analog of the reference's range-intersecting
    * partition merge, RangeMergeJoin.scala:28-140).
    */
@@ -73,7 +71,7 @@ object AsOfJoin {
                key: Seq[String] = Seq.empty, leftAlias: Option[String] = None,
                rightAlias: Option[String] = None,
                binned: Boolean = false): DataFrame =
-    asOf(left, right, TimeSeriesOps.parseDuration(tolerance), key,
+    mergeJoin(left, right, TimeSeriesOps.parseDuration(tolerance), key,
       leftAlias, rightAlias, future = false, strict = false, binned = binned)
 
   /**
@@ -87,9 +85,25 @@ object AsOfJoin {
                      rightAlias: Option[String] = None,
                      strictLookahead: Boolean = false,
                      binned: Boolean = false): DataFrame =
-    asOf(left, right, TimeSeriesOps.parseDuration(tolerance), key,
+    mergeJoin(left, right, TimeSeriesOps.parseDuration(tolerance), key,
       leftAlias, rightAlias, future = true, strict = strictLookahead,
       binned = binned)
+
+  /** API alias of [[leftJoin]] (both run on the merge operator). */
+  def leftJoinMerge(left: DataFrame, right: DataFrame, tolerance: String = "0ns",
+                    key: Seq[String] = Seq.empty, leftAlias: Option[String] = None,
+                    rightAlias: Option[String] = None): DataFrame =
+    leftJoin(left, right, tolerance, key, leftAlias, rightAlias)
+
+  /** API alias of [[futureLeftJoin]] (both run on the merge operator). */
+  def futureLeftJoinMerge(left: DataFrame, right: DataFrame,
+                          tolerance: String = "0ns",
+                          key: Seq[String] = Seq.empty,
+                          leftAlias: Option[String] = None,
+                          rightAlias: Option[String] = None,
+                          strictLookahead: Boolean = false): DataFrame =
+    futureLeftJoin(left, right, tolerance, key, leftAlias, rightAlias,
+      strictLookahead)
 
   /**
    * Symmetric (full-outer) as-of join (≙ OrderedRDD.symmetricJoin,
@@ -101,216 +115,72 @@ object AsOfJoin {
    * schema would otherwise lose what the reference's (Option, Option)
    * encoding keeps implicit.
    *
-   * Same execution shape as [[leftJoin]]: one union, one hash exchange on
-   * the key, two running window frames (one per direction's tie order) that
-   * WindowExec evaluates in O(n) per partition. `binned = true` selects the
-   * scale path for keyless / hot-key input (requires tolerance > 0): two
-   * binned backward as-of passes (one per originating side) whose windows
-   * partition on (key, tolerance-bin) — parallelism |keys| × |bins| at the
-   * cost of a second pass over the union. Identical results and tie
-   * contract (greatest value tuple wins among equal-time candidates).
+   * Executed as two backward merge passes (left against right, right
+   * against left) tagged with `side` and unioned. Both passes project each
+   * input identically, so the second pass reuses the first pass's two
+   * exchanges and each side is shuffled once. `binned` as in [[leftJoin]]
+   * (each pass bins its own inputs, so no exchange is shared).
    */
   def symmetricJoin(left0: DataFrame, right0: DataFrame, tolerance: String = "0ns",
                     key: Seq[String] = Seq.empty, leftAlias: Option[String] = None,
                     rightAlias: Option[String] = None,
                     binned: Boolean = false): DataFrame = {
     val tol = TimeSeriesOps.parseDuration(tolerance)
-    require(tol >= 0, "tolerance must be non-negative")
     val left = applyAlias(left0, leftAlias, key)
     val right = applyAlias(right0, rightAlias, key)
-    checkNoClash(left, right, key)
     require(!left.columns.contains("side") && !right.columns.contains("side"),
       "symmetricJoin emits a 'side' column; rename or alias the existing one")
     val lVals = left.columns.filter(c => c != TimeColumn && !key.contains(c)).toSeq
     val rVals = right.columns.filter(c => c != TimeColumn && !key.contains(c)).toSeq
-
-    if (binned) {
-      // one output row per input row of either side = two backward as-of
-      // joins with a side tag, schema-aligned to (time, key, lVals, rVals)
-      val outCols = (TimeColumn +: key) ++ lVals ++ rVals
-      val fromLeft = asOf(left, right, tol, key, None, None,
-        future = false, strict = false, binned = true)
-        .select(outCols.map(col) :+ lit("left").as("side"): _*)
-      val fromRight = asOf(right, left, tol, key, None, None,
-        future = false, strict = false, binned = true)
-        .select(outCols.map(col) :+ lit("right").as("side"): _*)
-      return fromLeft.unionByName(fromRight)
-    }
-
-    val LCol = "__graft_lstruct"
-    val LTimeField = "__ltime"
-    val l = left.select(
-      (col(TimeColumn) +: key.map(col)) :+
-        struct((col(TimeColumn).as(LTimeField) +: lVals.map(col)): _*).as(LCol): _*)
-      .withColumn(SrcCol, lit(1))
-    val r = right.select(
-      (col(TimeColumn) +: key.map(col)) :+
-        struct((col(TimeColumn).as(RTimeField) +: rVals.map(col)): _*).as(StructCol): _*)
-      .withColumn(SrcCol, lit(0))
-    val u = l.unionByName(r, allowMissingColumns = true)
-
-    def tieBreak(c: String): Seq[Column] = {
-      val t = u.schema(c).dataType
-      if (org.apache.spark.sql.catalyst.expressions.RowOrdering.isOrderable(t))
-        Seq(col(c).asc_nulls_first)
-      else Seq.empty
-    }
-    // rights-first order: a left row at t sees right rows at exactly t
-    val wR = Window.partitionBy(key.map(col): _*)
-      .orderBy((Seq(col(TimeColumn).asc, col(SrcCol).asc) ++ tieBreak(StructCol)): _*)
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    // lefts-first order: a right row at t sees left rows at exactly t
-    val wL = Window.partitionBy(key.map(col): _*)
-      .orderBy((Seq(col(TimeColumn).asc, col(SrcCol).desc) ++ tieBreak(LCol)): _*)
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-
-    val lastR = last(col(StructCol), ignoreNulls = true).over(wR)
-    val lastL = last(col(LCol), ignoreNulls = true).over(wL)
-    val matchedR = when(col(SrcCol) === 1,
-      when(lastR.isNotNull && lastR.getField(RTimeField) >= col(TimeColumn) - tol, lastR))
-    val matchedL = when(col(SrcCol) === 0,
-      when(lastL.isNotNull && lastL.getField(LTimeField) >= col(TimeColumn) - tol, lastL))
-    val outL = when(col(SrcCol) === 1, col(LCol)).otherwise(matchedL)
-    val outR = when(col(SrcCol) === 0, col(StructCol)).otherwise(matchedR)
-
-    val mL = "__graft_ml"
-    val mR = "__graft_mr"
-    u.withColumn(mL, outL).withColumn(mR, outR)
-      .select((col(TimeColumn) +: key.map(col)) ++
-        lVals.map(c => col(mL).getField(c).as(c)) ++
-        rVals.map(c => col(mR).getField(c).as(c)) :+
-        when(col(SrcCol) === 1, "left").otherwise("right").as("side"): _*)
+    // schema-aligned to (time, key, lVals, rVals, side)
+    val outCols = ((TimeColumn +: key) ++ lVals ++ rVals).map(col)
+    def pass(a: DataFrame, b: DataFrame, side: String): DataFrame =
+      mergeJoin(a, b, tol, key, None, None, future = false, strict = false, binned)
+        .select(outCols :+ lit(side).as("side"): _*)
+    pass(left, right, "left").unionByName(pass(right, left, "right"))
   }
 
-  /**
-   * Phase-2 backward as-of join on the custom range-merge physical
-   * operator (`org.apache.spark.sql.graft.AsOfMergeJoinExec`): both sides
-   * hash-clustered on the key and merged in one O(|L|+|R|) streaming pass
-   * per partition — no union, no window machinery, right columns never
-   * ride through left rows. Same results as [[leftJoin]]; ties among right
-   * rows at identical (key, time) resolve to plan order rather than the
-   * union path's value-tuple order.
-   */
-  def leftJoinMerge(left0: DataFrame, right0: DataFrame, tolerance: String = "0ns",
-                    key: Seq[String] = Seq.empty, leftAlias: Option[String] = None,
-                    rightAlias: Option[String] = None): DataFrame =
-    mergeJoin(left0, right0, tolerance, key, leftAlias, rightAlias,
-      future = false, strict = false)
-
-  /** Forward variant of [[leftJoinMerge]] (≙ futureLeftJoin semantics on
-    * the custom operator): nearest right row in [t, t+tolerance], or
-    * (t, t+tolerance] with `strictLookahead`. */
-  def futureLeftJoinMerge(left0: DataFrame, right0: DataFrame,
-                          tolerance: String = "0ns",
-                          key: Seq[String] = Seq.empty,
-                          leftAlias: Option[String] = None,
-                          rightAlias: Option[String] = None,
-                          strictLookahead: Boolean = false): DataFrame =
-    mergeJoin(left0, right0, tolerance, key, leftAlias, rightAlias,
-      future = true, strict = strictLookahead)
-
-  private def mergeJoin(left0: DataFrame, right0: DataFrame, tolerance: String,
+  private def mergeJoin(left0: DataFrame, right0: DataFrame, tol: Long,
                         key: Seq[String], leftAlias: Option[String],
                         rightAlias: Option[String], future: Boolean,
-                        strict: Boolean): DataFrame = {
-    val tol = TimeSeriesOps.parseDuration(tolerance)
+                        strict: Boolean, binned: Boolean): DataFrame = {
     require(tol >= 0, "tolerance must be non-negative")
-    val left = applyAlias(left0, leftAlias, key)
-    val rightAliased = applyAlias(right0, rightAlias, key)
-    checkNoClash(left, rightAliased, key)
-    // fresh exprIds on the right so self-joins (both sides derived from
-    // one scan) cannot alias the same attributes on both sides
-    val right = rightAliased.select(
-      rightAliased.columns.map(c => col(c).as(c)).toSeq: _*)
-    val merged = org.apache.spark.sql.graft.AsOfMergeJoin.leftJoinMerge(
-      left, right, tol, key, TimeColumn, future, strict)
-    // project to leftJoin's output schema: left columns + right value
-    // columns; positional temp names sidestep the duplicated time/key names
-    val lCols = left.columns.toSeq
-    val rCols = right.columns.toSeq
-    val tmp = lCols.indices.map(i => s"__l$i") ++ rCols.indices.map(i => s"__r$i")
-    merged.toDF(tmp: _*).select(
-      lCols.zipWithIndex.map { case (c, i) => col(s"__l$i").as(c) } ++
-        rCols.zipWithIndex.collect {
-          case (c, i) if c != TimeColumn && !key.contains(c) => col(s"__r$i").as(c)
-        }: _*)
-  }
-
-  private def asOf(left0: DataFrame, right0: DataFrame, toleranceNs: Long,
-                   key: Seq[String], leftAlias: Option[String],
-                   rightAlias: Option[String], future: Boolean,
-                   strict: Boolean, binned: Boolean = false): DataFrame = {
-    require(toleranceNs >= 0, "tolerance must be non-negative")
-    val left = applyAlias(left0, leftAlias, key)
-    val right = applyAlias(right0, rightAlias, key)
+    // fresh exprIds on both sides: self-joins (both sides derived from one
+    // scan) cannot alias the same attributes on both sides, and one input
+    // projects identically in every merge it feeds (exchange reuse)
+    def fresh(df: DataFrame): DataFrame = df.select(df.columns.map(c => col(c).as(c)).toSeq: _*)
+    val left = fresh(applyAlias(left0, leftAlias, key))
+    val right = fresh(applyAlias(right0, rightAlias, key))
     checkNoClash(left, right, key)
-
-    val rightVals = right.columns.filter(c => c != TimeColumn && !key.contains(c)).toSeq
-    val leftCols = left.columns.toSeq
-
-    // Bundle the right side into one struct; null on left rows after union.
-    val r0 = right.select(
-      (col(TimeColumn) +: key.map(col)) :+
-        struct((col(TimeColumn).as(RTimeField) +: rightVals.map(col)): _*).as(StructCol): _*)
-      .withColumn(SrcCol, lit(0))
-    val l0 = left.withColumn(SrcCol, lit(1))
-
-    // Binned scale path: cut time into tolerance-width bins; every right
-    // row lands in its own bin AND the adjacent bin a left row could reach
-    // it from, so the window can partition on (key, bin). `div` keeps the
-    // arithmetic integral (epoch nanos are non-negative).
-    val BinCol = "__graft_bin"
-    val (l, r, partKey) =
-      if (!binned) (l0, r0, key)
+    // the merge hashes and compares both sides' keys and times as one type
+    for (c <- TimeColumn +: key) {
+      val (lt, rt) = (left.schema(c).dataType, right.schema(c).dataType)
+      require(lt == rt, s"as-of join column $c is $lt on the left but $rt on the right; cast one side")
+    }
+    // Binned scale path: every right row lands in its own tolerance-width
+    // bin AND the adjacent bin a left row could reach it from, so merging
+    // on (key, bin) sees every candidate. `div` keeps the arithmetic
+    // integral (epoch nanos are non-negative).
+    val (l, r, mergeKey) =
+      if (!binned) (left, right, key)
       else {
-        require(toleranceNs > 0, "binned as-of join requires tolerance > 0")
-        val bin = expr(s"$TimeColumn div ${toleranceNs}L")
-        val dup = if (!future) array(bin, bin + 1) else array(bin, bin - 1)
-        (l0.withColumn(BinCol, bin),
-          r0.withColumn(BinCol, explode(dup)),
+        require(tol > 0, "binned as-of join requires tolerance > 0")
+        val bin = expr(s"$TimeColumn div ${tol}L")
+        (left.withColumn(BinCol, bin),
+          right.withColumn(BinCol, explode(array(bin, if (future) bin - 1 else bin + 1))),
           key :+ BinCol)
       }
-    val u = l.unionByName(r, allowMissingColumns = true)
-
-    // Running frame over the union. Tie order at equal time encodes the
-    // inclusive/strict endpoint:
-    //   backward  [t-tol, t]: scan asc; right(0) before left(1) => a right
-    //     row at exactly t is already visible to the left row at t.
-    //   forward   [t, t+tol]: scan DESC; right at t before left at t in scan
-    //     order => visible. strict (t, t+tol]: left first => not visible.
-    // Several right rows at identical (key, time) would otherwise be matched
-    // nondeterministically (the reference picks physical row order, which a
-    // declarative plan cannot reference); a final sort on the bundled right
-    // struct makes the winner the row with the greatest value tuple —
-    // stable across runs and partitionings. Skipped when a right column
-    // type is unorderable (map), where ties stay plan-order dependent.
-    val structTieBreak: Seq[Column] = {
-      val structType = r.schema(StructCol).dataType
-      if (org.apache.spark.sql.catalyst.expressions.RowOrdering.isOrderable(structType))
-        Seq(col(StructCol).asc_nulls_first)
-      else Seq.empty
-    }
-    val ord: Seq[Column] = (
-      if (!future) Seq(col(TimeColumn).asc, col(SrcCol).asc)
-      else if (!strict) Seq(col(TimeColumn).desc, col(SrcCol).asc)
-      else Seq(col(TimeColumn).desc, col(SrcCol).desc)) ++ structTieBreak
-    val w = Window.partitionBy(partKey.map(col): _*).orderBy(ord: _*)
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-
-    val lastR = last(col(StructCol), ignoreNulls = true).over(w)
-    val rt = lastR.getField(RTimeField)
-    val inTol =
-      if (!future) rt >= col(TimeColumn) - toleranceNs
-      else rt <= col(TimeColumn) + toleranceNs
-    val matched = when(lastR.isNotNull && inTol, lastR)
-
-    // The window must run over the union (it needs the right rows); only
-    // then are right rows dropped and the match struct unpacked.
-    val matchCol = "__graft_match"
-    val out = leftCols.map(col) ++
-      rightVals.map(c => col(matchCol).getField(c).as(c))
-    u.withColumn(matchCol, matched)
-      .filter(col(SrcCol) === 1)
-      .select(out: _*)
+    val merged = org.apache.spark.sql.graft.AsOfMergeJoin.leftJoinMerge(
+      l, r, tol, mergeKey, TimeColumn, future, strict)
+    // project to left columns + right value columns; positional temp names
+    // sidestep the duplicated time/key names
+    val lCols = l.columns.toSeq
+    val rCols = r.columns.toSeq
+    val tmp = lCols.indices.map(i => s"__l$i") ++ rCols.indices.map(i => s"__r$i")
+    merged.toDF(tmp: _*).select(
+      lCols.zipWithIndex.collect { case (c, i) if c != BinCol => col(s"__l$i").as(c) } ++
+        rCols.zipWithIndex.collect {
+          case (c, i) if c != TimeColumn && !mergeKey.contains(c) => col(s"__r$i").as(c)
+        }: _*)
   }
 }

@@ -4,33 +4,36 @@ import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.execution.SparkStrategy
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Attribute, BindReferences, Expression, JoinedRow, SortOrder, UnsafeProjection}
+import org.apache.spark.sql.catalyst.expressions.{Ascending, Attribute, BindReferences, BoundReference, Descending, Expression, GenericInternalRow, JoinedRow, RowOrdering, SortOrder, UnsafeProjection}
 import org.apache.spark.sql.catalyst.expressions.codegen.LazilyGeneratedOrdering
 import org.apache.spark.sql.catalyst.plans.logical.{BinaryNode, LogicalPlan}
 import org.apache.spark.sql.execution.{BinaryExecNode, SparkPlan}
 import org.apache.spark.sql.catalyst.plans.physical.{AllTuples, ClusteredDistribution, Distribution}
 
 /**
- * Phase-2 as-of join: a custom Catalyst logical node + strategy + physical
- * operator doing a co-partitioned ordered MERGE of the two sides — the
- * Spark-native form of the reference's narrow range-merge join
+ * The as-of join operator: a custom Catalyst logical node + strategy +
+ * physical operator doing a co-partitioned ordered MERGE of the two sides
+ * — the Spark-native form of the reference's narrow range-merge join
  * (/root/reference/src/main/scala/com/twosigma/flint/rdd/function/join/
- * LeftJoin.scala:31-97, RangeMergeJoin.scala:103-118).
+ * LeftJoin.scala:31-97, RangeMergeJoin.scala:103-118). Every join in
+ * `graft.ts.AsOfJoin` runs on it.
  *
  * Execution contract (declared, so Catalyst plans the minimum work):
  *  - requiredChildDistribution: both sides hash-clustered on the join key
  *    (EnsureRequirements inserts compatible exchanges, exactly like a
  *    sort-merge equi-join);
- *  - requiredChildOrdering: (key..., time) ascending per side;
+ *  - requiredChildOrdering: (key..., time) ascending per side; the right
+ *    side also sorts its value columns (see ties below);
  *  - doExecute: zipPartitions streaming merge — O(|L| + |R|) per
  *    partition, O(1) state (the last right row of the current key).
  *
- * Versus the union+window rewrite: no struct bundling, no window
- * machinery, and each side is shuffled separately instead of as a union —
- * same total volume, but the right side's columns never ride through the
- * left's rows. Ties among right rows at identical (key, time) resolve to
- * the last row in sort order (plan-order for duplicate sort keys, like
- * the reference's physical-order semantics).
+ * Ties: right rows at identical (key, time) resolve to the greatest value
+ * tuple, nulls least — the value columns sort ascending nulls-first for
+ * backward joins (the last tied row wins) and descending nulls-last for
+ * forward joins (the first tied row wins). When a right value type is
+ * unorderable (map) the tie columns are skipped and ties follow plan
+ * order. Null times: a right row with a null time is never a candidate,
+ * and a left row with a null time is null-padded.
  */
 case class AsOfMergePlan(left: LogicalPlan, right: LogicalPlan,
                          leftKeys: Seq[Expression], rightKeys: Seq[Expression],
@@ -69,12 +72,21 @@ case class AsOfMergeJoinExec(left: SparkPlan, right: SparkPlan,
     if (leftKeys.isEmpty) Seq(AllTuples, AllTuples)
     else Seq(ClusteredDistribution(leftKeys), ClusteredDistribution(rightKeys))
 
+  /** The right side's value columns, ordered so the tie winner (the
+    * greatest value tuple) is the row the merge keeps: last in ascending
+    * order for backward joins, first in descending order for forward ones. */
+  private def tieOrder: Seq[SortOrder] = {
+    val vals = right.output.filterNot(a => (rightKeys :+ rightTime).exists(_.semanticEquals(a)))
+    if (!vals.forall(a => RowOrdering.isOrderable(a.dataType))) Nil
+    else vals.map(SortOrder(_, if (future) Descending else Ascending))
+  }
+
   override def requiredChildOrdering: Seq[Seq[SortOrder]] = Seq(
-    (leftKeys :+ leftTime).map(SortOrder(_, org.apache.spark.sql.catalyst.expressions.Ascending)),
-    (rightKeys :+ rightTime).map(SortOrder(_, org.apache.spark.sql.catalyst.expressions.Ascending)))
+    (leftKeys :+ leftTime).map(SortOrder(_, Ascending)),
+    (rightKeys :+ rightTime).map(SortOrder(_, Ascending)) ++ tieOrder)
 
   override def outputOrdering: Seq[SortOrder] =
-    (leftKeys :+ leftTime).map(SortOrder(_, org.apache.spark.sql.catalyst.expressions.Ascending))
+    (leftKeys :+ leftTime).map(SortOrder(_, Ascending))
 
   override protected def doExecute(): RDD[InternalRow] = {
     val tol = toleranceNs
@@ -100,11 +112,10 @@ case class AsOfMergeJoinExec(left: SparkPlan, right: SparkPlan,
       val rTimeBound = BindReferences.bindReference(rTimeExpr, rOut)
       val keyOrd: Ordering[InternalRow] =
         new LazilyGeneratedOrdering(keyTypes.zipWithIndex.map { case (dt, i) =>
-          SortOrder(org.apache.spark.sql.catalyst.expressions.BoundReference(i, dt, nullable = true),
-            org.apache.spark.sql.catalyst.expressions.Ascending)
+          SortOrder(BoundReference(i, dt, nullable = true), Ascending)
         })
       val rIt = rIt0.buffered
-      val nullRight = new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(rOut.size)
+      val nullRight = new GenericInternalRow(rOut.size)
       val joined = new JoinedRow
 
       if (!future) {
@@ -114,27 +125,32 @@ case class AsOfMergeJoinExec(left: SparkPlan, right: SparkPlan,
         var lastRight: InternalRow = null
         var lastRightTime: Long = 0L
         lIt.map { lRow =>
-          val lKey = lKeyProj(lRow)
-          val lTime = lTimeBound.eval(lRow).asInstanceOf[Long]
-          // advance the right side up to and including (lKey, lTime)
-          var advancing = true
-          while (advancing && rIt.hasNext) {
-            val rRow = rIt.head
-            val rKey = rKeyProj(rRow)
-            val cmp = keyOrd.compare(rKey, lKey)
-            if (cmp < 0) { rIt.next() } // right key behind: discard
-            else if (cmp == 0) {
-              val rTime = rTimeBound.eval(rRow).asInstanceOf[Long]
-              if (rTime <= lTime) {
-                // candidate: remember a COPY (unsafe rows are reused buffers)
-                lastKey = rKey.copy()
-                lastRight = rIt.next().copy()
-                lastRightTime = rTime
+          val lTimeV = lTimeBound.eval(lRow)
+          // a left row with a null time is null-padded
+          val matched = lTimeV != null && {
+            val lKey = lKeyProj(lRow)
+            val lTime = lTimeV.asInstanceOf[Long]
+            // advance the right side up to and including (lKey, lTime)
+            var advancing = true
+            while (advancing && rIt.hasNext) {
+              val rRow = rIt.head
+              val rKey = rKeyProj(rRow)
+              val cmp = keyOrd.compare(rKey, lKey)
+              if (cmp < 0) { rIt.next() } // right key behind: discard
+              else if (cmp == 0) {
+                val rTimeV = rTimeBound.eval(rRow)
+                if (rTimeV == null) rIt.next() // null time: never a candidate
+                else if (rTimeV.asInstanceOf[Long] <= lTime) {
+                  // candidate: remember a COPY (unsafe rows are reused buffers)
+                  lastKey = rKey.copy()
+                  lastRight = rIt.next().copy()
+                  lastRightTime = rTimeV.asInstanceOf[Long]
+                } else advancing = false
               } else advancing = false
-            } else advancing = false
+            }
+            lastRight != null &&
+              keyOrd.compare(lastKey, lKey) == 0 && lastRightTime >= lTime - tol
           }
-          val matched = lastRight != null && lastKey != null &&
-            keyOrd.compare(lastKey, lKey) == 0 && lastRightTime >= lTime - tol
           resultProj(joined(lRow, if (matched) lastRight else nullRight))
         }
       } else {
@@ -144,23 +160,30 @@ case class AsOfMergeJoinExec(left: SparkPlan, right: SparkPlan,
         // they are discarded; the matching head is only PEEKED — it may
         // match later lefts too.
         lIt.map { lRow =>
-          val lKey = lKeyProj(lRow)
-          val lTime = lTimeBound.eval(lRow).asInstanceOf[Long]
-          var discarding = true
-          while (discarding && rIt.hasNext) {
-            val rRow = rIt.head
-            val cmp = keyOrd.compare(rKeyProj(rRow), lKey)
-            if (cmp < 0) rIt.next()
-            else if (cmp == 0) {
-              val rTime = rTimeBound.eval(rRow).asInstanceOf[Long]
-              if (if (strict) rTime <= lTime else rTime < lTime) rIt.next()
-              else discarding = false
-            } else discarding = false
-          }
-          val matched = rIt.hasNext && {
-            val rRow = rIt.head
-            keyOrd.compare(rKeyProj(rRow), lKey) == 0 &&
-              rTimeBound.eval(rRow).asInstanceOf[Long] <= lTime + tol
+          val lTimeV = lTimeBound.eval(lRow)
+          // a left row with a null time is null-padded
+          val matched = lTimeV != null && {
+            val lKey = lKeyProj(lRow)
+            val lTime = lTimeV.asInstanceOf[Long]
+            var discarding = true
+            while (discarding && rIt.hasNext) {
+              val rRow = rIt.head
+              val cmp = keyOrd.compare(rKeyProj(rRow), lKey)
+              if (cmp < 0) rIt.next()
+              else if (cmp == 0) {
+                val rTimeV = rTimeBound.eval(rRow)
+                // a null right time is never a candidate
+                if (rTimeV == null || (if (strict) rTimeV.asInstanceOf[Long] <= lTime
+                                       else rTimeV.asInstanceOf[Long] < lTime)) rIt.next()
+                else discarding = false
+              } else discarding = false
+            }
+            // a same-key head left by the loop has a non-null time
+            rIt.hasNext && {
+              val rRow = rIt.head
+              keyOrd.compare(rKeyProj(rRow), lKey) == 0 &&
+                rTimeBound.eval(rRow).asInstanceOf[Long] <= lTime + tol
+            }
           }
           resultProj(joined(lRow, if (matched) rIt.head else nullRight))
         }

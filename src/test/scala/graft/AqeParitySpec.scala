@@ -55,6 +55,12 @@ class AqeParitySpec extends SparkTestBase {
     parity("leftJoin/binned")(() =>
       AsOfJoin.leftJoin(l, r, "12h", Seq("k"), binned = true))
     parity("leftJoin/merge")(() => AsOfJoin.leftJoinMerge(l, r, "12h", Seq("k")))
+    // right rows tying on (key, time), one tied value null: the merge keeps
+    // the greatest value tuple whichever tied row the exchange delivers first
+    val ties = r.unionByName(r.withColumn("rv", F2.col("rv") + 0.5))
+      .unionByName(r.withColumn("rv", F2.lit(null).cast("double"))).repartition(3)
+    parity("futureLeftJoinMerge/ties")(() =>
+      AsOfJoin.futureLeftJoinMerge(l, ties, "12h", Seq("k")))
     parity("ewmaRows/keyless")(() =>
       EmaOps.ewmaRows(d, "v", Seq.empty, alpha = 0.3,
         durationPerPeriod = "constant", convention = "legacy"))

@@ -77,6 +77,13 @@ class PartitionLayoutSpec extends SparkTestBase {
     invariant("leftJoin/binned")(() =>
       AsOfJoin.leftJoin(l, r, "12h", Seq("k"), binned = true))
     invariant("leftJoin/merge")(() => AsOfJoin.leftJoinMerge(l, r, "12h", Seq("k")))
+    // right rows tying on (key, time), one tied value null: the merge keeps
+    // the greatest value tuple whichever tied row the exchange delivers first
+    val F2 = org.apache.spark.sql.functions
+    val ties = r.unionByName(r.withColumn("rv", F2.col("rv") + 0.5))
+      .unionByName(r.withColumn("rv", F2.lit(null).cast("double"))).repartition(3)
+    invariant("futureLeftJoinMerge/ties")(() =>
+      AsOfJoin.futureLeftJoinMerge(l, ties, "12h", Seq("k")))
     invariant("futureLeftJoin")(() =>
       AsOfJoin.futureLeftJoin(l, r, "12h", Seq("k"), strictLookahead = true))
     invariant("symmetricJoin")(() => AsOfJoin.symmetricJoin(l, r, "12h", Seq("k")))

@@ -4,11 +4,11 @@ import graft.ts._
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
 import org.apache.spark.sql.execution.{InputAdapter, ProjectExec, SparkPlan, WholeStageCodegenExec}
-import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+import org.apache.spark.sql.execution.exchange.{ReusedExchangeExec, ShuffleExchangeExec}
 import org.apache.spark.sql.execution.joins.{BroadcastNestedLoopJoinExec, CartesianProductExec}
 import org.apache.spark.sql.execution.SortExec
 import org.apache.spark.sql.execution.window.WindowExec
-import org.apache.spark.sql.graft.SlidingSumExec
+import org.apache.spark.sql.graft.{AsOfMergeJoinExec, SlidingSumExec}
 import org.apache.spark.sql.{functions => F}
 
 /**
@@ -40,30 +40,43 @@ class PlanShapeSpec extends SparkTestBase {
   private lazy val left = Seq((10L, "a", 1), (11L, "b", 2)).toDF("time", "k", "lv")
   private lazy val right = Seq((9L, "a", 5), (10L, "b", 6)).toDF("time", "k", "rv")
 
+  private def reusedExchanges(df: DataFrame): Int =
+    plan(df).collect { case r: ReusedExchangeExec => r }.size
+
+  /** Every as-of join runs on the merge operator: `merges` of them, no
+    * window, no global sort, no cartesian. */
+  private def mergeShape(df: DataFrame, merges: Int): Unit = {
+    plan(df).collect { case m: AsOfMergeJoinExec => m }.size shouldBe merges
+    plan(df).collect { case w: WindowExec => w }.size shouldBe 0
+    globalSorts(df) shouldBe 0
+    cartesians(df) shouldBe 0
+  }
+
   it should "plan the as-of join with exactly one shuffle and no cartesian" in {
     val j = AsOfJoin.leftJoin(left, right, "5ns", Seq("k"))
-    exchanges(j) shouldBe 1
-    cartesians(j) shouldBe 0
-    globalSorts(j) shouldBe 0
+    exchanges(j) shouldBe 2 // one per side
+    mergeShape(j, merges = 1)
   }
 
   it should "plan the future as-of join with exactly one shuffle" in {
     val j = AsOfJoin.futureLeftJoin(left, right, "5ns", Seq("k"),
       strictLookahead = true)
-    exchanges(j) shouldBe 1
-    cartesians(j) shouldBe 0
+    exchanges(j) shouldBe 2 // one per side
+    mergeShape(j, merges = 1)
   }
 
   it should "plan the symmetric join with exactly one shuffle" in {
     val j = AsOfJoin.symmetricJoin(left, right, "5ns", Seq("k"))
-    exchanges(j) shouldBe 1
-    cartesians(j) shouldBe 0
+    // one shuffle per side: the second merge pass reuses both exchanges
+    exchanges(j) shouldBe 2
+    reusedExchanges(j) shouldBe 2
+    mergeShape(j, merges = 2)
   }
 
   it should "plan the binned as-of join with exactly one shuffle" in {
     val j = AsOfJoin.leftJoin(left, right, "5ns", Seq("k"), binned = true)
-    exchanges(j) shouldBe 1
-    cartesians(j) shouldBe 0
+    exchanges(j) shouldBe 2 // one per side, on (key, bin)
+    mergeShape(j, merges = 1)
   }
 
   it should "plan the range-merge as-of join as two clustered exchanges" in {
@@ -221,9 +234,11 @@ class PlanShapeSpec extends SparkTestBase {
 
   it should "plan the binned symmetric join as two windowed passes, no cartesian" in {
     val j = AsOfJoin.symmetricJoin(left, right, "5ns", Seq("k"), binned = true)
-    exchanges(j) shouldBe 2 // one per directional as-of pass
-    cartesians(j) shouldBe 0
-    globalSorts(j) shouldBe 0
+    // two per directional merge pass: each pass bins its own inputs, so the
+    // shuffle volume equals the two union exchanges of a windowed pass
+    exchanges(j) shouldBe 4
+    reusedExchanges(j) shouldBe 0
+    mergeShape(j, merges = 2)
   }
 
   it should "plan hash sampling as a pure scan filter (zero exchanges)" in {

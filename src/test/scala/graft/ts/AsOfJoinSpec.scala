@@ -1,7 +1,7 @@
 package graft.ts
 
 import graft.SparkTestBase
-import org.apache.spark.sql.Row
+import org.apache.spark.sql.{DataFrame, Row}
 
 /** As-of join corner cases (≙ reference LeftJoinSpec/FutureLeftJoinSpec:
   * tolerance=0 exact matching, ties, null-padding, empty sides, aliases,
@@ -22,6 +22,65 @@ class AsOfJoinSpec extends SparkTestBase {
       else AsOfJoin.leftJoin(lf, rf, tol, Seq("k"))
     out.collect().map(r => (r.getLong(0), r.getString(1),
       if (r.isNullAt(2)) None else Some(r.getInt(2)))).sortBy(x => (x._1, x._2))
+  }
+
+  /** Sorted rows, for order-insensitive comparison with [[bruteForce]]. */
+  private def norm(df: DataFrame): Seq[Seq[Any]] = sortRows(df.collect().map(_.toSeq).toSeq)
+  private def sortRows(rows: Seq[Seq[Any]]): Seq[Seq[Any]] = rows.sortBy(_.mkString("|"))
+
+  /** Value order with nulls least (Spark's ascending nulls-first). */
+  private val nullsFirst: Ordering[Any] = (a: Any, b: Any) => (a, b) match {
+    case (null, null) => 0
+    case (null, _) => -1
+    case (_, null) => 1
+    case (x: Comparable[_], y) => x.asInstanceOf[Comparable[Any]].compareTo(y)
+  }
+  private val tupleOrd: Ordering[Seq[Any]] = Ordering.Implicits.seqOrdering(nullsFirst)
+
+  /** Brute-force as-of reference: a nested loop over the collected rows.
+    * A left row's candidates are the right rows whose key equals its key
+    * (null matches null) and whose non-null time lies in [t - tol, t]
+    * (backward), [t, t + tol] (forward) or (t, t + tol] (strict); the
+    * nearest time wins, then the greatest value tuple (nulls least). A left
+    * row with a null time is null-padded. Rows: left columns ++ right value
+    * columns, sorted. */
+  private def bruteForce(l: DataFrame, r: DataFrame, tol: String, key: Seq[String],
+                         future: Boolean = false, strict: Boolean = false): Seq[Seq[Any]] = {
+    val tolNs = TimeSeriesOps.parseDuration(tol)
+    val rVals = r.columns.toSeq.filter(c => c != "time" && !key.contains(c))
+    val (lt, lk) = (l.columns.indexOf("time"), key.map(l.columns.indexOf(_)))
+    val (rt, rk) = (r.columns.indexOf("time"), key.map(r.columns.indexOf(_)))
+    val rv = rVals.map(r.columns.indexOf(_))
+    val rights = r.collect().map(_.toSeq).toSeq
+    sortRows(l.collect().map(_.toSeq).toSeq.map { lr =>
+      val cands = rights.filter { rr =>
+        lr(lt) != null && rr(rt) != null && lk.map(lr) == rk.map(rr) && {
+          val (a, b) = (lr(lt).asInstanceOf[Long], rr(rt).asInstanceOf[Long])
+          if (!future) b <= a && b >= a - tolNs
+          else (if (strict) b > a else b >= a) && b <= a + tolNs
+        }
+      }
+      val best = cands.reduceOption { (x, y) =>
+        val (tx, ty) = (x(rt).asInstanceOf[Long], y(rt).asInstanceOf[Long])
+        val c = if (tx != ty) { if (future) ty compare tx else tx compare ty }
+                else tupleOrd.compare(rv.map(x), rv.map(y))
+        if (c >= 0) x else y
+      }
+      lr ++ rv.map(i => best.map(_(i)).orNull)
+    })
+  }
+
+  /** Brute-force symmetric join: two backward [[bruteForce]] passes,
+    * aligned to (time, key, left values, right values, side). */
+  private def bruteSym(l: DataFrame, r: DataFrame, tol: String,
+                       key: Seq[String]): Seq[Seq[Any]] = {
+    def vals(df: DataFrame) = df.columns.toSeq.filter(c => c != "time" && !key.contains(c))
+    val out = (("time" +: key) ++ vals(l) ++ vals(r))
+    def pass(a: DataFrame, b: DataFrame, side: String) = {
+      val cols = a.columns.toSeq ++ vals(b)
+      bruteForce(a, b, tol, key).map(row => out.map(c => row(cols.indexOf(c))) :+ side)
+    }
+    sortRows(pass(l, r, "left") ++ pass(r, l, "right"))
   }
 
   behavior of "leftJoin (backward as-of)"
@@ -113,18 +172,16 @@ class AsOfJoinSpec extends SparkTestBase {
     val lf = lrows.toDF("time", "k", "lv")
     val rf = rrows.toDF("time", "k", "rv")
     for (tol <- Seq("7ns", "40ns", "1000ns")) {
-      def norm(df: org.apache.spark.sql.DataFrame) =
-        df.collect().map(_.toSeq).sortBy(_.toString)
       norm(AsOfJoin.leftJoin(lf, rf, tol, Seq("k"), binned = true)) shouldBe
-        norm(AsOfJoin.leftJoin(lf, rf, tol, Seq("k")))
+        bruteForce(lf, rf, tol, Seq("k"))
       norm(AsOfJoin.futureLeftJoin(lf, rf, tol, Seq("k"), binned = true)) shouldBe
-        norm(AsOfJoin.futureLeftJoin(lf, rf, tol, Seq("k")))
+        bruteForce(lf, rf, tol, Seq("k"), future = true)
       norm(AsOfJoin.futureLeftJoin(lf, rf, tol, Seq("k"),
         strictLookahead = true, binned = true)) shouldBe
-        norm(AsOfJoin.futureLeftJoin(lf, rf, tol, Seq("k"), strictLookahead = true))
+        bruteForce(lf, rf, tol, Seq("k"), future = true, strict = true)
       // keyless: the case binning exists for
       norm(AsOfJoin.leftJoin(lf.drop("k"), rf.drop("k"), tol, binned = true)) shouldBe
-        norm(AsOfJoin.leftJoin(lf.drop("k"), rf.drop("k"), tol))
+        bruteForce(lf.drop("k"), rf.drop("k"), tol, Seq.empty)
     }
   }
 
@@ -138,29 +195,27 @@ class AsOfJoinSpec extends SparkTestBase {
 
   it should "produce identical results to the union-window plan" in {
     val rnd = new scala.util.Random(7)
-    // unique (k, time) pairs so tie semantics cannot differ between paths
+    // unique (k, time) pairs
     val lrows = rnd.shuffle(Seq.tabulate(400)(i =>
       ((i * 5).toLong, if (i % 3 == 0) "a" else "b", i)))
     val rrows = rnd.shuffle(Seq.tabulate(400)(i =>
       ((i * 7 + 1).toLong, if (i % 2 == 0) "a" else "b", i + 1000)))
     val lf = lrows.toDF("time", "k", "lv")
     val rf = rrows.toDF("time", "k", "rv")
-    def norm(df: org.apache.spark.sql.DataFrame) =
-      df.collect().map(_.toSeq).sortBy(_.toString)
     for (tol <- Seq("0ns", "10ns", "500ns", "100000ns")) {
       norm(AsOfJoin.leftJoinMerge(lf, rf, tol, Seq("k"))) shouldBe
-        norm(AsOfJoin.leftJoin(lf, rf, tol, Seq("k")))
+        bruteForce(lf, rf, tol, Seq("k"))
     }
     // keyless (AllTuples distribution)
     norm(AsOfJoin.leftJoinMerge(lf.drop("k"), rf.drop("k"), "500ns")) shouldBe
-      norm(AsOfJoin.leftJoin(lf.drop("k"), rf.drop("k"), "500ns"))
+      bruteForce(lf.drop("k"), rf.drop("k"), "500ns", Seq.empty)
     // forward variants, strict and non-strict
     for (tol <- Seq("0ns", "10ns", "500ns")) {
       norm(AsOfJoin.futureLeftJoinMerge(lf, rf, tol, Seq("k"))) shouldBe
-        norm(AsOfJoin.futureLeftJoin(lf, rf, tol, Seq("k")))
+        bruteForce(lf, rf, tol, Seq("k"), future = true)
       norm(AsOfJoin.futureLeftJoinMerge(lf, rf, tol, Seq("k"),
         strictLookahead = true)) shouldBe
-        norm(AsOfJoin.futureLeftJoin(lf, rf, tol, Seq("k"), strictLookahead = true))
+        bruteForce(lf, rf, tol, Seq("k"), future = true, strict = true)
     }
   }
 
@@ -252,16 +307,97 @@ class AsOfJoinSpec extends SparkTestBase {
   it should "produce identical results on the binned scale path (incl. keyless)" in {
     val l = (0 until 40).map(i => (i * 7L + 3, "k" + (i % 2), i))
     val r = (0 until 40).map(i => (i * 11L, "k" + (i % 2), i * 100))
-    def run(key: Seq[String], binned: Boolean) = {
+    for (key <- Seq(Seq("k"), Seq.empty[String])) {
       val lf = (if (key.isEmpty) l.map(x => (x._1, x._3)).toDF("time", "lv")
                 else l.toDF("time", "k", "lv"))
       val rf = (if (key.isEmpty) r.map(x => (x._1, x._3)).toDF("time", "rv")
                 else r.toDF("time", "k", "rv"))
-      AsOfJoin.symmetricJoin(lf, rf, "25ns", key, binned = binned)
-        .collect().map(_.toSeq).sortBy(_.mkString("|")).toSeq
+      for (binned <- Seq(true, false))
+        norm(AsOfJoin.symmetricJoin(lf, rf, "25ns", key, binned = binned)) shouldBe
+          bruteSym(lf, rf, "25ns", key)
     }
-    run(Seq("k"), binned = true) shouldBe run(Seq("k"), binned = false)
-    run(Seq.empty, binned = true) shouldBe run(Seq.empty, binned = false)
+  }
+
+  behavior of "null times"
+
+  it should "never match a null-time right row and null-pad a null-time left row" in {
+    // a null time read as 0 would put right (null, "a") within 10ns of
+    // left (5, "a"), and left (null, "a") at the head of every window
+    val l = Seq[(Option[Long], String, Int)]((Some(5L), "a", 1), (None, "a", 2),
+      (Some(20L), "a", 3), (None, "b", 4), (Some(3L), "b", 5)).toDF("time", "k", "lv")
+    val r = Seq[(Option[Long], String, Int)]((None, "a", 10), (Some(15L), "a", 11),
+      (Some(22L), "a", 12), (None, "b", 13), (Some(6L), "c", 14)).toDF("time", "k", "rv")
+    val k = Seq("k")
+    for (tol <- Seq("10ns", "100ns")) {
+      for (j <- Seq(AsOfJoin.leftJoin(l, r, tol, k), AsOfJoin.leftJoinMerge(l, r, tol, k)))
+        norm(j) shouldBe bruteForce(l, r, tol, k)
+      for (strict <- Seq(false, true);
+           j <- Seq(AsOfJoin.futureLeftJoin(l, r, tol, k, strictLookahead = strict),
+             AsOfJoin.futureLeftJoinMerge(l, r, tol, k, strictLookahead = strict)))
+        norm(j) shouldBe bruteForce(l, r, tol, k, future = true, strict = strict)
+      norm(AsOfJoin.symmetricJoin(l, r, tol, k)) shouldBe bruteSym(l, r, tol, k)
+    }
+    AsOfJoin.leftJoinMerge(l, r, "10ns", k).filter($"lv" <= 2).orderBy("lv")
+      .collect().map(_.get(3)) shouldBe Array(null, null)
+  }
+
+  behavior of "right-side ties at identical (key, time)"
+
+  it should "resolve to the greatest value tuple on every layout, AQE mode and input order" in {
+    val lrows = Seq[(Long, String, Option[Int])]((10L, "a", Some(1)), (10L, "a", Some(9)),
+      (10L, "a", None), (12L, "a", Some(2)), (8L, "a", Some(3)), (14L, "a", Some(4)),
+      (15L, "a", Some(5)), (10L, "b", Some(6)), (9L, "b", Some(7)), (10L, null, Some(8)))
+    val rrows = Seq[(Long, String, Option[Int], String)](
+      (10L, "a", Some(2), null), (10L, "a", Some(2), "y"), (10L, "a", Some(1), "z"),
+      (10L, "a", None, "zz"), (14L, "a", Some(5), "p"), (14L, "a", Some(5), null),
+      (14L, "a", None, null), (10L, "b", Some(7), "q"), (10L, "b", Some(7), "r"),
+      (10L, null, Some(3), "n1"), (10L, null, Some(3), "n2"))
+    val k = Seq("k")
+    val tol = "5ns"
+    def frames(rev: Boolean) = {
+      def order[T](xs: Seq[T]) = if (rev) xs.reverse else xs
+      // spread the tied rows over map tasks so plan order can vary
+      (order(lrows).toDF("time", "k", "lv").repartition(3),
+        order(rrows).toDF("time", "k", "v", "s").repartition(3))
+    }
+    val (l0, r0) = frames(rev = false)
+    val backward = bruteForce(l0, r0, tol, k)
+    val forward = bruteForce(l0, r0, tol, k, future = true)
+    val strictFwd = bruteForce(l0, r0, tol, k, future = true, strict = true)
+    val symmetric = bruteSym(l0, r0, tol, k)
+    backward should contain(Seq(10L, "a", 9, 2, "y"))
+    strictFwd should contain(Seq(10L, "a", 9, 5, "p"))
+    symmetric should contain(Seq(10L, "a", 9, 2, "y", "right"))
+    for (parts <- Seq(1, 4, 7); aqe <- Seq(false, true); rev <- Seq(false, true)) {
+      spark.conf.set("spark.sql.shuffle.partitions", parts.toString)
+      spark.conf.set("spark.sql.adaptive.enabled", aqe.toString)
+      try {
+        val (l, r) = frames(rev)
+        withClue(s"partitions=$parts aqe=$aqe reversed=$rev: ") {
+          norm(AsOfJoin.leftJoin(l, r, tol, k)) shouldBe backward
+          norm(AsOfJoin.leftJoinMerge(l, r, tol, k)) shouldBe backward
+          norm(AsOfJoin.futureLeftJoin(l, r, tol, k)) shouldBe forward
+          norm(AsOfJoin.futureLeftJoinMerge(l, r, tol, k)) shouldBe forward
+          norm(AsOfJoin.futureLeftJoin(l, r, tol, k, strictLookahead = true)) shouldBe strictFwd
+          norm(AsOfJoin.futureLeftJoinMerge(l, r, tol, k, strictLookahead = true)) shouldBe
+            strictFwd
+          norm(AsOfJoin.symmetricJoin(l, r, tol, k)) shouldBe symmetric
+        }
+      } finally {
+        spark.conf.set("spark.sql.shuffle.partitions", "4")
+        spark.conf.set("spark.sql.adaptive.enabled", "false")
+      }
+    }
+  }
+
+  it should "skip the tie order when a right value type is unorderable" in {
+    // a map column cannot be sorted: the right side sorts by (key, time) only
+    val l = Seq((10L, "a")).toDF("time", "k")
+    val r = Seq((8L, "a", Map("x" -> 1))).toDF("time", "k", "m")
+    AsOfJoin.leftJoin(l, r, "5ns", Seq("k")).collect().head shouldBe
+      Row(10L, "a", Map("x" -> 1))
+    AsOfJoin.futureLeftJoin(l, r, "5ns", Seq("k")).collect().head shouldBe
+      Row(10L, "a", null)
   }
 
   behavior of "aliases and clashes"
@@ -273,6 +409,15 @@ class AsOfJoinSpec extends SparkTestBase {
       "5ns", Seq("k"), rightAlias = Some("r"))
     out.columns.toSeq shouldBe Seq("time", "k", "v", "r_v")
     out.select("r_v").as[Int].head() shouldBe 2
+  }
+
+  it should "reject key or time columns whose types differ between the sides" in {
+    // the merge hashes and compares both sides' keys as one type
+    val l = Seq((10L, 1)).toDF("time", "k")
+    val r = Seq((9L, 1L, 2)).toDF("time", "k", "v")
+    an[IllegalArgumentException] should be thrownBy AsOfJoin.leftJoin(l, r, "5ns", Seq("k"))
+    an[IllegalArgumentException] should be thrownBy AsOfJoin.leftJoin(
+      l, Seq((9, 1, 2)).toDF("time", "k", "v"), "5ns", Seq("k"))
   }
 
   it should "reject colliding value column names without aliases" in {
