@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.{functions => F}
 import graft.ts._
+import org.apache.spark.sql.graft.GraftStrategies
 
 /** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt. */
 object SparkEntry {
@@ -22,10 +23,16 @@ object SparkEntry {
       Summarizers.count() ++ Summarizers.sum("p_value100"), Seq("user_id"))
   }
 
-  /** One entry per implemented operator from SURVEY.md §2. */
+  /** One entry per implemented operator from SURVEY.md §2. Each registers
+    * graft's planner strategies on the session it is given before building
+    * its DataFrame, so every row plans with them whatever ran first. */
   def queries: Map[String, (SparkSession, String) => DataFrame] =
-    QueriesCore.queries ++ QueriesAgg.queries ++ QueriesWindows.queries ++
-      QueriesLLM.queries ++ QueriesEma.queries ++ QueriesSources.queries
+    (QueriesCore.queries ++ QueriesAgg.queries ++ QueriesWindows.queries ++
+      QueriesLLM.queries ++ QueriesEma.queries ++ QueriesSources.queries)
+      .map { case (name, q) => name -> { (spark: SparkSession, dir: String) =>
+        GraftStrategies.ensureRegistered(spark)
+        q(spark, dir)
+      } }
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omitted for non-SQL-expressible ops. */

@@ -597,9 +597,11 @@ object Sampling {
    * the "shuffle the corpus before sharding epochs" step, reproducible
    * run-to-run and independent of input partitioning.
    *
-   * Scale shape: one range-partitioned distributed sort (Spark's ordinary
-   * `orderBy` machinery — sampled range boundaries, so the hash keys
-   * spread uniformly across tasks), then `zipWithIndex` for the global
+   * Scale shape: one range-partitioned distributed sort
+   * (`repartitionByRange` + `sortWithinPartitions`: sampled range
+   * boundaries, so the hash keys spread uniformly across tasks at any
+   * input size, where a plain `orderBy` of a small input plans as one
+   * partition), then `zipWithIndex` for the global
    * position: a count job over partition sizes plus an O(1)-state local
    * scan — never a single-partition window (`row_number() OVER (ORDER BY
    * …)` would serialize the corpus through one task, which is exactly the
@@ -617,8 +619,9 @@ object Sampling {
       "shufflePositions: __u is reserved by this operator")
     // ShuffleSalt decorrelates the order from threshold samples on the
     // same base seed (see the chaining contract on hashUnit)
+    val order = Seq(F.col("__u").asc, F.col(idCol).asc)
     val sorted = df.withColumn("__u", hashUnit(F.col(idCol), seed + ShuffleSalt))
-      .orderBy(F.col("__u").asc, F.col(idCol).asc)
+      .repartitionByRange(order: _*).sortWithinPartitions(order: _*)
     val outSchema = org.apache.spark.sql.types.StructType(
       df.schema.fields :+ org.apache.spark.sql.types.StructField(
         "shuffle_pos", org.apache.spark.sql.types.LongType, nullable = false))

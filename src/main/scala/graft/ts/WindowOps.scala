@@ -3,7 +3,7 @@ package graft.ts
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.{Window, WindowSpec}
 import org.apache.spark.sql.{functions => F}
-import org.apache.spark.sql.graft.SlidingSumExec
+import org.apache.spark.sql.graft.GraftStrategies
 import scala.collection.immutable.ListMap
 
 /**
@@ -77,8 +77,8 @@ object WindowOps {
     * integral column (`count()`, `count(x)`, `sum(x)` on byte/short/int/
     * long, with or without `where`), the window plans as `SlidingSumExec`,
     * one O(n) sweep per key that adds entering and subtracts leaving rows;
-    * results are identical to WindowExec's. The planner strategy is
-    * registered on the session here (idempotent). Everything else — double
+    * results are identical to WindowExec's. graft's planner strategies
+    * are registered on the session here (idempotent). Everything else — double
     * or decimal sums (so `mean`, `stddev`, `addLagSum`), `min`/`max`,
     * quantiles, `collect_list` (`addWindows`), running frames
     * (`addSummaryColumns`) — stays on WindowExec's O(w) re-aggregating
@@ -86,7 +86,7 @@ object WindowOps {
   def summarizeWindows(df: DataFrame, window: TimeWindow, s: Summarizer,
                        key: Seq[String] = Seq.empty,
                        tieBreak: Seq[String] = Seq.empty): DataFrame = {
-    SlidingSumExec.ensureRegistered(df.sparkSession)
+    GraftStrategies.ensureRegistered(df.sparkSession)
     val outs = s.namedOutputs(Some(spec(window, key, tieBreak)))
     df.withColumns(ListMap(outs: _*))
   }

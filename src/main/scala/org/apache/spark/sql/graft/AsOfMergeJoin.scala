@@ -1,12 +1,13 @@
 package org.apache.spark.sql.graft
 
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.SparkStrategy
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Ascending, Attribute, BindReferences, BoundReference, Descending, Expression, GenericInternalRow, JoinedRow, RowOrdering, SortOrder, UnsafeProjection}
 import org.apache.spark.sql.catalyst.expressions.codegen.LazilyGeneratedOrdering
-import org.apache.spark.sql.catalyst.plans.logical.{BinaryNode, LogicalPlan}
+import org.apache.spark.sql.catalyst.plans.logical.{BinaryNode, LogicalPlan, Statistics}
+import org.apache.spark.sql.catalyst.plans.logical.statsEstimation.EstimationUtils
 import org.apache.spark.sql.execution.{BinaryExecNode, SparkPlan}
 import org.apache.spark.sql.catalyst.plans.physical.{AllTuples, ClusteredDistribution, Distribution}
 
@@ -47,6 +48,22 @@ case class AsOfMergePlan(left: LogicalPlan, right: LogicalPlan,
   override protected def withNewChildrenInternal(
       newLeft: LogicalPlan, newRight: LogicalPlan): AsOfMergePlan =
     copy(left = newLeft, right = newRight)
+
+  // Spark's estimate for a binary node it does not know is the product of
+  // its children's sizes; this join emits exactly one row per left row
+  override def stats: Statistics = statsCache.getOrElse {
+    statsCache = Some(computeStats())
+    statsCache.get
+  }
+
+  /** The left side's row count, and its size scaled by the output/left
+    * row width, as Spark estimates a `Project`. */
+  private def computeStats(): Statistics = {
+    val l = left.stats
+    val size = l.sizeInBytes * EstimationUtils.getSizePerRow(output) /
+      EstimationUtils.getSizePerRow(left.output)
+    Statistics(sizeInBytes = size.max(1), rowCount = l.rowCount)
+  }
 }
 
 object AsOfMergeStrategy extends SparkStrategy {
@@ -198,14 +215,6 @@ case class AsOfMergeJoinExec(left: SparkPlan, right: SparkPlan,
 
 object AsOfMergeJoin {
 
-  /** Register the strategy on the session once (idempotent). */
-  def ensureRegistered(spark: SparkSession): Unit = {
-    val cur = spark.experimental.extraStrategies
-    if (!cur.contains(AsOfMergeStrategy)) {
-      spark.experimental.extraStrategies = cur :+ AsOfMergeStrategy
-    }
-  }
-
   /** Build the joined DataFrame from two analyzed children; key and time
     * attributes are resolved by name against each side. Output = left
     * columns ++ right columns (nullable). */
@@ -213,7 +222,7 @@ object AsOfMergeJoin {
                     key: Seq[String], timeCol: String,
                     future: Boolean = false, strict: Boolean = false): DataFrame = {
     val spark = left.sparkSession
-    ensureRegistered(spark)
+    GraftStrategies.ensureRegistered(spark)
     val lPlan = left.queryExecution.analyzed
     val rPlan = right.queryExecution.analyzed
     def attr(plan: LogicalPlan, name: String): Attribute =

@@ -1,7 +1,6 @@
 package org.apache.spark.sql.graft
 
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Alias, And, Ascending, Attribute, Cast, CurrentRow, EvalMode, Expression, IsNotNull, IsNull, JoinedRow, Literal, NamedExpression, RowFrame, SortOrder, SpecialFrameBoundary, SpecificInternalRow, SpecifiedWindowFrame, UnsafeProjection, UnsafeRow, WindowExpression, WindowSpecDefinition}
 import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateExpression, Count, Sum}
@@ -170,14 +169,6 @@ object SlidingSumExec {
         SlidingColumn(if (s.child.dataType == LongType) s.child
           else Cast(s.child, LongType), isSum = true)
     }
-
-  /** Register the strategy on the session once (idempotent). */
-  def ensureRegistered(spark: SparkSession): Unit = {
-    val cur = spark.experimental.extraStrategies
-    if (!cur.contains(SlidingSumStrategy)) {
-      spark.experimental.extraStrategies = cur :+ SlidingSumStrategy
-    }
-  }
 }
 
 /**

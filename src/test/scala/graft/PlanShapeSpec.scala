@@ -8,7 +8,9 @@ import org.apache.spark.sql.execution.exchange.{ReusedExchangeExec, ShuffleExcha
 import org.apache.spark.sql.execution.joins.{BroadcastNestedLoopJoinExec, CartesianProductExec}
 import org.apache.spark.sql.execution.SortExec
 import org.apache.spark.sql.execution.window.WindowExec
-import org.apache.spark.sql.graft.{AsOfMergeJoinExec, SlidingSumExec}
+import org.apache.spark.sql.catalyst.plans.logical.statsEstimation.EstimationUtils.getSizePerRow
+import org.apache.spark.sql.catalyst.plans.physical.{Partitioning, RangePartitioning, SinglePartition}
+import org.apache.spark.sql.graft.{AsOfMergeJoinExec, AsOfMergePlan, GraftStrategies, SlidingSumExec}
 import org.apache.spark.sql.{functions => F}
 
 /**
@@ -52,20 +54,20 @@ class PlanShapeSpec extends SparkTestBase {
     cartesians(df) shouldBe 0
   }
 
-  it should "plan the as-of join with exactly one shuffle and no cartesian" in {
+  it should "plan the as-of join as one merge over one exchange per side and no cartesian" in {
     val j = AsOfJoin.leftJoin(left, right, "5ns", Seq("k"))
     exchanges(j) shouldBe 2 // one per side
     mergeShape(j, merges = 1)
   }
 
-  it should "plan the future as-of join with exactly one shuffle" in {
+  it should "plan the future as-of join as one merge over one exchange per side" in {
     val j = AsOfJoin.futureLeftJoin(left, right, "5ns", Seq("k"),
       strictLookahead = true)
     exchanges(j) shouldBe 2 // one per side
     mergeShape(j, merges = 1)
   }
 
-  it should "plan the symmetric join with exactly one shuffle" in {
+  it should "plan the symmetric join as two merges over one reused exchange per side" in {
     val j = AsOfJoin.symmetricJoin(left, right, "5ns", Seq("k"))
     // one shuffle per side: the second merge pass reuses both exchanges
     exchanges(j) shouldBe 2
@@ -73,7 +75,7 @@ class PlanShapeSpec extends SparkTestBase {
     mergeShape(j, merges = 2)
   }
 
-  it should "plan the binned as-of join with exactly one shuffle" in {
+  it should "plan the binned as-of join as one merge over one exchange per side" in {
     val j = AsOfJoin.leftJoin(left, right, "5ns", Seq("k"), binned = true)
     exchanges(j) shouldBe 2 // one per side, on (key, bin)
     mergeShape(j, merges = 1)
@@ -135,12 +137,12 @@ class PlanShapeSpec extends SparkTestBase {
       windowExecs(df) shouldBe 0
       s.head.collect { case e: ShuffleExchangeExec => e } should have size 1
       s.head.collect { case o: SortExec => o.global } shouldBe Seq(false)
-      exchanges(df) shouldBe 2 // the final orderBy's range exchange on top
+      exchanges(df) shouldBe 2 // the final orderBy's exchange on top
     }
   }
 
   it should "keep double sums, addLagSum, addWindows and addSummaryColumns on WindowExec" in {
-    SlidingSumExec.ensureRegistered(spark)
+    GraftStrategies.ensureRegistered(spark)
     val past = WindowOps.pastAbsoluteTime("1d")
     val fallbacks = Seq(
       WindowOps.summarizeWindows(events.withColumn("v", F.col("value100").cast("double")),
@@ -232,7 +234,84 @@ class PlanShapeSpec extends SparkTestBase {
     exchanges(TimeSeriesOps.orderByTime(df)) should be <= 2
   }
 
-  it should "plan the binned symmetric join as two windowed passes, no cartesian" in {
+  /** Sets one session conf for `body`, then restores it. */
+  private def withSQLConf[T](kv: (String, String))(body: => T): T = {
+    val (k, v) = kv
+    val old = spark.conf.getOption(k)
+    spark.conf.set(k, v)
+    try body finally old.fold(spark.conf.unset(k))(spark.conf.set(k, _))
+  }
+
+  /** The partitioning of every exchange in the plan. */
+  private def partitionings(df: DataFrame): Seq[Partitioning] =
+    plan(df).collect { case e: ShuffleExchangeExec => e.outputPartitioning }
+
+  /** The partitioning of the exchange under each global sort. */
+  private def sortInputs(df: DataFrame): Seq[Partitioning] =
+    plan(df).collect { case s: SortExec if s.global => s.child }.map {
+      case InputAdapter(e: ShuffleExchangeExec) => e.outputPartitioning
+      case other => fail(s"a global sort over ${other.nodeName}, not an exchange")
+    }
+
+  private def smallSort: DataFrame =
+    left.groupBy("k").agg(F.sum("lv").as("s")).orderBy("k")
+
+  it should "plan a small global orderBy as one sort over a single-partition exchange" in {
+    GraftStrategies.ensureRegistered(spark)
+    val df = smallSort
+    sortInputs(df) shouldBe Seq(SinglePartition)
+    partitionings(df).collect { case r: RangePartitioning => r } shouldBe empty
+    exchanges(df) shouldBe 2 // the aggregation's and the sort's
+    df.collect().map(_.getString(0)) shouldBe Array("a", "b")
+  }
+
+  it should "keep range partitioning for a global sort above the advisory partition size" in {
+    GraftStrategies.ensureRegistered(spark)
+    withSQLConf("spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "1") {
+      val df = smallSort
+      sortInputs(df) should matchPattern { case Seq(_: RangePartitioning) => }
+      partitionings(df) should not contain SinglePartition
+      df.collect().map(_.getString(0)) shouldBe Array("a", "b")
+    }
+  }
+
+  it should "add no exchange for a global sort of input in range order or one partition" in {
+    GraftStrategies.ensureRegistered(spark)
+    val rows = Seq((3L, 1), (1L, 2), (2L, 3)).toDF("time", "v")
+    val ordered = TimeSeriesOps.orderByTime(rows)
+    val twice = F.explode(F.array($"v", $"v")).as("e")
+    // each child already satisfies the sort with one exchange: orderByTime's
+    // range exchange (through a filter and projection, an aggregation keyed
+    // on time or an explode), an inner global sort's, or the single
+    // partition of a global aggregate, a limit, coalesce(1) or an
+    // unpartitioned window
+    val sorts = Seq(
+      ordered.orderBy("time"),
+      ordered.filter($"v" > 1).select($"time", ($"v" * 2).as("w")).orderBy("time", "w"),
+      ordered.groupBy("time").agg(F.sum("v").as("s")).orderBy("time"),
+      ordered.select($"time", twice).orderBy("time"),
+      rows.orderBy("time").select($"time", twice).orderBy("time"),
+      left.groupBy().agg(F.sum("lv").as("s")).orderBy("s"),
+      smallSort.limit(1).orderBy("s"),
+      left.groupBy("k").agg(F.sum("lv").as("s")).coalesce(1).orderBy("s"),
+      left.withColumn("n", F.count(F.lit(1)).over(
+        org.apache.spark.sql.expressions.Window.orderBy("time"))).orderBy("lv"))
+    for (df <- sorts) withClue(plan(df).toString) { exchanges(df) shouldBe 1 }
+    sorts.head.collect().map(_.getLong(0)) shouldBe Array(1L, 2L, 3L)
+  }
+
+  it should "estimate an as-of merge join's size from its left side, not the product" in {
+    val wide = (0 until 1000).map(i => (i.toLong, if (i % 2 == 0) "a" else "b", i))
+      .toDF("time", "k", "rv")
+    val j = AsOfJoin.leftJoinMerge(left, wide, "5ns", Seq("k"))
+    val m = j.queryExecution.optimizedPlan.collectFirst { case m: AsOfMergePlan => m }.get
+    m.stats.rowCount shouldBe m.left.stats.rowCount
+    m.stats.sizeInBytes shouldBe
+      m.left.stats.sizeInBytes * getSizePerRow(m.output) / getSizePerRow(m.left.output)
+    m.stats.sizeInBytes should be < m.right.stats.sizeInBytes
+  }
+
+  it should "plan the binned symmetric join as two merge passes, no cartesian" in {
     val j = AsOfJoin.symmetricJoin(left, right, "5ns", Seq("k"), binned = true)
     // two per directional merge pass: each pass bins its own inputs, so the
     // shuffle volume equals the two union exchanges of a windowed pass

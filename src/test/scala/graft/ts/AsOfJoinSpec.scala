@@ -193,7 +193,7 @@ class AsOfJoinSpec extends SparkTestBase {
 
   behavior of "leftJoinMerge (phase-2 range-merge operator)"
 
-  it should "produce identical results to the union-window plan" in {
+  it should "produce identical results to a brute-force as-of join" in {
     val rnd = new scala.util.Random(7)
     // unique (k, time) pairs
     val lrows = rnd.shuffle(Seq.tabulate(400)(i =>
@@ -230,7 +230,7 @@ class AsOfJoinSpec extends SparkTestBase {
       Array((1L, None), (3L, Some(2)))
   }
 
-  it should "match columns and null-padding of the union path" in {
+  it should "keep the left and right columns in order and null-pad a miss" in {
     val l = Seq((10L, "a")).toDF("time", "k")
     val r = Seq((8L, "a", 1, "x")).toDF("time", "k", "v", "s")
     val out = AsOfJoin.leftJoinMerge(l, r, "5ns", Seq("k"))

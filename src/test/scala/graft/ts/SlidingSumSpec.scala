@@ -4,7 +4,7 @@ import graft.SparkTestBase
 import org.apache.spark.SparkThrowable
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.{Window, WindowSpec}
-import org.apache.spark.sql.graft.{SlidingSumExec, SlidingSumStrategy}
+import org.apache.spark.sql.graft.{GraftStrategies, SlidingSumExec, SlidingSumStrategy}
 import org.apache.spark.sql.execution.window.WindowExec
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.{functions => F}
@@ -19,7 +19,7 @@ import scala.util.Random
 class SlidingSumSpec extends SparkTestBase {
 
   private lazy val fast: SparkSession = {
-    SlidingSumExec.ensureRegistered(spark)
+    GraftStrategies.ensureRegistered(spark)
     spark
   }
   private lazy val reference: SparkSession = spark.newSession()
@@ -197,8 +197,9 @@ class SlidingSumSpec extends SparkTestBase {
   }
 
   it should "register its strategy once" in {
-    SlidingSumExec.ensureRegistered(fast)
-    SlidingSumExec.ensureRegistered(fast)
+    GraftStrategies.ensureRegistered(fast)
+    GraftStrategies.ensureRegistered(fast)
     fast.experimental.extraStrategies.count(_ == SlidingSumStrategy) shouldBe 1
+    for (s <- GraftStrategies.all) fast.experimental.extraStrategies.count(_ == s) shouldBe 1
   }
 }

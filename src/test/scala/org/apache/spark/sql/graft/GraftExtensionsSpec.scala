@@ -5,8 +5,9 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.{functions => F}
 
 /** The config-based extension entry point must inject the as-of
-  * merge-join strategy — verified against a real SparkSessionExtensions
-  * instance — and the sliding-sum strategy, verified end to end in a
+  * merge-join strategy, with the rest of `GraftStrategies.all` — verified
+  * against a real SparkSessionExtensions instance — and the sliding-sum
+  * strategy, verified end to end in a
   * session built on the shared SparkContext with `spark.sql.extensions`
   * set. Lives in the sql package tree because `buildPlannerStrategies` is
   * private[sql] (and `SparkContext.conf` private[spark]). */
@@ -17,6 +18,7 @@ class GraftExtensionsSpec extends graft.SparkTestBase {
     new graft.GraftExtensions().apply(ext)
     val strategies = ext.buildPlannerStrategies(spark)
     strategies should contain(AsOfMergeStrategy)
+    strategies should contain theSameElementsAs GraftStrategies.all
   }
 
   it should "plan a plain-Spark bounded count as SlidingSumExec under spark.sql.extensions" in {
