@@ -11,9 +11,13 @@ Usage: selfcheck.py <sfDir> <verifyOutDir> [--scale-invariants]
                     component families and the per-row EMA family, see
                     scripts/scale_oracles.py) with exact linear-shaped
                     invariant checks — the mode scripts/scale_probe.py
-                    uses on derived 10x+ data, where the all-pairs SQL
-                    oracles are infeasible. The driver's sf0.01 gate never
-                    sets this.
+                    uses on derived 10x+ data. The sf0.01 dedup oracles
+                    find pairs by an equi-join on the shingle (QueriesLLM's
+                    shinglePairsCtes) and take well under a second there,
+                    but they are exact-pair contracts: LSH may miss a pair
+                    with J in [0.8, 0.9), which larger corpora have, so the
+                    invariants stay for scale. The driver's sf0.01 gate
+                    never sets this.
 --rel-tol X         compare float columns with relative tolerance X
                     instead of exact equality (scale runs only: DuckDB's
                     own summation order shifts by a few ulp on enlarged

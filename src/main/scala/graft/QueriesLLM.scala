@@ -1335,6 +1335,47 @@ object QueriesLLM {
              band
            FROM bits, range(0, 4) r(band))"""
 
+  /** Exact word-3-shingle Jaccard pairs over `src(doc_id, text)`, as CTE
+    * definitions to follow a `WITH`: `d(doc_id, sh)` the distinct shingle
+    * lists, `sg(doc_id, g)` one row per shingle, and `pairs(id_a, id_b,
+    * jaccard)` every pair passing `pairPred` (over `a.doc_id`, `b.doc_id`)
+    * with J >= 0.5. The intersection size is the row count of the
+    * equi-join on the shingle (exact because `doc_id` is unique in `src`
+    * and each `sh` is distinct): a pair with J >= 0.5 shares a shingle, so
+    * the join drops none, and a null text has `sh = []` and pairs with
+    * nothing. Every CTE is MATERIALIZED so a caller that references
+    * `pairs` twice does not run the join twice. Shared by the dedup pair,
+    * component and keep oracles and the composed pipeline. */
+  private def shinglePairsCtes(src: String,
+      pairPred: String = "a.doc_id < b.doc_id"): String =
+    s"""d AS MATERIALIZED (
+           SELECT doc_id, list_distinct([array_to_string(toks[i:i+2], ' ')
+               for i in range(1, greatest(len(toks) - 2, 1) + 1)]) AS sh
+           FROM (SELECT doc_id, string_split(text, ' ') AS toks FROM $src)),
+         sg AS MATERIALIZED (SELECT doc_id, unnest(sh) AS g FROM d),
+         pairs AS MATERIALIZED (
+           SELECT id_a, id_b, jaccard FROM (
+             SELECT i.id_a, i.id_b, CAST(i.isz AS DOUBLE)
+                 / CAST(len(a.sh) + len(b.sh) - i.isz AS DOUBLE) AS jaccard
+             FROM (SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS isz
+                   FROM sg a JOIN sg b ON a.g = b.g AND $pairPred
+                   GROUP BY a.doc_id, b.doc_id) i
+             JOIN d a ON a.doc_id = i.id_a JOIN d b ON b.doc_id = i.id_b)
+           WHERE jaccard >= 0.5)"""
+
+  /** Connected components of the undirected graph `edges(id_a, id_b)` over
+    * the node ids `id` of `nodes`, as CTE definitions to follow a
+    * `WITH RECURSIVE`: min-label propagation in `comp(id, lbl)`, ending in
+    * `lab(id, lbl)`, each node's smallest reachable id. */
+  private def componentsCtes(nodes: String, id: String, edges: String): String =
+    s"""und AS (SELECT id_a AS src, id_b AS dst FROM $edges
+                 UNION ALL SELECT id_b, id_a FROM $edges),
+         comp(id, lbl) AS (
+           SELECT $id, $id FROM $nodes
+           UNION
+           SELECT u.dst, c.lbl FROM comp c JOIN und u ON u.src = c.id),
+         lab AS MATERIALIZED (SELECT id, min(lbl) AS lbl FROM comp GROUP BY id)"""
+
   /** [[hashUnitCteSeed]]'s lane arithmetic as a bare SELECT over an
     * arbitrary upstream CTE (doc_id only) — the composed-pipeline oracle
     * replays threshold draws over mid-chain survivor sets, not over
@@ -1355,12 +1396,14 @@ object QueriesLLM {
   /** DuckDB replay of the ENTIRE pipeline_e2e chain in one statement.
     * Every stage reuses the exact SQL shape its single-op oracle is
     * already verified with (doc_hard_filters' keep conjunction, the
-    * dedup_keep_docs recursive components over exact shingle-Jaccard
-    * pairs — LSH recall ~1 on this corpus, and candidacy is pair-local so
-    * the equality transfers to the filtered subset — dup_spans/strip_spans
-    * gram windows, pii_redact's staged regex chain, sample_by_weight's
-    * hash-unit threshold on the quality score, packSql's recursive greedy
-    * fill at budget 256, and shuffle_positions' salted order). */
+    * dedup_keep_docs components over exact shingle-Jaccard pairs — on the
+    * sf0.01 gate corpus LSH finds every exact pair, and candidacy is
+    * pair-local so the equality transfers to the filtered subset —
+    * dup_spans/strip_spans gram windows, pii_redact's staged regex chain,
+    * sample_by_weight's hash-unit threshold on the quality score, packSql's
+    * recursive greedy fill at budget 256, and shuffle_positions' salted
+    * order). Every non-recursive CTE referenced more than once is
+    * MATERIALIZED: DuckDB inlines the others at each reference. */
   private lazy val pipelineE2eOracle: String = {
     val n = "len(string_split(text, ' '))"
     val mtl = s"(CAST(length(text) AS DOUBLE) - (CAST($n AS DOUBLE) - 1.0)) / CAST($n AS DOUBLE)"
@@ -1370,26 +1413,15 @@ object QueriesLLM {
            AND len(list_filter(string_split(text, ' '), t -> t IN ($stopEn))) >= 2
            AND position('{' IN text) = 0
            AND position('lorem ipsum' IN lower(text)) = 0"""
-    val isz = "len(list_intersect(a.sh, b.sh))"
-    val j = s"CAST($isz AS DOUBLE) / CAST(len(a.sh) + len(b.sh) - $isz AS DOUBLE)"
     s"""WITH RECURSIVE
-         hf AS (SELECT doc_id, text FROM documents WHERE $keepWhere),
-         dsh AS (SELECT doc_id, list_distinct([array_to_string(toks[i:i+2], ' ')
-             for i in range(1, greatest(len(toks) - 2, 1) + 1)]) AS sh
-           FROM (SELECT doc_id, string_split(text, ' ') AS toks FROM hf)),
-         e0 AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b
-           FROM dsh a JOIN dsh b ON a.doc_id < b.doc_id WHERE $j >= 0.5),
-         und AS (SELECT id_a AS src, id_b AS dst FROM e0
-                 UNION ALL SELECT id_b, id_a FROM e0),
-         comp(id, lbl) AS (
-           SELECT doc_id, doc_id FROM hf
-           UNION
-           SELECT u.dst, c.lbl FROM comp c JOIN und u ON u.src = c.id),
-         reps AS (SELECT id FROM comp GROUP BY id HAVING id = min(lbl)),
-         uq AS (SELECT hf.doc_id, hf.text FROM hf JOIN reps ON hf.doc_id = reps.id),
-         t AS (SELECT doc_id, string_split(text, ' ') AS toks FROM uq),
+         hf AS MATERIALIZED (SELECT doc_id, text FROM documents WHERE $keepWhere),
+         ${shinglePairsCtes("hf")},
+         ${componentsCtes("hf", "doc_id", "pairs")},
+         uq AS (SELECT hf.doc_id, hf.text FROM hf JOIN lab
+                ON hf.doc_id = lab.id WHERE lab.id = lab.lbl),
+         t AS MATERIALIZED (SELECT doc_id, string_split(text, ' ') AS toks FROM uq),
          g AS (SELECT doc_id, unnest(range(1, len(toks) - 2)) AS i, toks FROM t),
-         gr AS (SELECT doc_id, CAST(i - 1 AS INTEGER) AS pos,
+         gr AS MATERIALIZED (SELECT doc_id, CAST(i - 1 AS INTEGER) AS pos,
                   array_to_string(toks[i : i + 3], ' ') AS gram FROM g),
          dg AS (SELECT gram FROM gr GROUP BY gram HAVING count(DISTINCT doc_id) >= 2),
          hh AS (SELECT gr.doc_id, gr.pos FROM gr JOIN dg USING (gram)),
@@ -1422,9 +1454,9 @@ object QueriesLLM {
                '${Pii.PhonePattern}', '${Pii.PhoneToken}', 'g'),
                '${Pii.Ipv4Pattern}', '${Pii.IpToken}', 'g') AS text
            FROM inj),
-         qw AS (SELECT doc_id, text, ${qualityExprSqlOn("text")} AS q FROM red),
+         qw AS MATERIALIZED (SELECT doc_id, text, ${qualityExprSqlOn("text")} AS q FROM red),
          hw AS (${hashLanesFrom(42L, "qw")}),
-         smp AS (SELECT qw.doc_id, qw.text, qw.q FROM qw JOIN hw USING (doc_id)
+         smp AS MATERIALIZED (SELECT qw.doc_id, qw.text, qw.q FROM qw JOIN hw USING (doc_id)
                  WHERE hw.u < least(1.0, 0.9 * qw.q)),
          hashed AS (SELECT doc_id,
              CAST(len(regexp_extract_all(text, '[A-Za-z]+|[0-9]+|[^A-Za-z0-9\\s]')) AS BIGINT) AS sz,
@@ -1443,7 +1475,7 @@ object QueriesLLM {
              xor(b2, b2 >> 16) AS bh,
              ((ah % 2147483648) * 4294967296 + bh) / 9.223372036854776e18 AS u
            FROM smp),
-         ranked AS (SELECT doc_id, sz, pack_bucket,
+         ranked AS MATERIALIZED (SELECT doc_id, sz, pack_bucket,
              row_number() OVER (PARTITION BY pack_bucket ORDER BY u, doc_id) AS rn
            FROM hashed),
          packs AS (
@@ -1723,25 +1755,16 @@ object QueriesLLM {
          ORDER BY q_id, rank"""
   }
 
-  /** Shared by dedup_against_minhash and dedup_against_index: on this
-    * corpus the J gap below 0.9 is empty (see dedup_minhash_lsh), so the
-    * LSH+verify output equals the exact all-cross-pairs recomputation. */
-  private val dedupAgainstMinhashOracle: String = {
-    val isz = "len(list_intersect(a.sh, b.sh))"
-    val j = s"CAST($isz AS DOUBLE) / CAST(len(a.sh) + len(b.sh) - $isz AS DOUBLE)"
-    s"""WITH d AS (
-         SELECT doc_id, list_distinct([array_to_string(toks[i:i+2], ' ')
-             for i in range(1, greatest(len(toks) - 2, 1) + 1)]) AS sh
-         FROM (SELECT doc_id, string_split(text, ' ') AS toks FROM documents)),
-       dropped AS (
-         SELECT DISTINCT a.doc_id
-         FROM d a JOIN d b ON a.doc_id % 2 = 1 AND b.doc_id % 2 = 0
-         WHERE $j >= 0.5)
+  /** Shared by dedup_against_minhash and dedup_against_index: on the
+    * sf0.01 gate corpus every shingle pair with J >= 0.5 has J >= 0.9 (see
+    * dedup_minhash_lsh), so the LSH+verify output equals the exact
+    * all-cross-pairs recomputation. */
+  private val dedupAgainstMinhashOracle: String =
+    s"""WITH ${shinglePairsCtes("documents", "a.doc_id % 2 = 1 AND b.doc_id % 2 = 0")}
        SELECT doc_id, source FROM documents
        WHERE doc_id % 2 = 1
-         AND doc_id NOT IN (SELECT doc_id FROM dropped)
+         AND doc_id NOT IN (SELECT id_a FROM pairs)
        ORDER BY doc_id"""
-  }
 
   /** BPE registry parameters: 6 merges over the 2000 most frequent words. */
   private val BpeK = 6
@@ -1932,47 +1955,31 @@ object QueriesLLM {
          SELECT a.doc_id AS id_a, b.doc_id AS id_b
          FROM d a JOIN d b ON a.nt = b.nt AND a.doc_id < b.doc_id
          ORDER BY id_a, id_b""",
-    "dedup_minhash_lsh" -> {
-      // Exact word-3-shingle Jaccard over all pairs: on this corpus every
-      // true pair has J >= 0.9 (gap below 0.9 is empty), where 16-band/8-row
-      // LSH recall is ~1 - 1e-4 — so the LSH+exact-verify output equals the
-      // exact pair list, and the jaccard values are identical integer ratios.
-      val isz = "len(list_intersect(a.sh, b.sh))"
-      val j = s"CAST($isz AS DOUBLE) / CAST(len(a.sh) + len(b.sh) - $isz AS DOUBLE)"
-      s"""WITH d AS (
-           SELECT doc_id, list_distinct([array_to_string(toks[i:i+2], ' ')
-               for i in range(1, greatest(len(toks) - 2, 1) + 1)]) AS sh
-           FROM (SELECT doc_id, string_split(text, ' ') AS toks FROM documents))
-         SELECT a.doc_id AS id_a, b.doc_id AS id_b, $j AS jaccard
-         FROM d a JOIN d b ON a.doc_id < b.doc_id
-         WHERE $j >= 0.5
-         ORDER BY id_a, id_b"""
-    },
-    "dedup_lsh_edit" -> {
-      // Same exact-Jaccard candidate tier as dedup_minhash_lsh (recall ~1
-      // at this band/row config), then the identical Levenshtein verify:
-      // edit_sim = 1 - lev/max(len) as an exact integer-ratio double.
-      val isz = "len(list_intersect(a.sh, b.sh))"
-      val j = s"CAST($isz AS DOUBLE) / CAST(len(a.sh) + len(b.sh) - $isz AS DOUBLE)"
-      s"""WITH t AS (SELECT doc_id, text, string_split(text, ' ') AS toks
-           FROM documents),
-         d AS (
-           SELECT doc_id, text, list_distinct([array_to_string(toks[i:i+2], ' ')
-               for i in range(1, greatest(len(toks) - 2, 1) + 1)]) AS sh
-           FROM t),
-         p AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b, $j AS jaccard,
-               a.text AS ta, b.text AS tb
-           FROM d a JOIN d b ON a.doc_id < b.doc_id
-           WHERE $j >= 0.5)
-         SELECT id_a, id_b, jaccard,
-           CAST(levenshtein(ta, tb) AS BIGINT) AS dist,
-           1.0 - CAST(levenshtein(ta, tb) AS DOUBLE)
-             / CAST(greatest(length(ta), length(tb)) AS DOUBLE) AS edit_sim
-         FROM p
-         WHERE 1.0 - CAST(levenshtein(ta, tb) AS DOUBLE)
-             / CAST(greatest(length(ta), length(tb)) AS DOUBLE) >= 0.6
-         ORDER BY id_a, id_b"""
-    },
+    // Exact word-3-shingle Jaccard over all pairs. On the sf0.01 gate
+    // corpus every pair with J >= 0.5 has J >= 0.9, where 16-band/8-row LSH
+    // recall is ~1 - 1e-4, so the LSH+exact-verify output equals the exact
+    // pair list, and the jaccard values are identical integer ratios. Larger
+    // corpora have pairs in [0.8, 0.9) that LSH may miss; scale runs check
+    // this operator with scripts/scale_oracles.py's invariants instead.
+    "dedup_minhash_lsh" ->
+      s"""WITH ${shinglePairsCtes("documents")}
+         SELECT id_a, id_b, jaccard FROM pairs ORDER BY id_a, id_b""",
+    // Same exact-Jaccard candidate tier as dedup_minhash_lsh (equal to the
+    // LSH candidates on the sf0.01 gate corpus), then the identical
+    // Levenshtein verify: edit_sim = 1 - lev/max(len) as an exact
+    // integer-ratio double.
+    "dedup_lsh_edit" ->
+      s"""WITH ${shinglePairsCtes("documents")},
+         e AS (SELECT id_a, id_b, jaccard, dist,
+             1.0 - CAST(dist AS DOUBLE) / CAST(ml AS DOUBLE) AS edit_sim
+           FROM (SELECT p.id_a, p.id_b, p.jaccard,
+               CAST(levenshtein(a.text, b.text) AS BIGINT) AS dist,
+               greatest(length(a.text), length(b.text)) AS ml
+             FROM pairs p JOIN documents a ON a.doc_id = p.id_a
+               JOIN documents b ON b.doc_id = p.id_b))
+         SELECT id_a, id_b, jaccard, dist, edit_sim FROM e
+         WHERE edit_sim >= 0.6
+         ORDER BY id_a, id_b""",
     // The normalize chain (translate x3 + regexp_replace + trim) is the
     // exact pinned semantics of the normalizeText kernel; the variant
     // construction mirrors the engine's translate/concat expression.
@@ -2062,66 +2069,22 @@ object QueriesLLM {
          SELECT q_id, n_id, rank FROM ranked WHERE rank <= 5 ORDER BY q_id, rank"""
     },
     "dedup_clusters" ->
-      """WITH RECURSIVE
-         d AS (
-           SELECT doc_id, list_distinct([array_to_string(toks[i:i+2], ' ')
-               for i in range(1, greatest(len(toks) - 2, 1) + 1)]) AS sh
-           FROM (SELECT doc_id, string_split(text, ' ') AS toks FROM documents)),
-         e0 AS (
-           SELECT a.doc_id AS id_a, b.doc_id AS id_b
-           FROM d a JOIN d b ON a.doc_id < b.doc_id
-           WHERE CAST(len(list_intersect(a.sh, b.sh)) AS DOUBLE)
-             / CAST(len(a.sh) + len(b.sh) - len(list_intersect(a.sh, b.sh)) AS DOUBLE) >= 0.5),
-         und AS (SELECT id_a AS src, id_b AS dst FROM e0
-                 UNION ALL SELECT id_b, id_a FROM e0),
-         comp(id, lbl) AS (
-           SELECT doc_id, doc_id FROM documents
-           UNION
-           SELECT u.dst, c.lbl FROM comp c JOIN und u ON u.src = c.id)
-         SELECT id AS doc_id, min(lbl) AS cluster_id FROM comp
-         GROUP BY id ORDER BY doc_id""",
+      s"""WITH RECURSIVE ${shinglePairsCtes("documents")},
+         ${componentsCtes("documents", "doc_id", "pairs")}
+         SELECT id AS doc_id, lbl AS cluster_id FROM lab ORDER BY doc_id""",
     "dedup_keep_docs" ->
-      """WITH RECURSIVE
-         d AS (
-           SELECT doc_id, list_distinct([array_to_string(toks[i:i+2], ' ')
-               for i in range(1, greatest(len(toks) - 2, 1) + 1)]) AS sh
-           FROM (SELECT doc_id, string_split(text, ' ') AS toks FROM documents)),
-         e0 AS (
-           SELECT a.doc_id AS id_a, b.doc_id AS id_b
-           FROM d a JOIN d b ON a.doc_id < b.doc_id
-           WHERE CAST(len(list_intersect(a.sh, b.sh)) AS DOUBLE)
-             / CAST(len(a.sh) + len(b.sh) - len(list_intersect(a.sh, b.sh)) AS DOUBLE) >= 0.5),
-         und AS (SELECT id_a AS src, id_b AS dst FROM e0
-                 UNION ALL SELECT id_b, id_a FROM e0),
-         comp(id, lbl) AS (
-           SELECT doc_id, doc_id FROM documents
-           UNION
-           SELECT u.dst, c.lbl FROM comp c JOIN und u ON u.src = c.id),
-         keep AS (SELECT id FROM comp GROUP BY id HAVING id = min(lbl))
-         SELECT doc_id, source FROM documents JOIN keep ON doc_id = keep.id
+      s"""WITH RECURSIVE ${shinglePairsCtes("documents")},
+         ${componentsCtes("documents", "doc_id", "pairs")}
+         SELECT doc_id, source FROM documents JOIN lab ON doc_id = lab.id
+         WHERE lab.id = lab.lbl
          ORDER BY doc_id""",
     "doc_top_tokens" ->
       """SELECT token, count(*) AS cnt FROM (
            SELECT unnest(string_split(text, ' ')) AS token FROM documents)
          GROUP BY token ORDER BY cnt DESC, token LIMIT 20""",
     "dedup_keep_best" ->
-      s"""WITH RECURSIVE
-         d AS (
-           SELECT doc_id, list_distinct([array_to_string(toks[i:i+2], ' ')
-               for i in range(1, greatest(len(toks) - 2, 1) + 1)]) AS sh
-           FROM (SELECT doc_id, string_split(text, ' ') AS toks FROM documents)),
-         e0 AS (
-           SELECT a.doc_id AS id_a, b.doc_id AS id_b
-           FROM d a JOIN d b ON a.doc_id < b.doc_id
-           WHERE CAST(len(list_intersect(a.sh, b.sh)) AS DOUBLE)
-             / CAST(len(a.sh) + len(b.sh) - len(list_intersect(a.sh, b.sh)) AS DOUBLE) >= 0.5),
-         und AS (SELECT id_a AS src, id_b AS dst FROM e0
-                 UNION ALL SELECT id_b, id_a FROM e0),
-         comp(id, lbl) AS (
-           SELECT doc_id, doc_id FROM documents
-           UNION
-           SELECT u.dst, c.lbl FROM comp c JOIN und u ON u.src = c.id),
-         lab AS (SELECT id, min(lbl) AS lbl FROM comp GROUP BY id),
+      s"""WITH RECURSIVE ${shinglePairsCtes("documents")},
+         ${componentsCtes("documents", "doc_id", "pairs")},
          q AS (SELECT doc_id, $qualityExprSql AS q FROM documents),
          best AS (SELECT id FROM (
              SELECT lab.id, row_number() OVER (PARTITION BY lab.lbl
@@ -2991,17 +2954,12 @@ object QueriesLLM {
              SELECT n_id, v, cell, row_number() OVER (PARTITION BY n_id
                ORDER BY ${cos("v", "c")} DESC, cell DESC) AS rk
              FROM n, cents) WHERE rk <= 2),
-         p AS (SELECT DISTINCT a.n_id AS id_a, b.n_id AS id_b
+         p AS MATERIALIZED (SELECT DISTINCT a.n_id AS id_a, b.n_id AS id_b
            FROM nc a JOIN nc b ON a.cell = b.cell AND a.n_id < b.n_id
            WHERE round(${cos("a.v", "b.v")}, 6) >= 0.45),
-         und AS (SELECT id_a AS src, id_b AS dst FROM p
-                 UNION ALL SELECT id_b, id_a FROM p),
-         comp(id, lbl) AS (
-           SELECT vec_id, vec_id FROM embeddings
-           UNION
-           SELECT u.dst, c.lbl FROM comp c JOIN und u ON u.src = c.id),
-         keep AS (SELECT id FROM comp GROUP BY id HAVING id = min(lbl))
-         SELECT vec_id, label FROM embeddings JOIN keep ON vec_id = keep.id
+         ${componentsCtes("embeddings", "vec_id", "p")}
+         SELECT vec_id, label FROM embeddings JOIN lab ON vec_id = lab.id
+         WHERE lab.id = lab.lbl
          ORDER BY vec_id"""
     },
     "sample_temperature" ->

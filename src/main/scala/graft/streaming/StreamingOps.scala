@@ -346,9 +346,13 @@ object StreamingOps {
    * Correctness contract: a left row at time t is FINALIZED (emitted) only
    * once the watermark passes t — at that point Spark has dropped every
    * right row at or before t that could still arrive, so the match is
-   * final; the operator is exactly batch-equivalent over in-watermark data.
-   * Pending lefts are flushed by event-time timeouts as the watermark
-   * advances (no new data needed on that key). State per key = pending
+   * final. Over in-watermark data it equals the batch join except on ties:
+   * among right rows at the same time this operator keeps the last to
+   * arrive, while [[graft.ts.AsOfJoin]] keeps the greatest value tuple
+   * (right rows (10 s, 250) and (10 s, 100) arriving in that order give
+   * 100 here and 250 in batch; ROADMAP direction 2). Pending lefts are
+   * flushed by event-time timeouts as the watermark advances (no new data
+   * needed on that key). State per key = pending
    * lefts (not yet past watermark) + the right-row window
    * `[minPendingLeft - tolerance, now]` — bounded by tolerance, pruned
    * every trigger; idle keys are garbage-collected after `stateTimeout`.
