@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.catalyst.expressions.XXH64
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.unsafe.types.UTF8String
 
 /**
  * Tight JVM loops behind the column functions in
@@ -176,6 +177,33 @@ object Kernels {
       i += 1
     }
     new GenericArrayData(java.util.Arrays.copyOf(out, w))
+  }
+
+  private val Space = UTF8String.fromString(" ")
+
+  /**
+   * The word n-grams of a token array as space-joined strings, in position
+   * order: one string per start i, joining tokens i .. i+n-1. No partial
+   * n-grams: a row with fewer than `n` tokens yields an empty array, as in
+   * [[ngramHashes]]. Empty tokens are kept; a null token is skipped inside
+   * its n-gram, as `array_join` skips it. Each n-gram copies its n tokens
+   * once, where the `transform(slice(...))` column form it replaces
+   * re-split the whole document for every output element.
+   */
+  def ngrams(tokens: ArrayData, n: Int): ArrayData = {
+    val cnt = tokens.numElements()
+    val m = cnt - n + 1
+    if (m <= 0) return new GenericArrayData(Array.empty[Any])
+    val ts = new Array[UTF8String](cnt)
+    var i = 0
+    while (i < cnt) { ts(i) = tokens.getUTF8String(i); i += 1 }
+    val out = new Array[Any](m)
+    i = 0
+    while (i < m) {
+      out(i) = UTF8String.concatWs(Space, java.util.Arrays.copyOfRange(ts, i, i + n): _*)
+      i += 1
+    }
+    new GenericArrayData(out)
   }
 
   /**

@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.spark.sql.graft.BuildExecutions
+
 /** Dev tool: dump `.explain("formatted")` for named registry queries to
   * files — the before/after plan evidence for optimization rounds
   * (plans/<pr>/<query>_{before,after}.txt). Not part of the driver
@@ -9,7 +11,11 @@ package graft
   * printed, and its line on stdout also splits the wall time of a second,
   * warm build of the query into `build=` (constructing the DataFrame),
   * `plan=` (analysis, optimization and physical planning) and `exec=`
-  * (running that plan to a driver-side collect), in seconds. */
+  * (running that plan to a driver-side collect), in seconds.
+  *
+  * Each dump ends with the count and the final plans of the SQL executions
+  * (driver collects, counts) that ran while the query's DataFrame was
+  * built, before any action on it. */
 object PlanDump {
   def main(args: Array[String]): Unit = {
     require(args.length == 4,
@@ -22,7 +28,7 @@ object PlanDump {
     names.foreach { n =>
       val fn = SparkEntry.queries.getOrElse(n,
         sys.error(s"unknown query: $n"))
-      val df = fn(spark, sfDir)
+      val (df, built) = BuildExecutions.during(spark)(fn(spark, sfDir))
       // collect() (not a noop write) so THIS df's queryExecution is the
       // one that runs and AQE's FINAL plan (runtime stage reuse, join
       // rewrites) is what gets printed — a write spawns a fresh
@@ -45,8 +51,12 @@ object PlanDump {
       // RDD ids (MapPartitionsRDD[123]) RDD[N]: all four count up across
       // the session, so without this two dumps of the same plan never diff
       // clean
-      val txt = df.queryExecution.explainString(
-          org.apache.spark.sql.execution.FormattedMode)
+      def explain(qe: org.apache.spark.sql.execution.QueryExecution) =
+        qe.explainString(org.apache.spark.sql.execution.FormattedMode)
+      val txt = (explain(df.queryExecution) +
+          s"\n== SQL executions while the query was built: ${built.size} ==\n" +
+          built.zipWithIndex.map { case (qe, i) =>
+            s"\n-- build execution ${i + 1} --\n${explain(qe)}" }.mkString)
         .replaceAll("#\\d+L?\\b", "#N")
         .replaceAll("plan_id=\\d+", "plan_id=N")
         .replaceAll("lambda ([a-z]+)_\\d+", "lambda $1_N")

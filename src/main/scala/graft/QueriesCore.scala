@@ -29,12 +29,12 @@ object QueriesCore {
   def events(s: SparkSession, dir: String): DataFrame = {
     try s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     catch { case _: Throwable => }
-    TimeSeriesOps.canonize(s.read.parquet(s"$dir/events.parquet"), "ts")
+    TimeSeriesOps.canonize(InputTables.read(s, dir, "events"), "ts")
       .withColumn(TimeSeriesOps.TimeColumn, F.expr("time div 1000 * 1000"))
   }
 
   def lineitem(s: SparkSession, dir: String): DataFrame =
-    s.read.parquet(s"$dir/lineitem.parquet")
+    InputTables.read(s, dir, "lineitem")
 
   /** `value` has two decimals; value100 = round(value*100) is integral, so
     * its sums are order-independent exact doubles on both engines. */

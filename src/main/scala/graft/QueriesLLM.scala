@@ -16,9 +16,9 @@ import graft.llm._
 object QueriesLLM {
 
   private def docs(s: SparkSession, dir: String): DataFrame =
-    s.read.parquet(s"$dir/documents.parquet")
+    InputTables.read(s, dir, "documents")
   private def embs(s: SparkSession, dir: String): DataFrame =
-    s.read.parquet(s"$dir/embeddings.parquet")
+    InputTables.read(s, dir, "embeddings")
 
   private def inList(words: Seq[String]) = words.map(w => s"'$w'").mkString(", ")
 

@@ -56,7 +56,7 @@ object QueriesSources {
     // explicit schema (single-pass — no inference sampling scan).
     "jsonl_roundtrip" -> ((s, dir) => {
       val tmp = scratchDir("graft_jsonl_")
-      val d = s.read.parquet(s"$dir/documents.parquet")
+      val d = InputTables.read(s, dir, "documents")
         .select("doc_id", "source", "text")
       d.write.mode("overwrite").json(tmp)
       Sources.fromJsonl(s, tmp, Some(d.schema))

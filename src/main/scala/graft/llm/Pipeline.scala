@@ -117,7 +117,9 @@ object Pipeline {
       case Boundary.Parquet(dir) =>
         val path = s"$dir/$name"
         df.write.mode("overwrite").parquet(path)
-        s.read.parquet(path)
+        // the schema just written: a schema-less read would run a job to
+        // infer it back from the files
+        s.read.schema(df.schema).parquet(path)
       case Boundary.Recompute => df
     }
 

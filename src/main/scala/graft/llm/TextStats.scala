@@ -2,6 +2,7 @@ package graft.llm
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.{functions => F}
+import org.apache.spark.unsafe.types.UTF8String
 
 /**
  * Text-analysis operators for large-scale training-data pipelines:
@@ -288,17 +289,15 @@ object TextStats {
     gopherFlags(F.col(textCol), minWords, maxWords)
       .foldLeft(df) { case (d, (name, c)) => d.withColumn(name, c) }
 
-  /** Word n-grams as space-joined strings; empty array when the document
-    * has fewer than `n` tokens (no partial n-grams). Pure higher-order
-    * expression — stays in whole-stage codegen. */
-  def ngrams(text: Column, n: Int): Column = {
-    require(n >= 1, s"n-gram size must be >= 1, got $n")
-    val ts = tokens(text)
-    F.when(F.size(ts) >= n,
-      F.transform(F.sequence(F.lit(0), F.size(ts) - n), i =>
-        F.array_join(F.slice(ts, i + F.lit(1), F.lit(n)), " ")))
-      .otherwise(F.array().cast("array<string>"))
-  }
+  /** Word n-grams as space-joined strings in position order; empty array
+    * when the document is null or has fewer than `n` tokens (no partial
+    * n-grams). Empty tokens from repeated spaces are kept. One compiled
+    * kernel call per row (`Kernels.ngrams`) that copies each n-gram's
+    * tokens once; parity with the `transform(slice(split(...)))` column
+    * form it replaced is pinned in TextOpsSpec. */
+  def ngrams(text: Column, n: Int): Column =
+    F.coalesce(org.apache.spark.sql.graft.GraftColumns.ngrams(tokens(text), n),
+      F.array().cast("array<string>"))
 
   /** 64-bit fingerprints of the word n-grams — the scale form of [[ngrams]]
     * (equality-only semantics; no gram strings are ever materialized). One
@@ -606,26 +605,61 @@ object TextStats {
    * any engine and any summation order — a float logprob sum would drift
    * by ulps across summation orders and break exact cross-engine checks.
    *
-   * Scale shape: one token-count aggregation (map-side combinable) with a
-   * driver-merged top-k — the model is `topK` parameters, never data.
-   * Returns (vocab logprobs, oovLp).
+   * Scale shape: one token-count aggregation (map-side combinable) whose
+   * shuffle feeds both the total and a top-k (per-partition heaps, driver
+   * merge) in ONE driver collect — the model is `topK` parameters, never
+   * data, and nothing is persisted. Returns (vocab logprobs, oovLp).
    */
   def unigramModel(df: org.apache.spark.sql.DataFrame, textCol: String,
                    topK: Int): (Seq[(String, Long)], Long) = {
     require(topK >= 1, "topK must be >= 1")
-    val counted = df.select(F.explode(tokens(F.col(textCol))).as("token"))
-      .groupBy("token").agg(F.count(F.lit(1)).as("cnt"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val totalRow = counted.agg(F.sum("cnt")).head()
-    require(!totalRow.isNullAt(0) && totalRow.getLong(0) > 0L,
-      "unigramModel: corpus has no tokens")
-    val total = totalRow.getLong(0)
-    val vocab = counted.orderBy(F.col("cnt").desc, F.col("token"))
-      .limit(topK).collect()
-      .map(r => r.getString(0) ->
-        math.round(math.log(r.getLong(1).toDouble / total.toDouble) * 1e6))
-    counted.unpersist(blocking = false)
-    (vocab.toSeq, math.round(math.log(1.0 / total.toDouble) * 1e6))
+    val counted = df.select(F.explode(tokens(F.col(textCol))).as("gram"))
+      .groupBy("gram").agg(F.count(F.lit(1)).as("cnt"))
+    val (total, vocab, _) = fetchModel(counted, topK, None, "unigramModel")
+    (vocab.map { case (t, c, _) => t -> lpMicro(c, total) },
+      lpMicro(1L, total))
+  }
+
+  /** `round(ln(c / of)·1e6)`: a count ratio as quantized micro-nats. */
+  private def lpMicro(c: Long, of: Long): Long =
+    math.round(math.log(c.toDouble / of.toDouble) * 1e6)
+
+  /**
+   * The language models' one driver collect. From a `(gram, cnt)` token
+   * count table `uni` it fetches the token total and the top-`topK`
+   * tokens; given `(bi, topB)`, also the top-`topB` rows of the `(gram,
+   * cnt)` pair table `bi`, each joined to its first word's count in
+   * `uni`. Each branch is a tagged row set of one union, so the count
+   * tables' scan and shuffle are shared (ReuseExchange) rather than
+   * persisted. Returns (total, vocab, pairs) with `(gram, cnt, w1 cnt)`
+   * rows sorted here by (cnt desc, gram asc), gram compared as UTF-8
+   * bytes the way a Spark sort compares strings.
+   */
+  private def fetchModel(uni: DataFrame, topK: Int, pairs: Option[(DataFrame, Int)],
+                         caller: String): (Long, Seq[(String, Long, Long)],
+                                           Seq[(String, Long, Long)]) = {
+    def tagged(kind: Int, d: DataFrame, c1: Column) =
+      d.select(F.lit(kind).as("kind"), F.col("gram"), F.col("cnt"), c1.as("c1"))
+    def top(d: DataFrame, n: Int) = d.orderBy(F.col("cnt").desc, F.col("gram")).limit(n)
+    val none = F.lit(null).cast("long")
+    val total = tagged(0, uni.agg(F.sum("cnt").as("cnt"))
+      .withColumn("gram", F.lit(null).cast("string")), none)
+    val branches = total +: tagged(1, top(uni, topK), none) +: pairs.toSeq.map {
+      case (bi, topB) =>
+        // null-safe equality infers no isnotnull(gram) filter, which would
+        // be pushed below `uni`'s aggregate and split its shared exchange
+        val w1 = uni.select(F.col("gram").as("__w1"), F.col("cnt").as("__c1"))
+        tagged(2, top(bi, topB).join(w1,
+          F.substring_index(F.col("gram"), " ", 1) <=> F.col("__w1")), F.col("__c1"))
+    }
+    val rows = branches.reduce(_ unionByName _).collect()
+    val totalRow = rows.find(_.getInt(0) == 0).get
+    require(!totalRow.isNullAt(2) && totalRow.getLong(2) > 0L,
+      s"$caller: corpus has no tokens")
+    def kind(k: Int) = rows.filter(_.getInt(0) == k)
+      .map(r => (r.getString(1), r.getLong(2), if (r.isNullAt(3)) 0L else r.getLong(3)))
+      .sortBy { case (g, c, _) => (-c, UTF8String.fromString(g)) }.toSeq
+    (totalRow.getLong(2), kind(1), kind(2))
   }
 
   /** Unigram LM score of a document in integer micro-nats (Σ quantized
@@ -644,14 +678,13 @@ object TextStats {
    * full corpus count, so the ratio is the true conditional frequency.
    * Same integer micro-nat portability contract as [[unigramModel]].
    *
-   * Scale shape: two corpus passes — a token count persisted at
-   * TOKEN-distinct size (small: natural-language vocabularies saturate)
-   * feeding the three token-side driver jobs (total, vocab top-K, w1
-   * counts), and one bigram count consumed ONCE by a TakeOrdered top-B
-   * (never materialized: bigram-distinct is near corpus-sized, so
-   * persisting it costs more than the tokenize pass it saves — measured
-   * at 10×, the fused-persist form was 1.9× slower, 15.2 s → 29.4 s).
-   * Its pair logprobs agree with the fused [[gramCounts]] table's counts
+   * Scale shape: ONE driver collect over the fused [[gramCounts]] table
+   * (one corpus tokenize+explode, one map-side-combinable gram count). Its
+   * single shuffle feeds every branch of the collected plan — the token
+   * total, the vocab top-K, the bigram top-B and the w1 counts of those
+   * top-B pairs, a broadcast join of ≤ topB rows — through ReuseExchange;
+   * nothing is persisted (the earlier form persisted the token counts and ran
+   * four collects). Its pair logprobs agree with the [[gramCounts]] counts
    * (a law pinned in BoilerplateTfidfSpec).
    * Driver state stays model-parameter-sized throughout. Returns
    * (bigram logprobs, unigram vocab, oovLp); pair `backoffLp` with them
@@ -661,33 +694,14 @@ object TextStats {
                   topK: Int, topB: Int)
       : (Seq[(String, Long)], Seq[(String, Long)], Long) = {
     require(topK >= 1 && topB >= 1, "topK and topB must be >= 1")
-    val counted = df.select(F.explode(tokens(F.col(textCol))).as("token"))
-      .groupBy("token").agg(F.count(F.lit(1)).as("cnt"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val totalRow = counted.agg(F.sum("cnt")).head()
-      require(!totalRow.isNullAt(0) && totalRow.getLong(0) > 0L,
-        "bigramModel: corpus has no tokens")
-      val total = totalRow.getLong(0)
-      val vocab = counted.orderBy(F.col("cnt").desc, F.col("token"))
-        .limit(topK).collect()
-        .map(r => r.getString(0) ->
-          math.round(math.log(r.getLong(1).toDouble / total.toDouble) * 1e6))
-      val pairs = df.select(F.explode(ngrams(F.col(textCol), 2)).as("bg"))
-        .groupBy("bg").agg(F.count(F.lit(1)).as("cnt"))
-        .orderBy(F.col("cnt").desc, F.col("bg"))
-        .limit(topB).collect()
-        .map(r => r.getString(0) -> r.getLong(1))
-      val w1s = pairs.map(_._1.takeWhile(_ != ' ')).distinct.toSeq
-      val w1Counts = counted
-        .filter(F.col("token").isin(w1s: _*))
-        .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-      val bi = pairs.map { case (bg, c) =>
-        bg -> math.round(
-          math.log(c.toDouble / w1Counts(bg.takeWhile(_ != ' ')).toDouble) * 1e6)
-      }
-      (bi.toSeq, vocab.toSeq, math.round(math.log(1.0 / total.toDouble) * 1e6))
-    } finally counted.unpersist(blocking = false)
+    val counts = gramCounts(df, textCol)
+    def kind(pair: Boolean) = counts.filter(F.col("is_pair") === pair)
+      .select(F.col("gram"), F.col("cnt"))
+    val (total, vocab, pairs) =
+      fetchModel(kind(pair = false), topK, Some(kind(pair = true) -> topB), "bigramModel")
+    (pairs.map { case (bg, c, c1) => bg -> lpMicro(c, c1) },
+      vocab.map { case (t, c, _) => t -> lpMicro(c, total) },
+      lpMicro(1L, total))
   }
 
   /** Standard stupid-backoff discount `round(ln(0.4)·1e6)` micro-nats. */
@@ -1088,8 +1102,9 @@ object TextStats {
    * what lets ReuseExchange collapse every derived branch — per-kind
    * counts AND per-kind totals — onto one scan+shuffle (plan-asserted in
    * C4EntropySpec). The r14 form tokenized the corpus four times.
-   * [[bigramModel]] keeps its own two-pass shape (see its doc); its
-   * agreement with these counts is pinned in BoilerplateTfidfSpec.
+   * [[bigramModel]] fetches its model from the same table in one collect
+   * (see its doc); its agreement with these counts is pinned in
+   * BoilerplateTfidfSpec.
    *
    * Shape at 100 TB: one explode over tokens++bigrams (the array concat
    * evaluates the token split once — subexpression elimination), one

@@ -71,6 +71,13 @@ object GraftColumns {
     kernel("ngramHashes", LongArray, Seq(tokens -> Strings), Seq(n, distinct))
   }
 
+  /** Space-joined word n-grams in positional order; see Kernels.ngrams. */
+  def ngrams(tokens: Column, n: Int): Column = {
+    require(n >= 1, s"n-gram size must be >= 1, got $n")
+    kernel("ngrams", ArrayType(StringType, containsNull = false),
+      Seq(tokens -> Strings), Seq(n))
+  }
+
   /** n-gram `(hash, chars)` structs in positional order: the multiset
     * [[ngramHashes]] fused with per-position n-gram char lengths; see
     * Kernels.ngramHashLens. */

@@ -58,6 +58,8 @@ class GraftColumnsSpec extends SparkTestBase {
     KernelCase("ngramHashes", Seq("toks"),
       c => GraftColumns.ngramHashes(c(0), 2, distinct = true),
       v => Kernels.ngramHashes(a(v(0)), 2, true)),
+    KernelCase("ngrams", Seq("toks"),
+      c => GraftColumns.ngrams(c(0), 2), v => Kernels.ngrams(a(v(0)), 2)),
     KernelCase("ngramHashLens", Seq("toks"),
       c => GraftColumns.ngramHashLens(c(0), 2), v => Kernels.ngramHashLens(a(v(0)), 2)),
     KernelCase("minHashSig", Seq("hs"),
@@ -112,7 +114,7 @@ class GraftColumnsSpec extends SparkTestBase {
     "spark.sql.codegen.factoryMode" -> "NO_CODEGEN")
 
   "the stateless GraftColumns kernels" should "cover every StaticInvoke function" in {
-    cases.map(_.name).distinct should have size 24
+    cases.map(_.name).distinct should have size 25
   }
 
   cases.foreach { k =>

@@ -1,7 +1,7 @@
 package graft.llm
 
 import graft.SparkTestBase
-import org.apache.spark.sql.{functions => F}
+import org.apache.spark.sql.{Column, functions => F}
 
 /** N-gram text operators: repetition signals, benchmark contamination,
   * context-window chunking. */
@@ -18,6 +18,41 @@ class TextOpsSpec extends SparkTestBase {
       Seq("a b c d")
     d.select(TextStats.ngrams(F.col("text"), 5)).as[Seq[String]].head() shouldBe
       Seq.empty[String]
+  }
+
+  /** The `transform(slice(split(...)))` column form the kernel replaced. */
+  private def ngramsReference(text: Column, n: Int): Column = {
+    val ts = TextStats.tokens(text)
+    F.when(F.size(ts) >= n,
+      F.transform(F.sequence(F.lit(0), F.size(ts) - n), i =>
+        F.array_join(F.slice(ts, i + F.lit(1), F.lit(n)), " ")))
+      .otherwise(F.array().cast("array<string>"))
+  }
+
+  it should "give the column form's n-grams for n = 1..5 on edge texts" in {
+    val texts = Seq(null, "", " ", "   ", "a", "a b", "a b c d e", "a  b", " a b",
+      "a b ", "  lead  and trail  ", "x y x y x y", "\uD83D\uDE00 a \uD834\uDD1E b",
+      "\u00e9\uD83D\uDE00 \uD83D\uDE00\u00e9  \uD834\uDD1E")
+    val d = texts.zipWithIndex.map { case (t, i) => (i.toLong, t) }.toDF("id", "text")
+    for (n <- 1 to 5) {
+      val rows = d.select(F.col("id"), TextStats.ngrams(F.col("text"), n).as("k"),
+        ngramsReference(F.col("text"), n).as("ref")).orderBy("id").collect()
+      rows should have size texts.size.toLong
+      rows.foreach { r =>
+        withClue(s"n=$n text=${texts(r.getLong(0).toInt)}: ") {
+          r.isNullAt(1) shouldBe false
+          r.getSeq[String](1) shouldBe r.getSeq[String](2)
+        }
+      }
+    }
+  }
+
+  it should "keep empty tokens and return an empty array for null text" in {
+    val d = Seq((1L, " a  b"), (2L, null), (3L, ""), (4L, "a")).toDF("id", "text")
+    val got = d.select(TextStats.ngrams(F.col("text"), 2)).as[Seq[String]].collect()
+    got.toSeq shouldBe Seq(Seq(" a", "a ", " b"), Seq.empty, Seq.empty, Seq.empty)
+    d.select(TextStats.ngrams(F.col("text"), 1)).as[Seq[String]].collect().toSeq shouldBe
+      Seq(Seq("", "a", "", "b"), Seq.empty, Seq(""), Seq("a"))
   }
 
   behavior of "ngramRepetition"
