@@ -1,16 +1,18 @@
 #!/usr/bin/env python3
 """Alternating perfbench pairs: parent checkout vs change checkout.
 
-    python3 plans/pr12/pairs.py --parent DIR --change DIR --workload core \
-        --seeds 1211-1220 --out plans/pr12/perfbench_pairs_core.json
+    python3 scripts/perfbench_pairs.py --parent DIR --change DIR \
+        --workload store --seeds 1331-1340 --out plans/<pr>/pairs_store.json
 
 Each pair runs `python3 perfbench/run.py --workload W --seed S --seconds 10
 --trace 0` once in each checkout, one after the other; odd pairs run the
 parent first, even pairs the change first. Both checkouts build their own
 program from source. The JSON keeps every run's end-to-end metrics and
-per-query median times (the reference queries included, as controls), and a
+per-query median times (the reference queries included, as controls), a
 summary per metric: quartiles of each side, how many pairs the change won,
-and the median change in percent.
+and the median change in percent, and per query the median of each side
+and how many pairs the change won. Lower is better for every metric and
+time here.
 """
 import argparse
 import json
@@ -78,15 +80,19 @@ def main():
             "median_change_pct": round(
                 100 * (statistics.median(c) / statistics.median(p) - 1), 1)}
     names = sorted(pairs[0]["parent"]["query_median_s"])
-    per_query = {n: {
-        "parent_median_s": round(statistics.median(
-            x["parent"]["query_median_s"][n] for x in pairs), 4),
-        "change_median_s": round(statistics.median(
-            x["change"]["query_median_s"][n] for x in pairs), 4)} for n in names}
+    per_query = {}
+    for n in names:
+        p = [x["parent"]["query_median_s"][n] for x in pairs]
+        c = [x["change"]["query_median_s"][n] for x in pairs]
+        per_query[n] = {
+            "parent_median_s": round(statistics.median(p), 4),
+            "change_median_s": round(statistics.median(c), 4),
+            "change_wins": sum(1 for x, y in zip(p, c) if y < x),
+            "pairs": len(pairs)}
     cmd = f"python3 perfbench/run.py --workload {a.workload} --seed <s> --seconds 10 --trace {a.trace}"
     json.dump({"command": cmd, "summary": summary, "per_query": per_query,
                "pairs": pairs}, open(a.out, "w"), indent=1)
-    print(json.dumps(summary, indent=1))
+    print(json.dumps({"summary": summary, "per_query": per_query}, indent=1))
 
 
 if __name__ == "__main__":

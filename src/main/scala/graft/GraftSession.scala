@@ -4,7 +4,8 @@ import org.apache.spark.sql.SparkSession
 
 /** The local session every main runs in: `local[SPARK_GRAFT_CPUS]`
   * (default 4) with one shuffle partition per core, UTC session time,
-  * events.parquet's nanosecond timestamps read as longs, no UI and
+  * parquet nanosecond timestamps read as longs (no shipped table has
+  * one: events.parquet's `ts` is microseconds), no UI and
   * `WARN` logging. Bench and Verify measure and check under exactly these
   * settings. */
 object GraftSession {

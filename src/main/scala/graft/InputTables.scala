@@ -10,8 +10,10 @@ import org.apache.spark.sql.types.StructType
  * (the same at every scale factor), so a read with them skips that job and
  * returns the same frame. InputTablesSpec checks each one against the
  * inferred schema of every shipped scale factor, so a data change fails
- * there by table name. `Sources.fromParquet` still infers: its input is
- * the caller's.
+ * there by table name. `Sources.fromParquet` and `Sources.read(...)`
+ * take a schema too: the registry rows that read events.parquet through
+ * them pass `schemas("events")`, while a read without one still infers,
+ * since its files are the caller's.
  */
 object InputTables {
   val schemas: Map[String, StructType] = Map(

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.graft.BuildExecutions
 
 /** Dev tool: dump `.explain("formatted")` for named registry queries to
@@ -11,7 +12,10 @@ import org.apache.spark.sql.graft.BuildExecutions
   * printed, and its line on stdout also splits the wall time of a second,
   * warm build of the query into `build=` (constructing the DataFrame),
   * `plan=` (analysis, optimization and physical planning) and `exec=`
-  * (running that plan to a driver-side collect), in seconds.
+  * (running that plan to a driver-side collect), in seconds, and
+  * `compiles=` counts the generated classes Janino compiled during the
+  * query's first run (`CodegenMetrics.METRIC_COMPILATION_TIME`'s count;
+  * a class found in Spark's codegen cache is not compiled again).
   *
   * Each dump ends with the count and the final plans of the SQL executions
   * (driver collects, counts) that ran while the query's DataFrame was
@@ -36,7 +40,9 @@ object PlanDump {
       // Registry results are driver-small by contract. The run also warms
       // the JIT and codegen caches for the timed second build.
       val timing = if (!exec) "" else {
+        val compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
         df.collect(): Unit
+        val compiled = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - compiles
         val t0 = System.nanoTime()
         val warm = fn(spark, sfDir)
         val t1 = System.nanoTime()
@@ -44,7 +50,8 @@ object PlanDump {
         val t2 = System.nanoTime()
         warm.collect(): Unit
         val t3 = System.nanoTime()
-        f" build=${(t1 - t0) / 1e9}%.3f plan=${(t2 - t1) / 1e9}%.3f exec=${(t3 - t2) / 1e9}%.3f"
+        f" build=${(t1 - t0) / 1e9}%.3f plan=${(t2 - t1) / 1e9}%.3f exec=${(t3 - t2) / 1e9}%.3f" +
+          s" compiles=$compiled"
       }
       // expression ids (#123, #123L) become #N, exchange ids
       // (plan_id=123) plan_id=N, lambda variables (lambda x_123) x_N and

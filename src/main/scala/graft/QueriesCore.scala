@@ -22,16 +22,14 @@ object QueriesCore {
   val HOUR = 3600000000000L
 
   /** events.parquet canonized: time(long nanos), event_id, user_id,
-    * event_type, value, props. Needs nanosAsLong for the ns timestamp.
-    * Time is truncated to µs resolution: DuckDB's parquet reader (the
-    * correctness oracle) truncates ns timestamps to µs, so full-ns values
-    * could never hash-match. The engine itself keeps full nanos. */
-  def events(s: SparkSession, dir: String): DataFrame = {
-    try s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    catch { case _: Throwable => }
+    * event_type, value, props. `ts` is stored as a microsecond
+    * TIMESTAMP_NTZ (`InputTables` pins it). Time is truncated to µs
+    * resolution, as the oracle's `epoch_ns(ts)` is: a no-op on the stored
+    * µs values, it keeps the hash-match independent of the engine's full
+    * nanos. */
+  def events(s: SparkSession, dir: String): DataFrame =
     TimeSeriesOps.canonize(InputTables.read(s, dir, "events"), "ts")
       .withColumn(TimeSeriesOps.TimeColumn, F.expr("time div 1000 * 1000"))
-  }
 
   def lineitem(s: SparkSession, dir: String): DataFrame =
     InputTables.read(s, dir, "lineitem")
@@ -164,8 +162,6 @@ object QueriesCore {
         .orderBy("time", "event_id")
     }),
     "read_builder" -> ((s, dir) => {
-      try s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-      catch { case _: Throwable => }
       // Narrow range + expand slack = the oracle's [T0+10d, T0+20d): the
       // expand path is load-bearing — if expand() were a no-op this query
       // would return only [T0+11d, T0+19d) and hash-mismatch.
@@ -174,6 +170,7 @@ object QueriesCore {
         .range(T0 + 11 * DAY, T0 + 19 * DAY)
         .expand("1d", "1d")
         .time("ts")
+        .schema(InputTables.schemas("events"))
         .parquet(s"$dir/events.parquet")
         .withColumn(TimeSeriesOps.TimeColumn, F.expr("time div 1000 * 1000"))
         .orderBy("time", "event_id")

@@ -63,14 +63,13 @@ object QueriesSources {
         .select("doc_id", "source", "text").orderBy("doc_id")
     }),
     // fromParquet with column list + [begin, end) time range: projection
-    // and range filter reach the scan (asserted in PlanShapeSpec).
+    // and range filter reach the scan (asserted in PlanShapeSpec); the
+    // fixed events schema spares the inference job.
     "from_parquet_pruned" -> ((s, dir) => {
-      try s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-      catch { case _: Throwable => }
       Sources.fromParquet(s, s"$dir/events.parquet",
         columns = Seq("event_id", "value"),
         beginNanos = Some(T0 + 5 * DAY), endNanos = Some(T0 + 15 * DAY),
-        timeCol = "ts")
+        timeCol = "ts", schema = Some(InputTables.schemas("events")))
         .withColumn(TimeSeriesOps.TimeColumn, F.expr("time div 1000 * 1000"))
         .orderBy("time", "event_id")
     }),

@@ -54,8 +54,6 @@ object StreamingOps {
   def writeTimePartitionedStream(df: DataFrame, path: String,
                                  granularity: String,
                                  checkpoint: String): org.apache.spark.sql.streaming.StreamingQuery = {
-    val g = TimeSeriesOps.parseDuration(granularity)
-    require(g > 0, s"granularity must be positive, got $granularity")
     require(!df.columns.contains(graft.ts.Sources.BucketColumn),
       s"writeTimePartitionedStream: input already has a ${graft.ts.Sources.BucketColumn} column")
     require(
@@ -65,15 +63,13 @@ object StreamingOps {
         "sink's commit log would hide those rows from every reader; " +
         "stream to a separate path")
     // same store-metadata contract as the batch writer: restarting the sink
-    // with a different granularity would mix bucket layouts — refuse; and
-    // persist the granularity so readers never have to guess it
-    graft.ts.Sources.readStoreMetaNanos(df.sparkSession, path).foreach { m =>
-      require(m == g,
-        s"writeTimePartitionedStream: store $path has granularity ${m}ns; " +
-          s"streaming with $granularity (${g}ns) would mix bucket layouts")
-    }
+    // with a different granularity or schema would mix bucket layouts or
+    // schemas — refuse; and persist both so readers never have to guess
+    val meta = graft.ts.Sources.storeMetaFor(df.sparkSession, path,
+      "writeTimePartitionedStream", granularity, df.schema, replace = false)
     val q = df
-      .withColumn(graft.ts.Sources.BucketColumn, graft.ts.Sources.floorDivTime(g))
+      .withColumn(graft.ts.Sources.BucketColumn,
+        graft.ts.Sources.floorDivTime(meta.granularityNanos))
       .writeStream.format("parquet")
       .partitionBy(graft.ts.Sources.BucketColumn)
       .option("path", path)
@@ -82,7 +78,7 @@ object StreamingOps {
       .start()
     // stamp the store only once start() has succeeded: an abandoned builder
     // or a failed start must not constrain the path's future granularity
-    graft.ts.Sources.writeStoreMeta(df.sparkSession, path, granularity)
+    graft.ts.Sources.writeStoreMeta(df.sparkSession, path, meta)
     q
   }
 

@@ -76,12 +76,16 @@ object Sources {
   /** Parquet scan with optional column list and [begin, end) time range
     * (≙ fromParquet). Both the projection and the range filter reach the
     * parquet reader (PushedFilters / ReadSchema) via Catalyst. `options`
-    * pass through to the reader (mergeSchema, ...). */
+    * pass through to the reader (mergeSchema, ...). With a `schema` the
+    * files are read with it; without one Spark runs a one-task job to
+    * infer it from the files. */
   def fromParquet(spark: SparkSession, path: String, columns: Seq[String] = Seq.empty,
                   beginNanos: Option[Long] = None, endNanos: Option[Long] = None,
                   timeCol: String = TimeColumn, unitToNanos: Long = 1L,
-                  options: Map[String, String] = Map.empty): DataFrame = {
-    var df = spark.read.options(options).parquet(path)
+                  options: Map[String, String] = Map.empty,
+                  schema: Option[StructType] = None): DataFrame = {
+    val r = spark.read.options(options)
+    var df = schema.fold(r)(s => r.schema(s)).parquet(path)
     if (columns.nonEmpty) {
       val keep = (timeCol +: columns.filter(_ != timeCol)).distinct
       df = df.select(keep.map(F.col): _*)
@@ -168,6 +172,7 @@ object Sources {
     private var cols: Seq[String] = Seq.empty
     private var timeCol: String = TimeColumn
     private var unitToNanos: Long = 1L
+    private var fixedSchema: Option[StructType] = None
 
     private var expandBegin: Long = 0L
     private var expandEnd: Long = 0L
@@ -193,6 +198,9 @@ object Sources {
     def time(col: String, toNanos: Long = 1L): ReadBuilder = {
       timeCol = col; unitToNanos = toNanos; this
     }
+    /** The files' schema for the parquet, csv and jsonl terminals (no
+      * inference pass); a time-partitioned store uses its recorded one. */
+    def schema(s: StructType): ReadBuilder = { fixedSchema = Some(s); this }
 
     /** The configured [begin, end) widened by the expand slack — the range
       * the terminal read methods actually apply (≙ reference
@@ -202,7 +210,7 @@ object Sources {
 
     def parquet(path: String): org.apache.spark.sql.DataFrame =
       fromParquet(spark, path, cols, expandedBegin, expandedEnd, timeCol,
-        unitToNanos, opts)
+        unitToNanos, opts, fixedSchema)
 
     /** Read a [[writeTimePartitioned]] store with the configured
       * range/expand/columns; directory-level bucket pruning applies.
@@ -215,7 +223,7 @@ object Sources {
     def csv(path: String): org.apache.spark.sql.DataFrame = {
       val header = opts.getOrElse("header", "true").toBoolean
       val delim = opts.getOrElse("delimiter", ",")
-      val df = fromCSV(spark, path, header, delim, None, timeCol, unitToNanos,
+      val df = fromCSV(spark, path, header, delim, fixedSchema, timeCol, unitToNanos,
         sorted = false, options = opts -- Seq("header", "delimiter"))
       val ranged = rangeFilter(df, expandedBegin, expandedEnd)
       if (cols.nonEmpty) TimeSeriesOps.keepColumns(ranged, cols: _*) else ranged
@@ -225,7 +233,7 @@ object Sources {
       * time range applies only when the builder's time column exists in
       * the data (document corpora usually have none). */
     def jsonl(path: String): org.apache.spark.sql.DataFrame = {
-      val raw = fromJsonl(spark, path, None, null, 1L, opts)
+      val raw = fromJsonl(spark, path, fixedSchema, null, 1L, opts)
       // the builder's configured time column existing in the data is the
       // "this corpus has a time axis" signal: only then canonize and
       // apply the range (a range against an un-canonized column would
@@ -247,64 +255,115 @@ object Sources {
   /** Directory-partition column name used by the time-partitioned layout. */
   val BucketColumn = "time_bucket"
 
-  /** Store-level metadata file persisted next to the bucket directories, so
-    * readers never have to GUESS the writer's granularity (a mismatched
-    * guess silently prunes wrong buckets — data loss, not an error). */
+  /** Store-level metadata file persisted next to the bucket directories,
+    * one JSON object:
+    * `{"format":"graft-time-partitioned","granularity":"7d",
+    * "granularity_nanos":604800000000000,"schema":<StructType JSON>}`.
+    *  - The granularity lets readers never GUESS the writer's bucket size
+    *    (a mismatched guess silently prunes wrong buckets: data loss, not
+    *    an error).
+    *  - `schema` is the data files' schema in Spark's nullable form
+    *    (`time_bucket` excluded: it stays a partition column discovered
+    *    from the directory names), so a read skips the one-task schema
+    *    inference job. A store without it (written before the field
+    *    existed, or appended to with no schema on record) reads by
+    *    inference.
+    *  - An `append` or `ignore` write into an existing store must match
+    *    both its granularity and its recorded schema; `overwrite` replaces
+    *    both. */
   private[graft] val StoreMetaFile = "_graft_store.json"
 
-  /** Persist the store's bucket granularity (idempotent overwrite). */
-  private[graft] def writeStoreMeta(spark: SparkSession, path: String,
-                                    granularity: String): Unit = {
-    val g = TimeSeriesOps.parseDuration(granularity)
+  /** A store's metadata; `schema` is None when the store records none. */
+  private[graft] case class StoreMeta(granularity: String, granularityNanos: Long,
+                                      schema: Option[StructType])
+
+  private def storeMetaPath(spark: SparkSession, path: String) = {
     val p = new org.apache.hadoop.fs.Path(path, StoreMetaFile)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    (p, p.getFileSystem(spark.sparkContext.hadoopConfiguration))
+  }
+
+  /** Persist the store's metadata (idempotent overwrite). */
+  private[graft] def writeStoreMeta(spark: SparkSession, path: String,
+                                    meta: StoreMeta): Unit = {
+    val (p, fs) = storeMetaPath(spark, path)
+    val schema = meta.schema.fold("")(s => s""","schema":${s.json}""")
     val out = fs.create(p, true)
     try out.write(
-      (s"""{"format":"graft-time-partitioned","granularity":"$granularity"""" +
-        s""","granularity_nanos":$g}""" + "\n")
+      (s"""{"format":"graft-time-partitioned","granularity":"${meta.granularity}"""" +
+        s""","granularity_nanos":${meta.granularityNanos}$schema}""" + "\n")
         .getBytes(java.nio.charset.StandardCharsets.UTF_8))
     finally out.close()
   }
 
-  /** The store's persisted granularity in nanos, if the metadata file
-    * exists (pre-metadata stores return None). */
-  private[graft] def readStoreMetaNanos(spark: SparkSession,
-                                        path: String): Option[Long] = {
-    val p = new org.apache.hadoop.fs.Path(path, StoreMetaFile)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+  /** The store's persisted metadata, if the metadata file exists. */
+  private[graft] def readStoreMeta(spark: SparkSession,
+                                   path: String): Option[StoreMeta] = {
+    val (p, fs) = storeMetaPath(spark, path)
     if (!fs.exists(p)) None
     else {
       val in = fs.open(p)
-      val text = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
+      val json = try new com.fasterxml.jackson.databind.ObjectMapper().readTree(in)
       finally in.close()
-      """"granularity_nanos"\s*:\s*(\d+)""".r.findFirstMatchIn(text)
-        .map(_.group(1).toLong)
+      Some(StoreMeta(json.get("granularity").asText,
+        json.get("granularity_nanos").asLong,
+        Option(json.get("schema")).map(s =>
+          org.apache.spark.sql.types.DataType.fromJson(s.toString)
+            .asInstanceOf[StructType])))
     }
+  }
+
+  /** The metadata a writer of `schema` at `granularity` stamps on `path`
+    * once its write has succeeded. Unless the write replaces the store, an
+    * existing store's granularity and recorded schema must match (fail
+    * loudly: a mismatch would mix bucket layouts, or apply one schema to
+    * files of another). The schema is recorded only when it describes
+    * every data file: a replaced or empty store, or one that records it
+    * already. */
+  private[graft] def storeMetaFor(spark: SparkSession, path: String,
+                                  writer: String, granularity: String,
+                                  schema: StructType,
+                                  replace: Boolean): StoreMeta = {
+    val g = TimeSeriesOps.parseDuration(granularity)
+    require(g > 0, s"granularity must be positive, got $granularity")
+    val written = org.apache.spark.sql.graft.NullableSchema(schema)
+    val prior = if (replace) None else readStoreMeta(spark, path)
+    prior.foreach { m =>
+      require(m.granularityNanos == g,
+        s"$writer: store $path has granularity ${m.granularityNanos}ns; " +
+          s"writing with $granularity (${g}ns) would mix bucket layouts")
+      m.schema.foreach { recorded =>
+        require(recorded == written,
+          s"$writer: store $path records schema ${recorded.simpleString}; " +
+            s"writing ${written.simpleString} would apply one schema to " +
+            "files of another. Overwrite the store or write to a new path.")
+      }
+    }
+    val known = replace || prior.exists(_.schema.isDefined) ||
+      !hasDataFiles(spark, path)
+    StoreMeta(granularity, g, if (known) Some(written) else None)
   }
 
   /** Resolve the granularity a reader should use: an explicit value must
     * MATCH the store's persisted one (fail loudly, never silently
     * mis-prune); null adopts the store's, defaulting to 1d only for
     * pre-metadata stores. */
-  private def resolveGranularity(spark: SparkSession, path: String,
-                                 granularity: String): Long = {
-    val meta = readStoreMetaNanos(spark, path)
+  private def resolveGranularity(path: String, granularity: String,
+                                 meta: Option[StoreMeta]): Long =
     Option(granularity) match {
       case Some(s) =>
         val g = TimeSeriesOps.parseDuration(s)
         require(g > 0, s"granularity must be positive, got $s")
         meta.foreach { m =>
-          require(m == g,
+          require(m.granularityNanos == g,
             s"fromTimePartitioned: store $path was written with " +
-              s"granularity ${m}ns but the reader asked for $s (${g}ns) — " +
+              s"granularity ${m.granularityNanos}ns but the reader asked for $s (${g}ns) — " +
               "bucket pruning would silently drop data. Omit granularity " +
               "to adopt the store's.")
         }
         g
       case None =>
-        meta.getOrElse(TimeSeriesOps.parseDuration("1d"))
+        meta.fold(TimeSeriesOps.parseDuration("1d"))(_.granularityNanos)
     }
-  }
 
   /**
    * Sink side of the time-series store: write the canonical frame as
@@ -324,30 +383,29 @@ object Sources {
   def writeTimePartitioned(df: DataFrame, path: String,
                            granularity: String = "1d",
                            mode: String = "error"): Unit = {
-    val g = TimeSeriesOps.parseDuration(granularity)
-    require(g > 0, s"granularity must be positive, got $granularity")
+    val spark = df.sparkSession
     require(!df.columns.contains(BucketColumn),
       s"writeTimePartitioned: input already has a $BucketColumn column")
     // a streaming-sink store reads through its _spark_metadata commit log:
     // batch-written files would be INVISIBLE to every reader. Refuse.
-    require(!hasStreamMetadata(df.sparkSession, path),
+    require(!hasStreamMetadata(spark, path),
       s"writeTimePartitioned: $path is a streaming-sink store " +
         "(_spark_metadata present) — batch writes would be invisible to " +
         "readers; write to a separate path")
-    // appending with a different granularity than the store's would mix
-    // incompatible bucket layouts — refuse (overwrite replaces the store,
-    // so only the append/errorifexists modes need the check)
-    if (mode != "overwrite")
-      readStoreMetaNanos(df.sparkSession, path).foreach { m =>
-        require(m == g,
-          s"writeTimePartitioned: store $path has granularity ${m}ns; " +
-            s"writing with $granularity (${g}ns) would mix bucket layouts")
-      }
+    val saveMode = mode.toLowerCase(java.util.Locale.ROOT)
+    val meta = storeMetaFor(spark, path, "writeTimePartitioned", granularity,
+      df.schema, replace = saveMode == "overwrite")
+    // Spark skips an `ignore` write into an existing path: leave its
+    // metadata as it is too
+    val skipped = saveMode == "ignore" && {
+      val p = new org.apache.hadoop.fs.Path(path)
+      p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
+    }
     // exact integer floor-div: a double `/` would lose precision on
     // >2^53 nanos, silently mis-bucketing rows near bucket edges
-    df.withColumn(BucketColumn, floorDivTime(g))
+    df.withColumn(BucketColumn, floorDivTime(meta.granularityNanos))
       .write.mode(mode).partitionBy(BucketColumn).parquet(path)
-    writeStoreMeta(df.sparkSession, path, granularity)
+    if (!skipped) writeStoreMeta(spark, path, meta)
   }
 
   /** True iff `path` carries a streaming file-sink commit log — such a
@@ -380,14 +438,18 @@ object Sources {
     * non-qualifying buckets are never listed or opened), then the exact
     * row-level time filter. `granularity` defaults (null) to the store's
     * persisted metadata; an explicit value that mismatches it fails loudly
-    * rather than silently mis-pruning. */
+    * rather than silently mis-pruning. One read of the metadata file gives
+    * the granularity and, where recorded, the schema the files are read
+    * with (no inference job). */
   def fromTimePartitioned(spark: SparkSession, path: String,
                           granularity: String = null,
                           columns: Seq[String] = Seq.empty,
                           beginNanos: Option[Long] = None,
                           endNanos: Option[Long] = None): DataFrame = {
-    val g = resolveGranularity(spark, path, granularity)
-    var df = spark.read.parquet(path)
+    val meta = readStoreMeta(spark, path)
+    val g = resolveGranularity(path, granularity, meta)
+    val reader = meta.flatMap(_.schema).fold(spark.read)(s => spark.read.schema(s))
+    var df = reader.parquet(path)
     beginNanos.foreach(b => df = df.filter(F.col(BucketColumn) >= Math.floorDiv(b, g)))
     endNanos.foreach(e => df = df.filter(F.col(BucketColumn) <= Math.floorDiv(e - 1, g)))
     df = df.drop(BucketColumn)

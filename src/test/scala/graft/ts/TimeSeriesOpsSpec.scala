@@ -277,6 +277,30 @@ class TimeSeriesOpsSpec extends SparkTestBase {
     }
   }
 
+  behavior of "ReadBuilder.schema"
+
+  it should "read parquet, csv and jsonl with the given schema instead of inferring one" in {
+    val dir = java.nio.file.Files.createTempDirectory("graft_schema").toString
+    try {
+      val rows = Seq((5L, "1", 7.5), (15L, "2", 8.5)).toDF("time", "w", "x")
+      rows.write.parquet(s"$dir/p")
+      rows.write.option("header", "true").csv(s"$dir/c")
+      rows.write.json(s"$dir/j")
+      val fixed = org.apache.spark.sql.types.StructType.fromDDL(
+        "time BIGINT, w STRING")
+      // inference would give every file column, and `w` as an int in csv
+      Seq(Sources.read(spark).schema(fixed).parquet(s"$dir/p"),
+          Sources.read(spark).schema(fixed).csv(s"$dir/c"),
+          Sources.read(spark).schema(fixed).jsonl(s"$dir/j")).foreach { df =>
+        df.schema.map(f => f.name -> f.dataType.simpleString) shouldBe
+          Seq("time" -> "bigint", "w" -> "string")
+        df.select("w").as[String].collect().sorted shouldBe Array("1", "2")
+      }
+    } finally {
+      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
+    }
+  }
+
   behavior of "writeTimePartitioned / fromTimePartitioned"
 
   it should "round-trip through bucket directories with exact range semantics" in {
@@ -331,7 +355,7 @@ class TimeSeriesOpsSpec extends SparkTestBase {
       // overwrite with a new granularity replaces the store AND its metadata
       Sources.writeTimePartitioned(rows.toDF("time", "v"), s"$dir/t",
         granularity = "20ns", mode = "overwrite")
-      Sources.readStoreMetaNanos(spark, s"$dir/t") shouldBe Some(20L)
+      Sources.readStoreMeta(spark, s"$dir/t").map(_.granularityNanos) shouldBe Some(20L)
     } finally {
       org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
     }
