@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.catalyst.expressions.XXH64
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.graft.{BpeMerges, FlatRows, IntervalClock, LangWords, LmTable, NbTable, WordSet}
 import org.apache.spark.unsafe.types.UTF8String
 
 /**
@@ -11,12 +12,14 @@ import org.apache.spark.unsafe.types.UTF8String
  * generated Java can call `graft.Kernels.minHashSig(...)` directly) —
  * replacing the interpreted higher-order-function folds that dominated the
  * round-2 bench (one boxed lambda dispatch per array element per seed).
- * A stateless method (Catalyst-typed inputs plus `Int` / `Boolean`
- * constants) is reached through Spark's `StaticInvoke`, which finds it by
+ * Every method is reached through Spark's `StaticInvoke`, which finds it by
  * name and argument classes at run time, so renaming one or changing its
- * parameter types breaks only at run time (GraftColumnsSpec runs each);
- * methods taking precomputed state (maps, arrays, a clock) are called from
- * the custom expressions in `GraftExpressions.scala`.
+ * parameter types breaks only at run time (GraftColumnsSpec runs each).
+ * Its arguments are Catalyst-typed inputs, `Int` / `Long` / `Boolean`
+ * constants and, for a kernel with precomputed state (a set, a map, a
+ * model's arrays, a clock), that state as one
+ * `org.apache.spark.sql.graft.KernelState` object; where `KernelLaws`
+ * calls the loop with the state's parts, a one-line overload unpacks it.
  *
  * Hash family: Spark's own XXH64 (`xxhash64` uses seed 42 over the value
  * bytes), so `tokenHash` below is bit-identical to `F.xxhash64(stringCol)`.
@@ -311,8 +314,9 @@ object Kernels {
     * `list_dot_product`). One call replaces a `bands × rowsPerBand` tree of
     * dot-product expressions that fell out of codegen and evaluated ~50×
     * slower row-by-row. */
-  def lshBands(v: ArrayData, planes: Array[Double], dim: Int,
-               rowsPerBand: Int): ArrayData = {
+  def lshBands(v: ArrayData, rows: FlatRows, rowsPerBand: Int): ArrayData = {
+    val planes = rows.values
+    val dim = rows.dim
     val nPlanes = planes.length / dim
     val out = new Array[Long](nPlanes / rowsPerBand)
     var t = 0
@@ -381,8 +385,8 @@ object Kernels {
 
   /** Nearest-centroid cell: argmax cosine, ties to the LOWEST cell id
     * (matches `array_position(sims, array_max(sims)) - 1`, NaN greatest). */
-  def centroidCell(v: ArrayData, cents: Array[Double], dim: Int): Int = {
-    val cos = centroidCosines(v, cents, dim)
+  def centroidCell(v: ArrayData, cents: FlatRows): Int = {
+    val cos = centroidCosines(v, cents.values, cents.dim)
     var best = 0
     var i = 1
     while (i < cos.length) { if (gtNaN(cos(i), cos(best))) best = i; i += 1 }
@@ -391,9 +395,8 @@ object Kernels {
 
   /** Top-`nprobe` cells by cosine, ties to the HIGHER cell id first
     * (matches `reverse(array_sort(struct(cos, cell)))`, NaN greatest). */
-  def centroidProbes(v: ArrayData, cents: Array[Double], dim: Int,
-                     nprobe: Int): ArrayData = {
-    val cos = centroidCosines(v, cents, dim)
+  def centroidProbes(v: ArrayData, cents: FlatRows, nprobe: Int): ArrayData = {
+    val cos = centroidCosines(v, cents.values, cents.dim)
     val k = cos.length
     val taken = new Array[Boolean](k)
     val m = math.min(nprobe, k)
@@ -440,6 +443,14 @@ object Kernels {
       else if (lo > 0 && lo < m) { if (stampBegin) c(lo - 1) else c(lo) }
       else NoBucket
     }
+  }
+
+  /** [[intervalBucket]] against a broadcast clock; null (not `NoBucket`)
+    * when t falls outside every interval. */
+  def intervalBucket(t: Long, clock: IntervalClock, beginIncl: Boolean,
+                     stampBegin: Boolean): java.lang.Long = {
+    val b = intervalBucket(clock.ticks.value, t, beginIncl, stampBegin)
+    if (b == NoBucket) null else java.lang.Long.valueOf(b)
   }
 
   private val FmtPng = org.apache.spark.unsafe.types.UTF8String.fromString("png")
@@ -596,10 +607,11 @@ object Kernels {
    * `greatest(...)` + a when-chain in label order.
    */
   def langIdLabel(u: org.apache.spark.unsafe.types.UTF8String,
-                  wordMask: java.util.HashMap[String, Integer],
-                  labels: Array[org.apache.spark.unsafe.types.UTF8String],
-                  maxWordLen: Int,
-                  cjkIdx: Int): org.apache.spark.unsafe.types.UTF8String = {
+                  langs: LangWords): org.apache.spark.unsafe.types.UTF8String = {
+    val wordMask = langs.wordMask
+    val labels = langs.labels
+    val maxWordLen = langs.maxWordLen
+    val cjkIdx = langs.cjkIdx
     val s = u.toString
     val n = s.length
     val counts = new Array[Int](labels.length)
@@ -671,6 +683,10 @@ object Kernels {
     new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
       Array[Any](nTok, uniq.size(), nPunct, nStop))
   }
+
+  def docTokenStats(u: org.apache.spark.unsafe.types.UTF8String,
+                    stop: WordSet): org.apache.spark.sql.catalyst.InternalRow =
+    docTokenStats(u, stop.set, stop.maxLen)
 
   /**
    * Context-window chunking in one pass: returns an array of structs
@@ -992,6 +1008,10 @@ object Kernels {
     total
   }
 
+  def unigramScore(u: org.apache.spark.unsafe.types.UTF8String, model: LmTable,
+                   defaultLp: Long): Long =
+    unigramScore(u, model.lp, defaultLp, model.maxLen)
+
   /**
    * Bigram language-model score with stupid-backoff, in integer
    * MICRO-NATS: Σ over ADJACENT token pairs of `biLp("w1 w2")` when the
@@ -1039,6 +1059,10 @@ object Kernels {
     total
   }
 
+  def bigramScore(u: org.apache.spark.unsafe.types.UTF8String, bi: LmTable,
+                  uni: LmTable, backoffLp: Long, defaultLp: Long): Long =
+    bigramScore(u, bi.lp, uni.lp, backoffLp, defaultLp, uni.maxLen, bi.maxLen)
+
   /**
    * Heuristic registrable domain of a lowercased host (the zero-config
    * default): last two labels, or last three when the penultimate label
@@ -1051,7 +1075,8 @@ object Kernels {
    * elimination).
    */
   def registrableDomainHeuristic(host: org.apache.spark.unsafe.types.UTF8String,
-                                 labels: java.util.HashSet[String]): org.apache.spark.unsafe.types.UTF8String = {
+                                 secondLevel: WordSet): org.apache.spark.unsafe.types.UTF8String = {
+    val labels = secondLevel.set
     val s = host.toString
     val last = s.lastIndexOf('.')
     if (last < 0) return host // single label
@@ -1077,8 +1102,9 @@ object Kernels {
    * by `maxSuffixLabels` (the deepest listed suffix).
    */
   def registrableDomain(host: org.apache.spark.unsafe.types.UTF8String,
-                        suffixes: java.util.HashSet[String],
+                        suffixSet: WordSet,
                         maxSuffixLabels: Int): org.apache.spark.unsafe.types.UTF8String = {
+    val suffixes = suffixSet.set
     val s = host.toString
     val n = s.length
     // label start offsets, right to left: starts(k) = start of the tail
@@ -1417,9 +1443,9 @@ object Kernels {
     * and the encode is a pure function of (word, merges), so each task
     * thread pays the O(merges × word) walk once per DISTINCT word instead
     * of once per occurrence. Keyed by the merge table's ARRAY IDENTITY
-    * (codegen resolves the merge sides through one stable
-    * addReferenceObj per expression, so identity is a correct and free
-    * key; two logically-equal tables simply don't share entries). Capped:
+    * (a call's merge sides are the arrays of its one `BpeMerges` object
+    * literal, so identity is a correct and free key; two logically-equal
+    * tables simply don't share entries). Capped:
     * beyond [[BpeMemoCap]] distinct words the encode computes uncached —
     * bounded memory, no eviction thrash, identical results. The memo is
     * DROPPED when the thread moves to a new task (task-attempt id
@@ -1448,7 +1474,9 @@ object Kernels {
   }
 
   def bpeEncodeCount(u: org.apache.spark.unsafe.types.UTF8String,
-                     lefts: Array[String], rights: Array[String]): Int = {
+                     merges: BpeMerges): Int = {
+    val lefts = merges.lefts
+    val rights = merges.rights
     val s = u.toString
     val n = s.length
     val memo = {
@@ -1774,4 +1802,8 @@ object Kernels {
     new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
       Array[Any](labels(best), acc(best)))
   }
+
+  def nbScore(u: org.apache.spark.unsafe.types.UTF8String,
+              model: NbTable): org.apache.spark.sql.catalyst.InternalRow =
+    nbScore(u, model.numBuckets, model.labelArr, model.priorArr, model.weights)
 }

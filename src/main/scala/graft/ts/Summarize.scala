@@ -83,7 +83,8 @@ object Summarize {
   /**
    * Map-form of [[addColumnsForCycle]] (≙ CycleColumn's Map variant,
    * reference CycleColumn.scala:32-100): the closure returns a Map from
-   * row to value; rows absent from the map get null.
+   * row to value; rows absent from the map get null. No registry row calls
+   * it; it is kept as part of flint's API surface (SURVEY §2).
    */
   def addColumnsForCycleMap(
       df: DataFrame,

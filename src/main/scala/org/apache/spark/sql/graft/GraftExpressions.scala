@@ -2,12 +2,11 @@ package org.apache.spark.sql.graft
 
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
-import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, ImplicitCastInputTypes, Literal, UnaryExpression}
-import org.apache.spark.sql.catalyst.util.ArrayData
+import org.apache.spark.sql.catalyst.expressions.{Expression, Literal}
 import org.apache.spark.sql.classic.ExpressionUtils
 import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.types.UTF8String
 
 /**
  * Column functions for the hot row-local kernels in `graft.Kernels`
@@ -16,13 +15,13 @@ import org.apache.spark.sql.types._
  * calls the static `graft.Kernels` method once per row, a monomorphic call
  * into a JIT-compiled primitive loop.
  *
- * The rule for adding one:
- *  - a STATELESS kernel — its arguments are the input columns plus `Int` /
- *    `Boolean` constants — goes through Spark's own `StaticInvoke` via
- *    the `kernel` helper below; it needs no class of its own;
- *  - a case class here only when the call needs state built once and shared
- *    by every row: a lookup map or array derived from constructor arguments
- *    (passed to generated code with `addReferenceObj`) or a `Broadcast`.
+ * The one rule for adding one: bind it with the `kernel` helper below, a
+ * Spark `StaticInvoke` over the input columns and literal arguments. State
+ * built once and shared by every row (a lookup set or map, a model's
+ * arrays, a `Broadcast`) is a [[KernelState]] passed as an object literal
+ * (`Literal(state, ObjectType(cls))`): generated code reaches an
+ * object-typed literal through `addReferenceObj`, the way a hand-written
+ * expression would, so no kernel needs an `Expression` class of its own.
  *
  * This file lives under `org.apache.spark.sql` only for `ExpressionUtils`
  * (Expression <-> Column bridging, `private[sql]` in Spark 4).
@@ -42,18 +41,22 @@ object GraftColumns {
    * `graft.Kernels.<name>(inputs..., consts...)` (or the same method of
    * `owner`) as a null-propagating `StaticInvoke`: null when any input is
    * null, otherwise the kernel's result typed `dataType`. `inputs` pairs
-   * each column with the type it is implicitly cast to; `consts` (`Int` /
-   * `Boolean`) become literals, inlined into the generated call. The kernel
-   * method is resolved by the argument classes when the expression is first
-   * evaluated, so a constant of the wrong type fails only at run time
-   * (GraftColumnsSpec runs every kernel). `returnNullable` is for kernels
-   * that may return null themselves.
+   * each column with the type it is implicitly cast to; `consts` become
+   * literals: an `Int` / `Long` / `Boolean` is inlined into the generated
+   * call, a [[KernelState]] is an object literal. The kernel method is
+   * resolved by the argument classes when the expression is first
+   * evaluated, so a constant or state of the wrong type fails only at run
+   * time (GraftColumnsSpec runs every kernel). `returnNullable` is for
+   * kernels that may return null themselves.
    */
   private def kernel(name: String, dataType: DataType,
                      inputs: Seq[(Column, AbstractDataType)], consts: Seq[Any] = Nil,
                      returnNullable: Boolean = false,
                      owner: Class[_] = graft.Kernels.getClass): Column = {
-    val lits = consts.map(Literal(_))
+    val lits = consts.map {
+      case state: KernelState => Literal(state, ObjectType(state.getClass))
+      case c => Literal(c)
+    }
     col(StaticInvoke(owner, dataType, name,
       inputs.map(i => ex(i._1)) ++ lits, inputs.map(_._2) ++ lits.map(_.dataType),
       returnNullable = returnNullable))
@@ -108,7 +111,8 @@ object GraftColumns {
   /** Interval bucket stamp for a long time column; null when outside the clock. */
   def intervalBucket(time: Column, clock: Broadcast[Array[Long]],
                      beginInclusive: Boolean, stampBegin: Boolean): Column =
-    col(IntervalBucket(ex(time), clock, beginInclusive, stampBegin))
+    kernel("intervalBucket", LongType, Seq(time -> LongType),
+      Seq(IntervalClock(clock), beginInclusive, stampBegin), returnNullable = true)
 
   /** Weighted OLS fit struct of `k` regressors plus intercept from the
     * Gram sums `sums` and row count `n`; see `graft.ts.agg.OLSAggregate.fit`
@@ -154,7 +158,8 @@ object GraftColumns {
     * n_stop)` over single-space-tokenized text; `n_stop` counts hits in
     * `stopWords`. */
   def docTokenStats(text: Column, stopWords: Seq[String]): Column =
-    col(DocTokenStats(ex(text), stopWords))
+    kernel("docTokenStats", DocTokenStats.schema, Seq(text -> StringType),
+      Seq(WordSet(stopWords)))
 
   /** BPE-pretokenizer segment count (TextStats.BpeTokenPattern) as one
     * char-class transition loop — same count as the regexp form, linear. */
@@ -164,35 +169,46 @@ object GraftColumns {
   /** Stopword-vote language id over `langWords` (label -> stopword list,
     * label order = tie preference; `cjkLabel` also scores CJK chars). */
   def stopwordLangId(text: Column, langWords: Seq[(String, Seq[String])],
-                     cjkLabel: Option[String]): Column =
-    col(StopwordLangId(ex(text), langWords, cjkLabel))
+                     cjkLabel: Option[String]): Column = {
+    require(langWords.nonEmpty && langWords.size + cjkLabel.size <= 31,
+      "need 1..31 languages")
+    kernel("langIdLabel", StringType, Seq(text -> StringType),
+      Seq(LangWords(langWords, cjkLabel)))
+  }
 
   /** Heuristic registrable domain (single kernel call; host child
     * evaluated once per row). */
   def registrableDomainHeuristic(host: Column, labels: Seq[String]): Column =
-    col(RegistrableDomainHeuristic(ex(host), labels))
+    kernel("registrableDomainHeuristic", StringType, Seq(host -> StringType),
+      Seq(WordSet(labels)))
 
   /** BPE-encoded symbol count under a rank-ordered merge list. */
   def bpeEncodeCount(text: Column, merges: Seq[(String, String)]): Column =
-    col(BpeEncodeCount(ex(text), merges))
+    kernel("bpeEncodeCount", IntegerType, Seq(text -> StringType), Seq(BpeMerges(merges)))
 
   /** Integer micro-nat unigram LM score against a (token, quantized
     * logprob) model; OOV tokens take `defaultLp`. */
   def unigramScore(text: Column, model: Seq[(String, Long)],
                    defaultLp: Long): Column =
-    col(UnigramScore(ex(text), model, defaultLp))
+    kernel("unigramScore", LongType, Seq(text -> StringType),
+      Seq(LmTable(model), defaultLp))
 
   /** Integer micro-nat bigram LM score with stupid-backoff to the
     * unigram model; OOV w2 takes `defaultLp`. */
   def bigramScore(text: Column, biModel: Seq[(String, Long)],
                   uniModel: Seq[(String, Long)], backoffLp: Long,
                   defaultLp: Long): Column =
-    col(BigramScore(ex(text), biModel, uniModel, backoffLp, defaultLp))
+    kernel("bigramScore", LongType, Seq(text -> StringType),
+      Seq(LmTable(biModel), LmTable(uniModel), backoffLp, defaultLp))
 
   /** Registrable domain under a caller-supplied public-suffix set
     * (longest listed label-boundary tail + 1 label). */
-  def registrableDomainPsl(host: Column, suffixes: Seq[String]): Column =
-    col(RegistrableDomainPsl(ex(host), suffixes))
+  def registrableDomainPsl(host: Column, suffixes: Seq[String]): Column = {
+    require(suffixes.nonEmpty, "suffix set must be non-empty")
+    kernel("registrableDomain", StringType, Seq(host -> StringType),
+      Seq(WordSet(suffixes.map(_.toLowerCase(java.util.Locale.ROOT))),
+        suffixes.map(_.count(_ == '.') + 1).max))
+  }
 
   /** Fused PII scrub struct `(redacted, n_emails, n_phones, n_ips)`: the
     * staged email -> phone -> IPv4 redaction and the three per-stage match
@@ -258,10 +274,20 @@ object GraftColumns {
     kernel("cmsTokenCoords", IntArray, Seq(token -> StringType), Seq(depth, width))
   }
 
-  /** Hashed Naive Bayes label+score (see [[NbScore]]). */
+  /** Hashed Naive Bayes label+score struct `(pred, lp_micro)`: the argmax
+    * label (ties to the earliest; `labels` sorted) and its integer
+    * micro-nat log-posterior under the Laplace-smoothed hashed-feature
+    * model (see Kernels.nbScore). */
   def nbScore(text: Column, numBuckets: Int, labels: Seq[String],
-              priors: Seq[Long], weights: Array[Long]): Column =
-    col(NbScore(ex(text), numBuckets, labels, priors, weights))
+              priors: Seq[Long], weights: Array[Long]): Column = {
+    require(labels.nonEmpty && labels == labels.sorted,
+      "labels must be non-empty and sorted (the tie-break order)")
+    require(priors.length == labels.length, "one prior per label")
+    require(weights.length == labels.length * numBuckets,
+      "weights must be |labels| x numBuckets")
+    kernel("nbScore", NbScore.schema, Seq(text -> StringType),
+      Seq(NbTable(numBuckets, labels, priors, weights)), returnNullable = true)
+  }
 
   /** Line/paragraph repetition counters: for each delimiter class (lines on
     * `\n`, paragraphs on `\n\n`), counts and code-point char sums of
@@ -300,20 +326,26 @@ object GraftColumns {
     * or a null element. */
   def cosineSim(a: Column, b: Column): Column =
     kernel("cosineD", DoubleType, Seq(a -> Doubles, b -> Doubles), returnNullable = true)
-  /** Nearest-centroid cell id (ties → lowest). Centroids ride the closure. */
+
+  /** Nearest-centroid cell id (ties → lowest). */
   def centroidCell(vec: Column, centroids: Array[Double], dim: Int): Column =
-    col(CentroidCell(ex(vec), centroids, dim))
+    kernel("centroidCell", IntegerType, Seq(vec -> Doubles), Seq(FlatRows(centroids, dim)))
 
   /** Top-`nprobe` centroid cells by cosine (ties → highest first). */
   def centroidProbes(vec: Column, centroids: Array[Double], dim: Int,
                      nprobe: Int): Column =
-    col(CentroidProbes(ex(vec), centroids, dim, nprobe))
+    kernel("centroidProbes", IntArray, Seq(vec -> Doubles),
+      Seq(FlatRows(centroids, dim), nprobe))
 
   /** All sign-LSH band values of a vector (flat row-major ±1 planes),
     * `planes.length / dim / rowsPerBand` longs in one kernel call. */
   def lshBands(vec: Column, planes: Array[Double], dim: Int,
-               rowsPerBand: Int): Column =
-    col(LshBands(ex(vec), planes, dim, rowsPerBand))
+               rowsPerBand: Int): Column = {
+    require(planes.length % dim == 0 && (planes.length / dim) % rowsPerBand == 0,
+      "planes must hold a whole number of bands of rowsPerBand planes")
+    kernel("lshBands", LongArray, Seq(vec -> Doubles),
+      Seq(FlatRows(planes, dim), rowsPerBand))
+  }
 
   /**
    * Narrow partition-count reduction at the InternalRow layer: applies the
@@ -331,7 +363,7 @@ object GraftColumns {
   }
 }
 
-// Result schemas of the struct-valued stateless kernels above.
+// Result schemas of the struct-valued kernels above.
 object NGramHashLens {
   val elementSchema: StructType = StructType(Seq(
     StructField("h", LongType, nullable = false),
@@ -399,325 +431,12 @@ object DupUnitStats {
     StructField("dup_para_chars", LongType, nullable = false)))
 }
 
-case class CentroidCell(child: Expression, centroids: Array[Double], dim: Int)
-    extends UnaryExpression with ImplicitCastInputTypes {
-  override def inputTypes: Seq[AbstractDataType] = Seq(ArrayType(DoubleType))
-  override def dataType: DataType = IntegerType
-  override def nullIntolerant: Boolean = true
-  override protected def nullSafeEval(input: Any): Any =
-    graft.Kernels.centroidCell(input.asInstanceOf[ArrayData], centroids, dim)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val cents = ctx.addReferenceObj("centroids", centroids, "double[]")
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.Kernels.centroidCell($c, $cents, $dim);")
-  }
-  override protected def withNewChildInternal(newChild: Expression): CentroidCell =
-    copy(child = newChild)
-}
-
-case class CentroidProbes(child: Expression, centroids: Array[Double],
-                          dim: Int, nprobe: Int)
-    extends UnaryExpression with ImplicitCastInputTypes {
-  override def inputTypes: Seq[AbstractDataType] = Seq(ArrayType(DoubleType))
-  override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
-  override def nullIntolerant: Boolean = true
-  override protected def nullSafeEval(input: Any): Any =
-    graft.Kernels.centroidProbes(input.asInstanceOf[ArrayData], centroids, dim, nprobe)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val cents = ctx.addReferenceObj("centroids", centroids, "double[]")
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.Kernels.centroidProbes($c, $cents, $dim, $nprobe);")
-  }
-  override protected def withNewChildInternal(newChild: Expression): CentroidProbes =
-    copy(child = newChild)
-}
-
-case class LshBands(child: Expression, planes: Array[Double],
-                    dim: Int, rowsPerBand: Int)
-    extends UnaryExpression with ImplicitCastInputTypes {
-  require(planes.length % dim == 0 && (planes.length / dim) % rowsPerBand == 0,
-    "planes must hold a whole number of bands of rowsPerBand planes")
-  override def inputTypes: Seq[AbstractDataType] = Seq(ArrayType(DoubleType))
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullIntolerant: Boolean = true
-  override protected def nullSafeEval(input: Any): Any =
-    graft.Kernels.lshBands(input.asInstanceOf[ArrayData], planes, dim, rowsPerBand)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ps = ctx.addReferenceObj("planes", planes, "double[]")
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.Kernels.lshBands($c, $ps, $dim, $rowsPerBand);")
-  }
-  override protected def withNewChildInternal(newChild: Expression): LshBands =
-    copy(child = newChild)
-}
-
-/** Single-pass per-document token statistics (graft.Kernels.docTokenStats):
-  * token / distinct-token / punctuation-char / stopword-hit counts in one
-  * scan, replacing up to four split-array pipelines. The downstream double
-  * arithmetic (ratios, quality score) stays in ordinary Column expressions
-  * over these ints, so IEEE results are bit-identical to the column forms
-  * the DuckDB oracle mirrors (parity pinned in TextOpsSpec). */
-case class DocTokenStats(child: Expression, stopWords: Seq[String])
-    extends UnaryExpression with ExpectsInputTypes {
-  override def inputTypes: Seq[AbstractDataType] = Seq(StringType)
-  override def dataType: DataType = DocTokenStats.schema
-  override def nullIntolerant: Boolean = true
-  @transient private lazy val stopSet: java.util.HashSet[String] = {
-    val s = new java.util.HashSet[String]()
-    stopWords.foreach(s.add)
-    s
-  }
-  @transient private lazy val maxStopLen: Int =
-    if (stopWords.isEmpty) 0 else stopWords.map(_.length).max
-  override protected def nullSafeEval(input: Any): Any =
-    graft.Kernels.docTokenStats(
-      input.asInstanceOf[org.apache.spark.unsafe.types.UTF8String], stopSet, maxStopLen)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val setRef = ctx.addReferenceObj("stopSet", stopSet, "java.util.HashSet")
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.Kernels.docTokenStats($c, $setRef, $maxStopLen);")
-  }
-  override protected def withNewChildInternal(newChild: Expression): DocTokenStats =
-    copy(child = newChild)
-}
-
 object DocTokenStats {
   val schema: StructType = StructType(Seq(
     StructField("n_tokens", IntegerType, nullable = false),
     StructField("n_unique", IntegerType, nullable = false),
     StructField("n_punct", IntegerType, nullable = false),
     StructField("n_stop", IntegerType, nullable = false)))
-}
-
-/**
- * Stopword-vote language ID in one kernel pass (graft.Kernels.langIdLabel):
- * per-language stopword hit counts via ONE word -> language-bitmask map
- * lookup per token (a word on several lists votes for all of them, like the
- * per-language `size(filter(split(text,' '), isin(...)))` columns this
- * replaces), CJK chars counted for `cjkLabel` in the same scan, ties to the
- * earliest label in `langWords` order (+ cjk last) — the semantics of
- * `greatest` + a when-chain in that order.
- */
-case class StopwordLangId(child: Expression,
-                          langWords: Seq[(String, Seq[String])],
-                          cjkLabel: Option[String])
-    extends UnaryExpression with ExpectsInputTypes {
-  require(langWords.nonEmpty && langWords.size + cjkLabel.size <= 31,
-    "need 1..31 languages")
-  override def inputTypes: Seq[AbstractDataType] = Seq(StringType)
-  override def dataType: DataType = StringType
-  override def nullIntolerant: Boolean = true
-
-  @transient private lazy val labels: Array[org.apache.spark.unsafe.types.UTF8String] =
-    (langWords.map(_._1) ++ cjkLabel).map(
-      org.apache.spark.unsafe.types.UTF8String.fromString).toArray
-  @transient private lazy val wordMask: java.util.HashMap[String, Integer] = {
-    val m = new java.util.HashMap[String, Integer]()
-    for (((_, words), i) <- langWords.zipWithIndex; w <- words) {
-      val prev = m.get(w)
-      m.put(w, Integer.valueOf((if (prev == null) 0 else prev.intValue()) | (1 << i)))
-    }
-    m
-  }
-  @transient private lazy val maxWordLen: Int =
-    langWords.flatMap(_._2).map(_.length).max
-  private def cjkIdx: Int = if (cjkLabel.isDefined) langWords.size else -1
-
-  override protected def nullSafeEval(input: Any): Any =
-    graft.Kernels.langIdLabel(
-      input.asInstanceOf[org.apache.spark.unsafe.types.UTF8String],
-      wordMask, labels, maxWordLen, cjkIdx)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val mapRef = ctx.addReferenceObj("wordMask", wordMask, "java.util.HashMap")
-    val labelsRef = ctx.addReferenceObj("labels", labels,
-      "org.apache.spark.unsafe.types.UTF8String[]")
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.Kernels.langIdLabel($c, $mapRef, $labelsRef, $maxWordLen, $cjkIdx);")
-  }
-  override protected def withNewChildInternal(newChild: Expression): StopwordLangId =
-    copy(child = newChild)
-}
-
-/** BPE-encoded symbol count under a rank-ordered merge list (see
-  * graft.Kernels.bpeEncodeCount); the merges ride the closure like the
-  * LM models below. */
-case class BpeEncodeCount(child: Expression, merges: Seq[(String, String)])
-    extends UnaryExpression with ExpectsInputTypes {
-  override def inputTypes: Seq[AbstractDataType] = Seq(StringType)
-  override def dataType: DataType = IntegerType
-  override def nullIntolerant: Boolean = true
-  @transient private lazy val lefts: Array[String] = merges.map(_._1).toArray
-  @transient private lazy val rights: Array[String] = merges.map(_._2).toArray
-  override protected def nullSafeEval(input: Any): Any =
-    graft.Kernels.bpeEncodeCount(
-      input.asInstanceOf[org.apache.spark.unsafe.types.UTF8String],
-      lefts, rights)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val lRef = ctx.addReferenceObj("bpeLefts", lefts, "java.lang.String[]")
-    val rRef = ctx.addReferenceObj("bpeRights", rights, "java.lang.String[]")
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.Kernels.bpeEncodeCount($c, $lRef, $rRef);")
-  }
-  override protected def withNewChildInternal(newChild: Expression): BpeEncodeCount =
-    copy(child = newChild)
-}
-
-/** Integer micro-nat unigram LM score (graft.Kernels.unigramScore): one
-  * token walk per row against a hashed (token -> quantized logprob)
-  * model; OOV tokens take `defaultLp`. */
-case class UnigramScore(child: Expression, model: Seq[(String, Long)],
-                        defaultLp: Long)
-    extends UnaryExpression with ExpectsInputTypes {
-  override def inputTypes: Seq[AbstractDataType] = Seq(StringType)
-  override def dataType: DataType = LongType
-  override def nullIntolerant: Boolean = true
-  @transient private lazy val lpMap: java.util.HashMap[String, java.lang.Long] = {
-    val m = new java.util.HashMap[String, java.lang.Long]()
-    model.foreach { case (t, v) => m.put(t, java.lang.Long.valueOf(v)) }
-    m
-  }
-  @transient private lazy val maxTokenLen: Int =
-    if (model.isEmpty) 0 else model.map(_._1.length).max
-  override protected def nullSafeEval(input: Any): Any =
-    graft.Kernels.unigramScore(
-      input.asInstanceOf[org.apache.spark.unsafe.types.UTF8String],
-      lpMap, defaultLp, maxTokenLen)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val mapRef = ctx.addReferenceObj("lpMap", lpMap, "java.util.HashMap")
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.Kernels.unigramScore($c, $mapRef, ${defaultLp}L, $maxTokenLen);")
-  }
-  override protected def withNewChildInternal(newChild: Expression): UnigramScore =
-    copy(child = newChild)
-}
-
-/** Integer micro-nat bigram LM score with stupid-backoff
-  * (graft.Kernels.bigramScore): adjacent-pair lookups against a hashed
-  * ("w1 w2" -> quantized conditional logprob) model, backing off to
-  * `backoffLp` + the unigram model (or `defaultLp` for OOV). */
-case class BigramScore(child: Expression, biModel: Seq[(String, Long)],
-                       uniModel: Seq[(String, Long)],
-                       backoffLp: Long, defaultLp: Long)
-    extends UnaryExpression with ExpectsInputTypes {
-  override def inputTypes: Seq[AbstractDataType] = Seq(StringType)
-  override def dataType: DataType = LongType
-  override def nullIntolerant: Boolean = true
-  @transient private lazy val biMap: java.util.HashMap[String, java.lang.Long] = {
-    val m = new java.util.HashMap[String, java.lang.Long]()
-    biModel.foreach { case (t, v) => m.put(t, java.lang.Long.valueOf(v)) }
-    m
-  }
-  @transient private lazy val uniMap: java.util.HashMap[String, java.lang.Long] = {
-    val m = new java.util.HashMap[String, java.lang.Long]()
-    uniModel.foreach { case (t, v) => m.put(t, java.lang.Long.valueOf(v)) }
-    m
-  }
-  @transient private lazy val maxUniLen: Int =
-    if (uniModel.isEmpty) 0 else uniModel.map(_._1.length).max
-  @transient private lazy val maxBiLen: Int =
-    if (biModel.isEmpty) 0 else biModel.map(_._1.length).max
-  override protected def nullSafeEval(input: Any): Any =
-    graft.Kernels.bigramScore(
-      input.asInstanceOf[org.apache.spark.unsafe.types.UTF8String],
-      biMap, uniMap, backoffLp, defaultLp, maxUniLen, maxBiLen)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val biRef = ctx.addReferenceObj("biMap", biMap, "java.util.HashMap")
-    val uniRef = ctx.addReferenceObj("uniMap", uniMap, "java.util.HashMap")
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.Kernels.bigramScore($c, $biRef, $uniRef, " +
-        s"${backoffLp}L, ${defaultLp}L, $maxUniLen, $maxBiLen);")
-  }
-  override protected def withNewChildInternal(newChild: Expression): BigramScore =
-    copy(child = newChild)
-}
-
-/** Heuristic registrable domain (last 2 labels, or 3 under a registry
-  * second-level label) — one kernel call per row, so the host child is
-  * evaluated once (graft.Kernels.registrableDomainHeuristic). */
-case class RegistrableDomainHeuristic(child: Expression, labels: Seq[String])
-    extends UnaryExpression with ExpectsInputTypes {
-  override def inputTypes: Seq[AbstractDataType] = Seq(StringType)
-  override def dataType: DataType = StringType
-  override def nullIntolerant: Boolean = true
-  @transient private lazy val labelSet: java.util.HashSet[String] = {
-    val s = new java.util.HashSet[String]()
-    labels.foreach(s.add)
-    s
-  }
-  override protected def nullSafeEval(input: Any): Any =
-    graft.Kernels.registrableDomainHeuristic(
-      input.asInstanceOf[org.apache.spark.unsafe.types.UTF8String], labelSet)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val setRef = ctx.addReferenceObj("labelSet", labelSet, "java.util.HashSet")
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.Kernels.registrableDomainHeuristic($c, $setRef);")
-  }
-  override protected def withNewChildInternal(newChild: Expression): RegistrableDomainHeuristic =
-    copy(child = newChild)
-}
-
-/** Registrable domain (eTLD+1) under a caller-supplied public-suffix set —
-  * one right-to-left label walk per row against a hashed suffix set
-  * (graft.Kernels.registrableDomain); lookups bounded by the deepest
-  * listed suffix. */
-case class RegistrableDomainPsl(child: Expression, suffixes: Seq[String])
-    extends UnaryExpression with ExpectsInputTypes {
-  require(suffixes.nonEmpty, "suffix set must be non-empty")
-  override def inputTypes: Seq[AbstractDataType] = Seq(StringType)
-  override def dataType: DataType = StringType
-  override def nullIntolerant: Boolean = true
-  @transient private lazy val sufSet: java.util.HashSet[String] = {
-    val s = new java.util.HashSet[String]()
-    suffixes.foreach(x => s.add(x.toLowerCase(java.util.Locale.ROOT)))
-    s
-  }
-  @transient private lazy val maxLabels: Int =
-    suffixes.map(_.count(_ == '.') + 1).max
-  override protected def nullSafeEval(input: Any): Any =
-    graft.Kernels.registrableDomain(
-      input.asInstanceOf[org.apache.spark.unsafe.types.UTF8String], sufSet, maxLabels)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val setRef = ctx.addReferenceObj("sufSet", sufSet, "java.util.HashSet")
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.Kernels.registrableDomain($c, $setRef, $maxLabels);")
-  }
-  override protected def withNewChildInternal(newChild: Expression): RegistrableDomainPsl =
-    copy(child = newChild)
-}
-
-/** Hashed multinomial Naive Bayes scorer (graft.Kernels.nbScore): argmax
-  * label + its integer micro-nat log-posterior under a Laplace-smoothed
-  * hashed-feature model. The (|labels| × numBuckets) weight matrix and
-  * priors ride the closure as model parameters, like the LM scorers. */
-case class NbScore(child: Expression, numBuckets: Int, labels: Seq[String],
-                   priors: Seq[Long], weights: Array[Long])
-    extends UnaryExpression with ExpectsInputTypes {
-  require(labels.nonEmpty && labels == labels.sorted,
-    "labels must be non-empty and sorted (the tie-break order)")
-  require(priors.length == labels.length, "one prior per label")
-  require(weights.length == labels.length * numBuckets,
-    "weights must be |labels| x numBuckets")
-  override def inputTypes: Seq[AbstractDataType] = Seq(StringType)
-  override def dataType: DataType = NbScore.schema
-  override def nullable: Boolean = true
-  override def nullIntolerant: Boolean = true
-  @transient private lazy val labelArr: Array[org.apache.spark.unsafe.types.UTF8String] =
-    labels.map(org.apache.spark.unsafe.types.UTF8String.fromString).toArray
-  @transient private lazy val priorArr: Array[Long] = priors.toArray
-  override protected def nullSafeEval(input: Any): Any =
-    graft.Kernels.nbScore(
-      input.asInstanceOf[org.apache.spark.unsafe.types.UTF8String],
-      numBuckets, labelArr, priorArr, weights)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val lRef = ctx.addReferenceObj("nbLabels", labelArr,
-      "org.apache.spark.unsafe.types.UTF8String[]")
-    val pRef = ctx.addReferenceObj("nbPriors", priorArr, "long[]")
-    val wRef = ctx.addReferenceObj("nbWeights", weights, "long[]")
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.Kernels.nbScore($c, $numBuckets, $lRef, $pRef, $wRef);")
-  }
-  override protected def withNewChildInternal(newChild: Expression): NbScore =
-    copy(child = newChild)
 }
 
 object NbScore {
@@ -727,35 +446,90 @@ object NbScore {
 }
 
 /**
- * Stamps each time with its interval's begin/end tick per the
- * inclusion/rounding matrix; null for rows outside every interval. The
- * clock rides a `Broadcast` (interval metadata, one copy per executor) and
- * the search is an O(log m) branch-free-ish binary search in generated code.
+ * State a kernel call needs, built once on the driver when its column is
+ * made and passed to the kernel as an object literal. Two states are equal
+ * when their fields are, arrays compared by contents, so two calls built
+ * separately over the same data stay one common subexpression (the
+ * `TextStats` counts all read one `docTokenStats` call). A plan prints a
+ * state's `toString`: its size, never its contents.
  */
-case class IntervalBucket(child: Expression, clock: Broadcast[Array[Long]],
-                          beginInclusive: Boolean, stampBegin: Boolean)
-    extends UnaryExpression with ImplicitCastInputTypes {
-  // ImplicitCastInputTypes (not just ExpectsInputTypes): an int/short time
-  // column gets an implicit cast inserted, like the ScalaUDF path this
-  // expression replaced, instead of failing analysis.
-  override def inputTypes: Seq[AbstractDataType] = Seq(LongType)
-  override def dataType: DataType = LongType
-  override def nullable: Boolean = true
-  override protected def nullSafeEval(input: Any): Any = {
-    val r = graft.Kernels.intervalBucket(
-      clock.value, input.asInstanceOf[Long], beginInclusive, stampBegin)
-    if (r == graft.Kernels.NoBucket) null else r
+abstract class KernelState extends Product with Serializable {
+  private def fields: Seq[Any] = productIterator.map {
+    case a: Array[_] => scala.collection.immutable.ArraySeq.unsafeWrapArray(a)
+    case v => v
+  }.toSeq
+  override def equals(o: Any): Boolean = o match {
+    case s: KernelState => s.getClass == getClass && s.fields == fields
+    case _ => false
   }
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val bcName = ctx.addReferenceObj("clockBc", clock, classOf[Broadcast[_]].getName)
-    val b = ctx.freshName("graftBucket")
-    nullSafeCodeGen(ctx, ev, c => s"""
-      long $b = graft.Kernels.intervalBucket(
-        (long[]) $bcName.value(), $c, $beginInclusive, $stampBegin);
-      if ($b == ${graft.Kernels.NoBucket}L) { ${ev.isNull} = true; }
-      else { ${ev.value} = $b; }
-    """)
+  override def hashCode: Int = fields.hashCode
+}
+
+/** A word set, and its longest word's length. */
+final case class WordSet(words: Seq[String]) extends KernelState {
+  val set: java.util.HashSet[String] = {
+    val s = new java.util.HashSet[String]()
+    words.foreach(s.add)
+    s
   }
-  override protected def withNewChildInternal(newChild: Expression): IntervalBucket =
-    copy(child = newChild)
+  val maxLen: Int = words.map(_.length).maxOption.getOrElse(0)
+  override def toString: String = s"words(${words.size})"
+}
+
+/** Per-language stopword lists (label -> words, in tie order) and an
+  * optional label scored by CJK chars, as `Kernels.langIdLabel` reads
+  * them: one word -> language-bitmask map. */
+final case class LangWords(langWords: Seq[(String, Seq[String])],
+                           cjkLabel: Option[String]) extends KernelState {
+  val labels: Array[UTF8String] =
+    (langWords.map(_._1) ++ cjkLabel).map(UTF8String.fromString).toArray
+  val wordMask: java.util.HashMap[String, Integer] = {
+    val m = new java.util.HashMap[String, Integer]()
+    for (((_, words), i) <- langWords.zipWithIndex; w <- words) {
+      val prev = m.get(w)
+      m.put(w, Integer.valueOf((if (prev == null) 0 else prev.intValue()) | (1 << i)))
+    }
+    m
+  }
+  val maxWordLen: Int = langWords.flatMap(_._2).map(_.length).maxOption.getOrElse(0)
+  val cjkIdx: Int = if (cjkLabel.isDefined) langWords.size else -1
+  override def toString: String = s"langwords(${labels.length} labels)"
+}
+
+/** A rank-ordered BPE merge list, split into its left and right sides. */
+final case class BpeMerges(merges: Seq[(String, String)]) extends KernelState {
+  val lefts: Array[String] = merges.map(_._1).toArray
+  val rights: Array[String] = merges.map(_._2).toArray
+  override def toString: String = s"merges(${merges.size})"
+}
+
+/** A (token, quantized logprob) language model, hashed, and its longest
+  * key's length. */
+final case class LmTable(entries: Seq[(String, Long)]) extends KernelState {
+  val lp: java.util.HashMap[String, java.lang.Long] = {
+    val m = new java.util.HashMap[String, java.lang.Long]()
+    entries.foreach { case (t, v) => m.put(t, java.lang.Long.valueOf(v)) }
+    m
+  }
+  val maxLen: Int = entries.map(_._1.length).maxOption.getOrElse(0)
+  override def toString: String = s"lm(${entries.size} entries)"
+}
+
+/** A hashed Naive Bayes model: sorted labels, one prior per label and the
+  * row-major |labels| x numBuckets weight matrix. */
+final case class NbTable(numBuckets: Int, labels: Seq[String], priors: Seq[Long],
+                         weights: Array[Long]) extends KernelState {
+  val labelArr: Array[UTF8String] = labels.map(UTF8String.fromString).toArray
+  val priorArr: Array[Long] = priors.toArray
+  override def toString: String = s"nb(${labels.size}x$numBuckets)"
+}
+
+/** Row-major rows of `dim` doubles each (centroids, LSH planes). */
+final case class FlatRows(values: Array[Double], dim: Int) extends KernelState {
+  override def toString: String = s"rows(${values.length} values, dim $dim)"
+}
+
+/** A broadcast interval clock (strictly increasing ticks). */
+final case class IntervalClock(ticks: Broadcast[Array[Long]]) extends KernelState {
+  override def toString: String = "clock"
 }

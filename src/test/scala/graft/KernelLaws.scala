@@ -6,8 +6,8 @@ import org.scalacheck.{Gen, Properties}
 import org.scalacheck.Prop.forAll
 
 /**
- * ScalaCheck laws for the row-local kernels behind the custom Catalyst
- * expressions — pure JVM, no Spark session (≙ the reference's
+ * ScalaCheck laws for the row-local kernels behind `GraftColumns` — pure
+ * JVM, no Spark session (≙ the reference's
  * algebraic-law harness, SummarizerSuite.scala:110-357, applied to our
  * kernel layer).
  */

@@ -500,20 +500,25 @@ class PlanShapeSpec extends SparkTestBase {
       graft.llm.Dedup.minHashSignature(F.col("text"), 8, 2).as("sig"),
       graft.llm.Pii.redact(F.col("text")).as("redacted"),
       graft.llm.Pii.scrub(F.col("text")).as("scrub"),
-      graft.llm.TextStats.langId(F.col("text")).as("lang"))
+      graft.llm.TextStats.langId(F.col("text")).as("lang"),
+      graft.llm.TextStats.bigramScore(F.col("text"), Seq("w1 w2" -> -1L),
+        Seq("w1" -> -2L), -3L, -4L).as("lp"),
+      org.apache.spark.sql.graft.GraftColumns.intervalBucket(F.col("id"),
+        spark.sparkContext.broadcast(Array(0L, 5L, 10L)), beginInclusive = true,
+        stampBegin = false).as("bucket"))
     exchanges(scan) shouldBe 0
     val flags = graft.llm.TextStats.gopherFilter(docs, "text")
     exchanges(flags) shouldBe 0
     // every projection that calls a graft.Kernels method (a StaticInvoke,
-    // or one of the stateful expression classes) runs inside a whole-stage
-    // codegen stage: a kernel that silently lost codegen (a CodegenFallback
-    // node, a too-wide projection) fails here
+    // with or without an object-literal state argument) runs inside a
+    // whole-stage codegen stage: a kernel that silently lost codegen (a
+    // CodegenFallback node, a too-wide projection) fails here
     Seq(scan, flags).foreach { df =>
       val p = plan(df)
       val kernelProjects = p.collect {
         case pr: ProjectExec if pr.expressions.exists(_.exists {
           case si: StaticInvoke => si.objectName == "graft.Kernels"
-          case e => e.getClass.getPackage.getName == "org.apache.spark.sql.graft"
+          case _ => false
         }) => pr
       }
       // a stage ends at its InputAdapters; what lies below runs outside it
@@ -528,7 +533,8 @@ class PlanShapeSpec extends SparkTestBase {
       }
     }
     plan(scan).toString should (include("graft.Kernels.minHashSig") and
-      include("graft.Kernels.piiScrub") and include("stopwordlangid"))
+      include("graft.Kernels.piiScrub") and include("graft.Kernels.langIdLabel") and
+      include("graft.Kernels.bigramScore") and include("graft.Kernels.intervalBucket"))
   }
 
   it should "plan incremental dedup without windows, sorts, or cartesians" in {
